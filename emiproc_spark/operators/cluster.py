@@ -5,14 +5,25 @@ LSH / Hamming / embedding near-dup operators emit candidate *pairs*
 whole cluster collapses to one representative instead of greedy
 pair-at-a-time drops — needs connected components over the pair graph.
 
-Spark-first design: distributed min-label propagation with pointer
-jumping (path compression), the DataFrame rendering of the map-reduce
-CC family (Kiveris et al., "Connected Components in MapReduce and
-Beyond", hash-to-min).  Each round is two shuffles (neighbor-min +
-pointer jump) and converges in O(log n) rounds on typical dup graphs;
-``localCheckpoint`` truncates lineage so the iterative plan stays flat.
-The loop is driver-side but each round is a fully distributed job —
-same shape as IVF's Lloyd refine (similarity.py).
+One round algorithm, two executions of it: min-label propagation over
+the closed neighbourhood plus pointer jumping (path compression), the
+map-reduce CC family of Kiveris et al. ("Connected Components in
+MapReduce and Beyond", hash-to-min), converging in O(log n) rounds on
+typical dup graphs.
+
+- Small graphs (at most ``spark.sql.autoBroadcastJoinThreshold // 16``
+  edges, 16 bytes per int64 edge — the size the engine already lets
+  through the driver for a broadcast): the guarded edge list is
+  fetched in ONE bounded collect and the rounds run in numpy on the
+  driver.  Dup graphs are usually tiny next to their corpus, and the
+  distributed loop would spend a driver job per round on them.
+- Larger graphs (or a threshold <= 0): every round is a fully
+  distributed job — two shuffles (neighbor-min + pointer jump) with
+  ``localCheckpoint`` truncating lineage so the iterative plan stays
+  flat; same shape as IVF's Lloyd refine (similarity.py).
+
+Both run the same rounds, so labels, round counts and the
+non-convergence error agree.
 
 Beyond-parity: the reference keeps dedup pairwise; cluster collapse is
 a training-data-pipeline need, not an emiproc one.
@@ -20,7 +31,50 @@ a training-data-pipeline need, not an emiproc one.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+
+
+def _not_converged(max_iter: int) -> RuntimeError:
+    # silent partial convergence would leave non-minimal component
+    # ids — dedup_keep_representative would then retain several
+    # "representatives" per duplicate cluster with no way to notice
+    return RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} "
+        "pointer-jumping rounds (reach doubles per round, so this "
+        "graph's diameter exceeds ~2^max_iter) — raise max_iter"
+    )
+
+
+def _label_on_driver(
+    src: np.ndarray, dst: np.ndarray, max_iter: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The distributed rounds of :func:`connected_components`, run in
+    numpy: returns ``(node, component)`` arrays.  Nodes are renamed to
+    their dense sorted index, so a min over indices is a min over ids."""
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = idx[: len(src)], idx[len(src):]
+    own = np.arange(len(nodes))
+    # undirected edges plus one self-loop per node (closed neighbourhood),
+    # sorted once by receiving node; every node receives its self-loop,
+    # so each one owns a non-empty run starting at starts[node]
+    recv = np.concatenate([s, d, own])
+    send = np.concatenate([d, s, own])
+    order = np.argsort(recv)
+    recv, send = recv[order], send[order]
+    starts = np.searchsorted(recv, own)
+    lab = own
+    for rnd in range(max_iter):
+        new = np.minimum.reduceat(lab[send], starts)
+        if rnd:  # pointer jump; through round-0 labels it is the identity
+            new = np.minimum(new, lab[new])
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    else:
+        raise _not_converged(max_iter)
+    return nodes, nodes[lab]
 
 
 def connected_components(
@@ -29,7 +83,6 @@ def connected_components(
     b_col: str = "doc_b",
     max_iter: int = 25,
     reliable_checkpoints: bool = False,
-    probe_every: int = 1,
 ) -> DataFrame:
     """Label every node of the pair graph with its component id (the
     minimum node id reachable from it).
@@ -38,20 +91,13 @@ def connected_components(
     in ``pairs``.  Isolated docs (no pair) are absent; join back to the
     corpus with a left join + ``coalesce(component, doc_id)``.
 
-    ``probe_every``: run the convergence probe (a driver job) every K
-    rounds instead of every round.  The fixpoint is STABLE — a round
-    executed after convergence is the identity on labels — so any
-    probing schedule returns identical components; a probe is also
-    always run on the final permitted round so the non-convergence
-    error cannot be masked.  K>1 trades at most K−1 identity rounds
-    executed after the real fixpoint for K−1 fewer probe jobs per K
-    rounds.  Measured at sf0.1/local[32] (r13): a WASH on wall time
-    and a net job-count INCREASE (the extra identity round spawns more
-    AQE stage-jobs than the probes it saves), so the default stays 1;
-    the knob exists for graphs whose diameter makes rounds cheap and
-    probes comparatively expensive (many rounds, tiny label relation).
+    Graphs of at most ``spark.sql.autoBroadcastJoinThreshold // 16``
+    edges are collected once and labeled on the driver (see the module
+    docstring); a threshold <= 0 forces the distributed rounds.  Either
+    way a graph that needs more than ``max_iter`` rounds raises
+    ``RuntimeError`` at call time.
 
-    Lineage is truncated per round with ``localCheckpoint`` (executor
+    Distributed rounds truncate lineage with ``localCheckpoint`` (executor
     block storage) — fast, but rounds recompute from scratch if an
     executor dies.  For long cluster jobs pass
     ``reliable_checkpoints=True`` (requires
@@ -61,18 +107,6 @@ def connected_components(
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` to have
     superseded checkpoint files garbage-collected with their RDDs.
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    cached: list[DataFrame] = []
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if reliable_checkpoints:
-            df = df.persist()
-            while len(cached) > 1:  # keep current + one predecessor
-                cached.pop(0).unpersist()
-            cached.append(df)
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
     dtypes = dict(pairs.dtypes)
     for c in (a_col, b_col):
         if c not in dtypes:
@@ -115,6 +149,40 @@ def connected_components(
         )
 
     edges = pairs.select(_as_id(a_col).alias("src"), _as_id(b_col).alias("dst"))
+    spark = pairs.sparkSession
+    bound = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        // 16
+    )
+    if bound > 0:
+        # one job: the id guards run inside it, and more than ``bound``
+        # rows means the graph takes the distributed rounds instead
+        small = edges.limit(bound + 1).toArrow()
+        if small.num_rows <= bound:
+            node, comp = _label_on_driver(
+                small.column("src").to_numpy(),
+                small.column("dst").to_numpy(),
+                max_iter,
+            )
+            result = spark.createDataFrame(
+                pa.table({"node": node, "component": comp}),
+                "node long, component long",
+            )
+            if reliable_checkpoints:
+                result = result.checkpoint(eager=True)
+            return result
+
+    cached: list[DataFrame] = []
+
+    def _truncate(df: DataFrame) -> DataFrame:
+        if reliable_checkpoints:
+            df = df.persist()
+            while len(cached) > 1:  # keep current + one predecessor
+                cached.pop(0).unpersist()
+            cached.append(df)
+            return df.checkpoint(eager=False)
+        return df.localCheckpoint(eager=False)
+
     # undirected: propagate both ways.  Self-loops make the per-round
     # neighborhood min CLOSED — the node's own label arrives through
     # the same join as its neighbors' labels, so the round needs no
@@ -183,24 +251,13 @@ def connected_components(
                 )
             )
         # lazy checkpoint: the convergence probe is the action that
-        # materializes it — an UNPROBED round's checkpoint materializes
-        # as lineage of the next probed round, so K rounds share one
-        # driver job instead of paying a job-gap each
+        # materializes it
         new_labels = _truncate(jumped)
         labels = new_labels.select("src", "component")
-        if rnd % probe_every == probe_every - 1 or rnd == max_iter - 1:
-            changed = new_labels.where(F.col("__chg")).limit(1).count()
-            if changed == 0:
-                break
+        if new_labels.where(F.col("__chg")).limit(1).count() == 0:
+            break
     else:
-        # silent partial convergence would leave non-minimal component
-        # ids — dedup_keep_representative would then retain several
-        # "representatives" per duplicate cluster with no way to notice
-        raise RuntimeError(
-            f"connected_components did not converge in max_iter={max_iter} "
-            "pointer-jumping rounds (reach doubles per round, so this "
-            "graph's diameter exceeds ~2^max_iter) — raise max_iter"
-        )
+        raise _not_converged(max_iter)
 
     result = labels.select(F.col("src").alias("node"), "component")
     if reliable_checkpoints:
@@ -302,9 +359,10 @@ def dedup_keep_best(
     (``id_a``/``id_b``) compose directly.
 
     Scale shape: components via the pointer-jumping CC (O(log n)
-    rounds), then a rank window over the CLUSTERED rows only (the
-    inner join drops isolated docs first) and a semi-join back — no
-    corpus-wide window, no driver data.
+    rounds; on the driver only for graphs within the broadcast bound),
+    then a rank window over the CLUSTERED rows only (the inner join
+    drops isolated docs first) and a semi-join back — no corpus-wide
+    window.
     """
     from pyspark.sql import Window
 

@@ -242,8 +242,14 @@ def test_connected_components_100k_edges(spark):
         .alias("doc_b"),
     )
     t0 = time.time()
-    comp = connected_components(pairs)
-    n_comp = comp.select("component").distinct().count()
+    # threshold -1 keeps the graph off the driver's small-graph path
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        comp = connected_components(pairs)
+        n_comp = comp.select("component").distinct().count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     dt = time.time() - t0
     # 99k pair-components + 1 chain component
     assert n_comp == 99_000 + 1
@@ -582,9 +588,16 @@ def test_dedup_family_skewed_shingles(spark):
     t2 = time.time()
     assert 0 < n_cand < 10_000_000, f"LSH candidates exploded: {n_cand}"
 
-    # CC collapse over the minhash candidates stays logarithmic
-    comps = connected_components(cand)
-    n_comp = comps.select("component").distinct().count()
+    # CC collapse over the minhash candidates stays logarithmic; the
+    # distributed rounds (threshold -1: no small-graph path) are the
+    # ones under test
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        comps = connected_components(cand)
+        n_comp = comps.select("component").distinct().count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     t3 = time.time()
     assert n_comp > 0
     print(
