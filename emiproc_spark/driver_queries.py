@@ -9,6 +9,13 @@ route through per-row integer quantization (see ``qhelpers``) — per-row
 double arithmetic is bit-identical across engines, int64 addition is
 exact, and the final divide back to double matches bit-for-bit.  No
 tolerance needed anywhere.
+
+Registration: each query registers itself with one
+``registry.query(q_fn, SQL)`` line beside its oracle, in this module
+and in every ``driver_queries_*`` module.  This module imports them all
+and exposes ``QUERIES``/``ORACLES`` in window order (``_REVERIFY``
+first, then oldest evidence), the one import surface for
+``__spark_entry__``, ``bench.py`` and ``parity``.
 """
 
 from __future__ import annotations
@@ -20,6 +27,8 @@ from pyspark.sql import functions as F
 
 from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
+from emiproc_spark import registry
+from emiproc_spark.registry import query
 from emiproc_spark.operators import basic as ops
 from emiproc_spark.operators import regrid as rg
 from emiproc_spark.operators import speciation as spn
@@ -65,6 +74,8 @@ SQL_TPCH_Q1 = f"""
     GROUP BY l_returnflag, l_linestatus
 """
 
+query(q_tpch_q1, SQL_TPCH_Q1)
+
 
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-style multi-join: lineitem⋈supplier⋈nation⋈region with
@@ -101,6 +112,8 @@ SQL_REVENUE_BY_NATION = f"""
     GROUP BY r_name, n_name
 """
 
+query(q_revenue_by_nation, SQL_REVENUE_BY_NATION)
+
 
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-style top-k: revenue per customer, deterministic order.
@@ -133,6 +146,8 @@ SQL_TOP_CUSTOMERS = f"""
     LIMIT 10
 """
 
+query(q_top_customers, SQL_TOP_CUSTOMERS)
+
 
 def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4-style semi-join: orders with at least one line item
@@ -152,6 +167,8 @@ SQL_ORDER_PRIORITY = """
     WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
     GROUP BY o_orderpriority
 """
+
+query(q_order_priority, SQL_ORDER_PRIORITY)
 
 
 # ======================================================================
@@ -178,6 +195,8 @@ SQL_TOTAL_EMISSIONS = f"""
     SELECT substance, '__total__' AS category, {sql_sumd('value_kg_y')} AS total_kg_y
     FROM e GROUP BY substance
 """
+
+query(q_total_emissions, SQL_TOTAL_EMISSIONS)
 
 
 def q_group_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,6 +226,8 @@ SQL_GROUP_CATEGORIES = f"""
     FROM e GROUP BY 1, 2, 3
 """
 
+query(q_group_categories, SQL_GROUP_CATEGORIES)
+
 
 def q_group_substances(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fx.emissions(spark, sf_dir)
@@ -229,6 +250,8 @@ SQL_GROUP_SUBSTANCES = f"""
     FROM e GROUP BY 1, 2, 3
 """
 
+query(q_group_substances, SQL_GROUP_SUBSTANCES)
+
 
 def q_scale_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fx.emissions(spark, sf_dir)
@@ -248,6 +271,8 @@ SQL_SCALE_INVENTORY = f"""
     FROM e GROUP BY 1, 2, 3
 """
 
+query(q_scale_inventory, SQL_SCALE_INVENTORY)
+
 
 def q_drop_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fx.emissions(spark, sf_dir)
@@ -263,6 +288,8 @@ SQL_DROP_KEEP = f"""
     FROM e WHERE category = 'R' AND substance = 'F'
     GROUP BY 1, 2, 3
 """
+
+query(q_drop_keep, SQL_DROP_KEEP)
 
 
 def q_add_inventories(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,6 +314,8 @@ SQL_ADD_INVENTORIES = f"""
     FROM u GROUP BY 1, 2, 3
 """
 
+query(q_add_inventories, SQL_ADD_INVENTORIES)
+
 
 def q_speciate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emiproc_spark.core.schemas import SPECIATION
@@ -305,6 +334,8 @@ SQL_SPECIATE = f"""
     SELECT cell_id, category, substance, {sql_sumd('value_kg_y')} AS value_kg_y
     FROM sp GROUP BY 1, 2, 3
 """
+
+query(q_speciate, SQL_SPECIATE)
 
 
 def q_speciate_nox(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -339,6 +370,8 @@ SQL_SPECIATE_NOX = f"""
     FROM sp GROUP BY 1, 2, 3
 """
 
+query(q_speciate_nox, SQL_SPECIATE_NOX)
+
 
 # ======================================================================
 # Spatial operators
@@ -349,6 +382,8 @@ def q_remap_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_REMAP_WEIGHTS = fx.WEIGHTS_SQL
+
+query(q_remap_weights, SQL_REMAP_WEIGHTS)
 
 
 def q_remap_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,6 +404,8 @@ SQL_REMAP_INVENTORY = f"""
     FROM e JOIN w ON e.cell_id = w.src_id
     GROUP BY 1, 2, 3
 """
+
+query(q_remap_inventory, SQL_REMAP_INVENTORY)
 
 
 def q_crop_with_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,6 +434,8 @@ SQL_CROP_WITH_SHAPE = f"""
     GROUP BY 1, 2, 3
 """
 
+query(q_crop_with_shape, SQL_CROP_WITH_SHAPE)
+
 
 def q_clip_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fx.emissions(spark, sf_dir)
@@ -418,6 +457,8 @@ SQL_CLIP_BOX = f"""
     GROUP BY 1, 2, 3
 """
 
+query(q_clip_box, SQL_CLIP_BOX)
+
 
 def q_top_emitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 cells by total emission (scripts/zh_largest_emitters.py
@@ -438,6 +479,8 @@ SQL_TOP_EMITTERS = f"""
     ORDER BY total_kg_y DESC, cell_id
     LIMIT 10
 """
+
+query(q_top_emitters, SQL_TOP_EMITTERS)
 
 
 # ======================================================================
@@ -471,6 +514,8 @@ SQL_EVENTS_DAILY = f"""
     GROUP BY 1, 2
 """
 
+query(q_events_daily, SQL_EVENTS_DAILY)
+
 
 def q_events_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day activity profile — the engine's cyclic-profile position
@@ -494,6 +539,8 @@ SQL_EVENTS_HOURLY_PROFILE = f"""
     GROUP BY 1
 """
 
+query(q_events_hourly_profile, SQL_EVENTS_HOURLY_PROFILE)
+
 
 def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON property extraction + aggregation."""
@@ -515,6 +562,8 @@ SQL_EVENTS_JSON_PROPS = """
     FROM events
     GROUP BY event_type
 """
+
+query(q_events_json_props, SQL_EVENTS_JSON_PROPS)
 
 
 # ======================================================================
@@ -593,6 +642,8 @@ SQL_TEMPORAL_EXPAND = f"""
     FROM x GROUP BY 1, 2, 3
 """
 
+query(q_temporal_expand, SQL_TEMPORAL_EXPAND)
+
 
 def q_profiles_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Emission-weighted profile merge under a category grouping
@@ -645,6 +696,8 @@ SQL_PROFILES_COMBINE = f"""
            {sql_qd('b.ratio / t.total')} AS ratio
     FROM blend b JOIN tot t ON b.grp = t.grp AND b.ptype = t.ptype
 """
+
+query(q_profiles_combine, SQL_PROFILES_COMBINE)
 
 
 def q_country_to_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,6 +753,8 @@ SQL_COUNTRY_TO_CELLS = f"""
     FROM blend b JOIN tot t USING (cell_id, ptype)
 """
 
+query(q_country_to_cells, SQL_COUNTRY_TO_CELLS)
+
 
 def q_profiles_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dictionary-encoding dedup of per-cell ratio vectors
@@ -732,6 +787,8 @@ SQL_PROFILES_DEDUP = f"""
            (p.pos + 1 + k) / (300.0 + 24 * k) AS ratio
     FROM range(5) t(k) CROSS JOIN range(24) p(pos)
 """
+
+query(q_profiles_dedup, SQL_PROFILES_DEDUP)
 
 
 def q_vertical_rebin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,6 +828,8 @@ SQL_VERTICAL_REBIN = """
     LEFT JOIN contrib c ON c.profile_id = p.profile_id AND c.layer = t.layer
     GROUP BY p.profile_id, t.layer
 """
+
+query(q_vertical_rebin, SQL_VERTICAL_REBIN)
 
 
 def q_hdd_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,6 +882,8 @@ SQL_HDD_FACTORS = f"""
     FROM h CROSS JOIN m
 """
 
+query(q_hdd_factors, SQL_HDD_FACTORS)
+
 
 # ======================================================================
 # Relational breadth: windows, grouping sets, set ops (SURVEY §2.8)
@@ -863,6 +924,8 @@ SQL_WINDOW_RUNNING_TOTAL = """
     FROM orders
 """
 
+query(q_window_running_total, SQL_WINDOW_RUNNING_TOTAL)
+
 
 def q_supplier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense-rank suppliers by revenue within nation — ranking window
@@ -893,6 +956,8 @@ SQL_SUPPLIER_RANK = f"""
     FROM rev
 """
 
+query(q_supplier_rank, SQL_SUPPLIER_RANK)
+
 
 def q_cube_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (category, substance) — full grouping-sets lattice with
@@ -919,6 +984,8 @@ SQL_CUBE_EMISSIONS = f"""
            COUNT(*) AS n_rows
     FROM e GROUP BY CUBE (category, substance)
 """
+
+query(q_cube_emissions, SQL_CUBE_EMISSIONS)
 
 
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,6 +1024,8 @@ SQL_SET_OPS = """
     SELECT 'intersect_of' AS branch, COUNT(*) AS n FROM both_st
 """
 
+query(q_set_ops, SQL_SET_OPS)
+
 
 def q_composite_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite profile (daily × weekly) scaling factors over one week
@@ -988,6 +1057,8 @@ SQL_COMPOSITE_SCALING = f"""
            {sql_qd('EXP(LN(((h % 24) + 1) / 300.0 * 24) + LN((((h // 24) % 7) + 1) / 28.0 * 7))')} AS sf
     FROM range(168) t(h)
 """
+
+query(q_composite_scaling, SQL_COMPOSITE_SCALING)
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,6 +1110,8 @@ SQL_SESSIONIZE = f"""
     FROM s GROUP BY user_id
 """
 
+query(q_sessionize, SQL_SESSIONIZE)
+
 
 def q_interpolate_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly profile → hour-of-year with midpoint linear interpolation
@@ -1071,6 +1144,8 @@ SQL_INTERPOLATE_PROFILES = f"""
            {sql_qd('((lo + 1) / 78.0 * (1.0 - t) + (((lo + 1) % 12) + 1) / 78.0 * t) * 12')} AS sf
     FROM pos
 """
+
+query(q_interpolate_profiles, SQL_INTERPOLATE_PROFILES)
 
 
 # ======================================================================
@@ -1128,6 +1203,8 @@ SQL_COUNTRY_FRACTIONS = f"""
       AND LEAST(g.ymax, r.rymax) > GREATEST(g.ymin, r.rymin)
 """
 
+query(q_country_fractions, SQL_COUNTRY_FRACTIONS)
+
 
 def q_country_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Majority country per cell (argmax fraction, -99 for ocean cells)."""
@@ -1149,6 +1226,8 @@ SQL_COUNTRY_MAJORITY = f"""
     SELECT g.cell_id, COALESCE(ranked.country, '-99') AS country
     FROM g LEFT JOIN ranked ON g.cell_id = ranked.cell_id AND ranked.rn = 1
 """
+
+query(q_country_majority, SQL_COUNTRY_MAJORITY)
 
 
 def q_combine_inventories(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1189,6 +1268,8 @@ SQL_COMBINE_INVENTORIES = f"""
     SELECT cell_id, category, substance, {sql_sumd('value_kg_y')} AS value_kg_y
     FROM u GROUP BY 1, 2, 3
 """
+
+query(q_combine_inventories, SQL_COMBINE_INVENTORIES)
 
 
 # VPRM constants shared with the oracle
@@ -1247,6 +1328,8 @@ SQL_VPRM = f"""
     FROM calc
 """
 
+query(q_vprm, SQL_VPRM)
+
 
 RESP_FACTOR = 0.024  # kg CO2 / person / day scale
 
@@ -1271,174 +1354,37 @@ SQL_PEOPLE_TO_EMISSIONS = f"""
     FROM customer GROUP BY 1
 """
 
+query(q_people_to_emissions, SQL_PEOPLE_TO_EMISSIONS)
+
 
 # ======================================================================
-# registry
+# registry: each driver_queries* module registers its queries with
+# registry.query() beside their oracles; importing the modules fills
+# the registrar, and QUERIES/ORACLES below put it in window order
 # ======================================================================
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "tpch_q1": q_tpch_q1,
-    "revenue_by_nation": q_revenue_by_nation,
-    "top_customers": q_top_customers,
-    "order_priority": q_order_priority,
-    "total_emissions": q_total_emissions,
-    "group_categories": q_group_categories,
-    "group_substances": q_group_substances,
-    "scale_inventory": q_scale_inventory,
-    "drop_keep": q_drop_keep,
-    "add_inventories": q_add_inventories,
-    "speciate": q_speciate,
-    "speciate_nox": q_speciate_nox,
-    "remap_weights": q_remap_weights,
-    "remap_inventory": q_remap_inventory,
-    "crop_with_shape": q_crop_with_shape,
-    "clip_box": q_clip_box,
-    "top_emitters": q_top_emitters,
-    "events_daily": q_events_daily,
-    "events_hourly_profile": q_events_hourly_profile,
-    "events_json_props": q_events_json_props,
-    "temporal_expand": q_temporal_expand,
-    "profiles_combine": q_profiles_combine,
-    "country_to_cells": q_country_to_cells,
-    "profiles_dedup": q_profiles_dedup,
-    "vertical_rebin": q_vertical_rebin,
-    "hdd_factors": q_hdd_factors,
-    "window_running_total": q_window_running_total,
-    "supplier_rank": q_supplier_rank,
-    "cube_emissions": q_cube_emissions,
-    "set_ops": q_set_ops,
-    "composite_scaling": q_composite_scaling,
-    "sessionize": q_sessionize,
-    "interpolate_profiles": q_interpolate_profiles,
-    "country_fractions": q_country_fractions,
-    "country_majority": q_country_majority,
-    "combine_inventories": q_combine_inventories,
-    "vprm": q_vprm,
-    "people_to_emissions": q_people_to_emissions,
-}
-
-from emiproc_spark.driver_queries_text import ORACLES_TEXT, QUERIES_TEXT  # noqa: E402
-from emiproc_spark.driver_queries_io import ORACLES_IO, QUERIES_IO  # noqa: E402
-from emiproc_spark.driver_queries_r2 import ORACLES_R2, QUERIES_R2  # noqa: E402
-from emiproc_spark.driver_queries_curate import (  # noqa: E402
-    ORACLES_CURATE,
-    QUERIES_CURATE,
+from emiproc_spark import (  # noqa: E402,F401
+    driver_queries_text,
+    driver_queries_io,
+    driver_queries_r2,
+    driver_queries_curate,
+    driver_queries_r3,
+    driver_queries_r3b,
+    driver_queries_r3c,
+    driver_queries_r4,
+    driver_queries_r5,
+    driver_queries_r5b,
+    driver_queries_r5c,
+    driver_queries_r5d,
+    driver_queries_r5e,
+    driver_queries_r5f,
+    driver_queries_r5g,
+    driver_queries_r5h,
+    driver_queries_r6,
+    driver_queries_r7,
+    driver_queries_r8,
+    driver_queries_r10,
+    driver_queries_r11,
 )
-from emiproc_spark.driver_queries_r3 import ORACLES_R3, QUERIES_R3  # noqa: E402
-
-QUERIES.update(QUERIES_TEXT)
-QUERIES.update(QUERIES_IO)
-QUERIES.update(QUERIES_R2)
-QUERIES.update(QUERIES_CURATE)
-QUERIES.update(QUERIES_R3)
-
-ORACLES: dict[str, str] = {
-    "tpch_q1": SQL_TPCH_Q1,
-    "revenue_by_nation": SQL_REVENUE_BY_NATION,
-    "top_customers": SQL_TOP_CUSTOMERS,
-    "order_priority": SQL_ORDER_PRIORITY,
-    "total_emissions": SQL_TOTAL_EMISSIONS,
-    "group_categories": SQL_GROUP_CATEGORIES,
-    "group_substances": SQL_GROUP_SUBSTANCES,
-    "scale_inventory": SQL_SCALE_INVENTORY,
-    "drop_keep": SQL_DROP_KEEP,
-    "add_inventories": SQL_ADD_INVENTORIES,
-    "speciate": SQL_SPECIATE,
-    "speciate_nox": SQL_SPECIATE_NOX,
-    "remap_weights": SQL_REMAP_WEIGHTS,
-    "remap_inventory": SQL_REMAP_INVENTORY,
-    "crop_with_shape": SQL_CROP_WITH_SHAPE,
-    "clip_box": SQL_CLIP_BOX,
-    "top_emitters": SQL_TOP_EMITTERS,
-    "events_daily": SQL_EVENTS_DAILY,
-    "events_hourly_profile": SQL_EVENTS_HOURLY_PROFILE,
-    "events_json_props": SQL_EVENTS_JSON_PROPS,
-    "temporal_expand": SQL_TEMPORAL_EXPAND,
-    "profiles_combine": SQL_PROFILES_COMBINE,
-    "country_to_cells": SQL_COUNTRY_TO_CELLS,
-    "profiles_dedup": SQL_PROFILES_DEDUP,
-    "vertical_rebin": SQL_VERTICAL_REBIN,
-    "hdd_factors": SQL_HDD_FACTORS,
-    "window_running_total": SQL_WINDOW_RUNNING_TOTAL,
-    "supplier_rank": SQL_SUPPLIER_RANK,
-    "cube_emissions": SQL_CUBE_EMISSIONS,
-    "set_ops": SQL_SET_OPS,
-    "composite_scaling": SQL_COMPOSITE_SCALING,
-    "sessionize": SQL_SESSIONIZE,
-    "interpolate_profiles": SQL_INTERPOLATE_PROFILES,
-    "country_fractions": SQL_COUNTRY_FRACTIONS,
-    "country_majority": SQL_COUNTRY_MAJORITY,
-    "combine_inventories": SQL_COMBINE_INVENTORIES,
-    "vprm": SQL_VPRM,
-    "people_to_emissions": SQL_PEOPLE_TO_EMISSIONS,
-}
-
-ORACLES.update(ORACLES_TEXT)
-ORACLES.update(ORACLES_IO)
-ORACLES.update(ORACLES_R2)
-ORACLES.update(ORACLES_CURATE)
-ORACLES.update(ORACLES_R3)
-
-from emiproc_spark.driver_queries_r3b import ORACLES_R3B, QUERIES_R3B  # noqa: E402
-from emiproc_spark.driver_queries_r3c import ORACLES_R3C, QUERIES_R3C  # noqa: E402
-
-QUERIES.update(QUERIES_R3B)
-ORACLES.update(ORACLES_R3B)
-QUERIES.update(QUERIES_R3C)
-ORACLES.update(ORACLES_R3C)
-
-from emiproc_spark.driver_queries_r4 import ORACLES_R4, QUERIES_R4  # noqa: E402
-from emiproc_spark.driver_queries_r5 import ORACLES_R5, QUERIES_R5  # noqa: E402
-from emiproc_spark.driver_queries_r5b import ORACLES_R5B, QUERIES_R5B  # noqa: E402
-from emiproc_spark.driver_queries_r5c import ORACLES_R5C, QUERIES_R5C  # noqa: E402
-from emiproc_spark.driver_queries_r5d import ORACLES_R5D, QUERIES_R5D  # noqa: E402
-from emiproc_spark.driver_queries_r5e import ORACLES_R5E, QUERIES_R5E  # noqa: E402
-from emiproc_spark.driver_queries_r5f import ORACLES_R5F, QUERIES_R5F  # noqa: E402
-from emiproc_spark.driver_queries_r5g import ORACLES_R5G, QUERIES_R5G  # noqa: E402
-from emiproc_spark.driver_queries_r5h import ORACLES_R5H, QUERIES_R5H  # noqa: E402
-
-QUERIES.update(QUERIES_R4)
-ORACLES.update(ORACLES_R4)
-QUERIES.update(QUERIES_R5)
-ORACLES.update(ORACLES_R5)
-QUERIES.update(QUERIES_R5B)
-ORACLES.update(ORACLES_R5B)
-QUERIES.update(QUERIES_R5C)
-ORACLES.update(ORACLES_R5C)
-QUERIES.update(QUERIES_R5D)
-ORACLES.update(ORACLES_R5D)
-QUERIES.update(QUERIES_R5E)
-ORACLES.update(ORACLES_R5E)
-QUERIES.update(QUERIES_R5F)
-ORACLES.update(ORACLES_R5F)
-QUERIES.update(QUERIES_R5G)
-ORACLES.update(ORACLES_R5G)
-QUERIES.update(QUERIES_R5H)
-ORACLES.update(ORACLES_R5H)
-
-from emiproc_spark.driver_queries_r6 import ORACLES_R6, QUERIES_R6  # noqa: E402
-
-QUERIES.update(QUERIES_R6)
-ORACLES.update(ORACLES_R6)
-
-from emiproc_spark.driver_queries_r7 import ORACLES_R7, QUERIES_R7  # noqa: E402
-
-QUERIES.update(QUERIES_R7)
-ORACLES.update(ORACLES_R7)
-
-from emiproc_spark.driver_queries_r8 import ORACLES_R8, QUERIES_R8  # noqa: E402
-
-QUERIES.update(QUERIES_R8)
-ORACLES.update(ORACLES_R8)
-
-from emiproc_spark.driver_queries_r10 import ORACLES_R10, QUERIES_R10  # noqa: E402
-
-QUERIES.update(QUERIES_R10)
-ORACLES.update(ORACLES_R10)
-
-from emiproc_spark.driver_queries_r11 import ORACLES_R11, QUERIES_R11  # noqa: E402
-
-QUERIES.update(QUERIES_R11)
-ORACLES.update(ORACLES_R11)
 
 # Round-12 front-window rotation.  The driver samples a contiguous
 # 50-query block from the FRONT of the registry; per the standing
@@ -1622,9 +1568,9 @@ def _evidence_order(names: list[str]) -> list[str]:
     return sorted(names, key=lambda n: (last.get(n, 0), n))
 
 
-_FRONT = {k: QUERIES[k] for k in _REVERIFY if k in QUERIES}
-_REFILL = _evidence_order([k for k in QUERIES if k not in _FRONT])
-QUERIES = {**_FRONT, **{k: QUERIES[k] for k in _REFILL}}
-# ORACLES mirrors the QUERIES ordering (oracle-less streaming entries
-# simply have no row)
-ORACLES = {k: ORACLES[k] for k in QUERIES if k in ORACLES}
+_FRONT = [k for k in _REVERIFY if k in registry.QUERIES]
+_REFILL = _evidence_order([k for k in registry.QUERIES if k not in _FRONT])
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    k: registry.QUERIES[k] for k in _FRONT + _REFILL
+}
+ORACLES: dict[str, str] = {k: registry.ORACLES[k] for k in QUERIES}

@@ -8,8 +8,6 @@ randomness, integer quantization, deterministic tie-breaks.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,6 +19,7 @@ from emiproc_spark.operators import sampling as sp
 from emiproc_spark.operators import text as tx
 from emiproc_spark.driver_queries_text import SQL_MINHASH_LSH, _docs2
 from emiproc_spark.qhelpers import qd, sql_qd
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -49,6 +48,8 @@ SQL_DUP_CLUSTERS = f"""
     SELECT n AS node, LEAST(n, MIN(m)) AS component
     FROM reach GROUP BY n
 """
+
+query(q_dup_clusters, SQL_DUP_CLUSTERS)
 
 
 # ======================================================================
@@ -87,6 +88,8 @@ SQL_DOC_SAMPLE = f"""
     WHERE {sp.sql_hash_fraction('doc_id')} < {_sql_rate_case(SAMPLE_RATES)}
 """
 
+query(q_doc_sample, SQL_DOC_SAMPLE)
+
 
 def q_data_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fx.load(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
@@ -122,6 +125,8 @@ SQL_DATA_MIX = f"""
     FROM documents d JOIN rates r USING (source)
     WHERE {sp.sql_hash_fraction('d.doc_id', 'mix')} < r.rate
 """
+
+query(q_data_mix, SQL_DATA_MIX)
 
 
 # ======================================================================
@@ -161,6 +166,8 @@ SQL_REPETITION_STATS = f"""
            {sql_qd('t.top_c / CAST(b.n - 1 AS DOUBLE)')} AS top_bigram_share
     FROM base b JOIN top t ON b.doc_id = t.doc_id
 """
+
+query(q_repetition_stats, SQL_REPETITION_STATS)
 
 
 # ======================================================================
@@ -228,6 +235,8 @@ SQL_PII_SCRUB = (
 """
 )
 
+query(q_pii_scrub, SQL_PII_SCRUB)
+
 
 # ======================================================================
 # TF-IDF top-k keywords (log-free idf for engine parity; see tfidf_topk)
@@ -265,6 +274,8 @@ SQL_TFIDF_TOPK = """
         FROM scored
     ) WHERE rank <= 3
 """
+
+query(q_tfidf_topk, SQL_TFIDF_TOPK)
 
 
 # ======================================================================
@@ -322,6 +333,8 @@ SQL_DECONTAMINATE = f"""
     SELECT DISTINCT cg.doc_id FROM cg JOIN ev USING (ngram)
 """
 
+query(q_decontaminate, SQL_DECONTAMINATE)
+
 
 # ======================================================================
 # sequence packing + shard manifest (n_chars as the size proxy; 8 shards
@@ -365,6 +378,8 @@ SQL_SEQ_PACK = f"""
     FROM o
 """
 
+query(q_seq_pack, SQL_SEQ_PACK)
+
 
 def q_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fx.load(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -378,30 +393,7 @@ SQL_SHARD_PLAN = f"""
     FROM s GROUP BY shard_id
 """
 
-
-QUERIES_CURATE: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dup_clusters": q_dup_clusters,
-    "doc_sample": q_doc_sample,
-    "data_mix": q_data_mix,
-    "repetition_stats": q_repetition_stats,
-    "pii_scrub": q_pii_scrub,
-    "tfidf_topk": q_tfidf_topk,
-    "decontaminate": q_decontaminate,
-    "seq_pack": q_seq_pack,
-    "shard_plan": q_shard_plan,
-}
-
-ORACLES_CURATE: dict[str, str] = {
-    "dup_clusters": SQL_DUP_CLUSTERS,
-    "doc_sample": SQL_DOC_SAMPLE,
-    "data_mix": SQL_DATA_MIX,
-    "repetition_stats": SQL_REPETITION_STATS,
-    "pii_scrub": SQL_PII_SCRUB,
-    "tfidf_topk": SQL_TFIDF_TOPK,
-    "decontaminate": SQL_DECONTAMINATE,
-    "seq_pack": SQL_SEQ_PACK,
-    "shard_plan": SQL_SHARD_PLAN,
-}
+query(q_shard_plan, SQL_SHARD_PLAN)
 
 
 # ======================================================================
@@ -438,5 +430,4 @@ SQL_PASSAGE_DEDUP = f"""
     FROM s GROUP BY passage_hash HAVING COUNT(*) > 1
 """
 
-QUERIES_CURATE["passage_dedup"] = q_passage_dedup
-ORACLES_CURATE["passage_dedup"] = SQL_PASSAGE_DEDUP
+query(q_passage_dedup, SQL_PASSAGE_DEDUP)

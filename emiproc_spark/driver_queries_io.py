@@ -23,6 +23,7 @@ from emiproc_spark import fixtures as fx
 from emiproc_spark.operators import speciation as spn
 from emiproc_spark.qhelpers import qd, sql_qd, sql_sumd, sumd
 from emiproc_spark.sources.readers import SECONDS_PER_YEAR
+from emiproc_spark.registry import query
 
 # ======================================================================
 # speciate_inventory: dict-driven (cat,sub)→(cat',sub') fan-out
@@ -66,6 +67,8 @@ SQL_SPECIATE_INVENTORY = f"""
     FROM sp GROUP BY 1, 2, 3
 """
 
+query(q_speciate_inventory, SQL_SPECIATE_INVENTORY)
+
 
 # ======================================================================
 # netcdf_ingest: export→re-ingest round-trip vs pure-SQL oracle
@@ -104,6 +107,8 @@ SQL_NETCDF_INGEST = f"""
     SELECT cell_id, category, substance, {sql_sumd('value_kg_y')} AS value_kg_y
     FROM e GROUP BY 1, 2, 3
 """
+
+query(q_netcdf_ingest, SQL_NETCDF_INGEST)
 
 
 # ======================================================================
@@ -220,6 +225,8 @@ SQL_TNO_INGEST = f"""
     FROM srcs GROUP BY 1, 2
 """
 
+query(q_tno_ingest, SQL_TNO_INGEST)
+
 
 def q_tno_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emiproc_spark.sources.tno import tno_point_sources
@@ -246,20 +253,7 @@ SQL_TNO_POINTS = """
     FROM s GROUP BY 1, 2, 3
 """
 
-
-QUERIES_IO = {
-    "speciate_inventory": q_speciate_inventory,
-    "netcdf_ingest": q_netcdf_ingest,
-    "tno_ingest": q_tno_ingest,
-    "tno_points": q_tno_points,
-}
-
-ORACLES_IO = {
-    "speciate_inventory": SQL_SPECIATE_INVENTORY,
-    "netcdf_ingest": SQL_NETCDF_INGEST,
-    "tno_ingest": SQL_TNO_INGEST,
-    "tno_points": SQL_TNO_POINTS,
-}
+query(q_tno_points, SQL_TNO_POINTS)
 
 
 # ======================================================================
@@ -333,6 +327,8 @@ SQL_EDGAR_INGEST = f"""
     FROM e GROUP BY cell_id, category
 """
 
+query(q_edgar_ingest, SQL_EDGAR_INGEST)
+
 
 def q_cams_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CAMS-REG-AQ layout: substance from the file name, one variable
@@ -368,6 +364,8 @@ SQL_CAMS_INGEST = f"""
            'NOx' AS substance, tg * 1e9 AS value_kg_y
     FROM g WHERE tg <> 0
 """
+
+query(q_cams_ingest, SQL_CAMS_INGEST)
 
 
 GFAS_NLA, GFAS_NLO, GFAS_NDAYS = 5, 4, 365
@@ -437,6 +435,8 @@ SQL_GFAS_INGEST = f"""
     GROUP BY d.cell_id
 """
 
+query(q_gfas_ingest, SQL_GFAS_INGEST)
+
 
 def q_saunois_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Saunois layout: per-category file, monthly g CH4 m-2 d-1 fluxes
@@ -498,24 +498,7 @@ SQL_SAUNOIS_INGEST = f"""
     FROM monthly m JOIN areas a USING (la)
 """
 
-
-QUERIES_IO.update(
-    {
-        "edgar_ingest": q_edgar_ingest,
-        "cams_ingest": q_cams_ingest,
-        "gfas_ingest": q_gfas_ingest,
-        "saunois_ingest": q_saunois_ingest,
-    }
-)
-
-ORACLES_IO.update(
-    {
-        "edgar_ingest": SQL_EDGAR_INGEST,
-        "cams_ingest": SQL_CAMS_INGEST,
-        "gfas_ingest": SQL_GFAS_INGEST,
-        "saunois_ingest": SQL_SAUNOIS_INGEST,
-    }
-)
+query(q_saunois_ingest, SQL_SAUNOIS_INGEST)
 
 
 # ======================================================================
@@ -571,8 +554,7 @@ SQL_GPKG_ROUNDTRIP = """
     FROM nation
 """
 
-QUERIES_IO["gpkg_roundtrip"] = q_gpkg_roundtrip
-ORACLES_IO["gpkg_roundtrip"] = SQL_GPKG_ROUNDTRIP
+query(q_gpkg_roundtrip, SQL_GPKG_ROUNDTRIP)
 
 
 # ======================================================================
@@ -621,6 +603,8 @@ SQL_GRAL_ROUNDTRIP = """
            (n_nationkey + 1) * (365.25 * 24) AS value_kg_y, 4.0 AS height
     FROM nation
 """
+
+query(q_gral_roundtrip, SQL_GRAL_ROUNDTRIP)
 
 
 # ======================================================================
@@ -677,10 +661,7 @@ SQL_SWISS_INGEST = f"""
     FROM per_cell p, tot WHERE p.rv <> 0
 """
 
-QUERIES_IO["gral_roundtrip"] = q_gral_roundtrip
-ORACLES_IO["gral_roundtrip"] = SQL_GRAL_ROUNDTRIP
-QUERIES_IO["swiss_ingest"] = q_swiss_ingest
-ORACLES_IO["swiss_ingest"] = SQL_SWISS_INGEST
+query(q_swiss_ingest, SQL_SWISS_INGEST)
 
 
 # ======================================================================
@@ -730,8 +711,7 @@ SQL_TNO_PROFILES = f"""
     FROM f JOIN tot t USING (cell_id)
 """
 
-QUERIES_IO["tno_profiles"] = q_tno_profiles
-ORACLES_IO["tno_profiles"] = SQL_TNO_PROFILES
+query(q_tno_profiles, SQL_TNO_PROFILES)
 
 
 # ======================================================================
@@ -788,8 +768,7 @@ SQL_PRTR_INGEST = """
     FROM nation
 """
 
-QUERIES_IO["prtr_ingest"] = q_prtr_ingest
-ORACLES_IO["prtr_ingest"] = SQL_PRTR_INGEST
+query(q_prtr_ingest, SQL_PRTR_INGEST)
 
 
 # ======================================================================
@@ -814,6 +793,8 @@ def q_weights_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_WEIGHTS_CACHE = fx.WEIGHTS_SQL
+
+query(q_weights_cache, SQL_WEIGHTS_CACHE)
 
 
 # ======================================================================
@@ -868,6 +849,8 @@ SQL_EDGAR_LEGACY = f"""
                  * (365.25 * 24 * 3600) * a.area + 0.5) AS value_kg_y
     FROM cells c JOIN areas a USING (la)
 """
+
+query(q_edgar_legacy, SQL_EDGAR_LEGACY)
 
 
 # ======================================================================
@@ -931,6 +914,8 @@ SQL_WETCHARTS_INGEST = f"""
     FROM vals v JOIN areas a USING (la)
 """
 
+query(q_wetcharts_ingest, SQL_WETCHARTS_INGEST)
+
 
 # ======================================================================
 # GFED5: daily NetCDF sum × 1e-3 × area (reference gfed.py:308-372)
@@ -987,6 +972,8 @@ SQL_GFED5_INGEST = f"""
     FROM vals v JOIN areas a USING (la)
 """
 
+query(q_gfed5_ingest, SQL_GFED5_INGEST)
+
 
 # ======================================================================
 # WRF mole-flux conversion: kg/h → mole/km²/h (reference wrf.py:170-180)
@@ -1027,24 +1014,7 @@ SQL_WRF_FLUX = f"""
     FROM agg
 """
 
-QUERIES_IO.update(
-    {
-        "weights_cache": q_weights_cache,
-        "edgar_legacy": q_edgar_legacy,
-        "wetcharts_ingest": q_wetcharts_ingest,
-        "gfed5_ingest": q_gfed5_ingest,
-        "wrf_flux": q_wrf_flux,
-    }
-)
-ORACLES_IO.update(
-    {
-        "weights_cache": SQL_WEIGHTS_CACHE,
-        "edgar_legacy": SQL_EDGAR_LEGACY,
-        "wetcharts_ingest": SQL_WETCHARTS_INGEST,
-        "gfed5_ingest": SQL_GFED5_INGEST,
-        "wrf_flux": SQL_WRF_FLUX,
-    }
-)
+query(q_wrf_flux, SQL_WRF_FLUX)
 
 
 # ======================================================================
@@ -1123,8 +1093,7 @@ SQL_LPJ_INGEST = f"""
     FROM sums s JOIN areas a USING (la)
 """
 
-QUERIES_IO["lpj_ingest"] = q_lpj_ingest
-ORACLES_IO["lpj_ingest"] = SQL_LPJ_INGEST
+query(q_lpj_ingest, SQL_LPJ_INGEST)
 
 
 # ======================================================================
@@ -1161,6 +1130,8 @@ SQL_TPROFILES_CSV = """
     FROM rows
 """.format(qd=sql_qd("v / SUM(v) OVER (PARTITION BY category)"))
 
+query(q_tprofiles_csv, SQL_TPROFILES_CSV)
+
 
 def q_vprofiles_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emiproc_spark.sources.profiles_io import read_vertical_profiles_csv
@@ -1196,8 +1167,4 @@ SQL_VPROFILES_CSV = """
     FROM rows
 """.format(qd=sql_qd("v / SUM(v) OVER (PARTITION BY category)"))
 
-
-QUERIES_IO["tprofiles_csv"] = q_tprofiles_csv
-ORACLES_IO["tprofiles_csv"] = SQL_TPROFILES_CSV
-QUERIES_IO["vprofiles_csv"] = q_vprofiles_csv
-ORACLES_IO["vprofiles_csv"] = SQL_VPROFILES_CSV
+query(q_vprofiles_csv, SQL_VPROFILES_CSV)

@@ -19,7 +19,6 @@ sharded stateful streams.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +27,7 @@ from emiproc_spark import fixtures as fx
 
 # the oracle reuses _sql_stream_neardup, so the cap must be ITS cap
 from emiproc_spark.driver_queries_r3c import _ND_MAX_BUCKET as _RESUME_MAX_BUCKET
+from emiproc_spark.registry import query
 
 
 def q_stream_neardup_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,8 +67,7 @@ def q_stream_neardup_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # full TTL — bound it so a regression fails THIS query instead
         # of stalling the whole driver sweep (r10 advisor)
         return run_available_now(
-            out, f"r10_nd_resume_{uuid.uuid4().hex[:8]}", "append",
-            no_data_batches=False, timeout=300,
+            out, "r10_nd_resume", "append", no_data_batches=False, timeout=300
         )
 
     # the two incarnations are INDEPENDENT streams (separate sources,
@@ -109,10 +108,4 @@ def _sql_stream_neardup_resume() -> str:
     """
 
 
-QUERIES_R10 = {
-    "stream_neardup_resume": q_stream_neardup_resume,
-}
-
-ORACLES_R10 = {
-    "stream_neardup_resume": _sql_stream_neardup_resume(),
-}
+query(q_stream_neardup_resume, _sql_stream_neardup_resume())

@@ -25,13 +25,13 @@ documented upgrade paths sit under the driver's hash check).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from emiproc_spark import fixtures as fx
 from emiproc_spark.streaming.bootstrap import write_ordered_file
+from emiproc_spark.registry import query
 
 _FR_STEPS = ["view", "click", "purchase"]
 #: stream_funnel_resume shard counts — deliberately different primes so
@@ -104,8 +104,7 @@ def q_stream_funnel_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts timestamp, user_id long, event_type string"
         ).parquet(src)
         out = funnel_stream(stream, _FR_STEPS, n_shards=n_shards)
-        name = f"r11_funnel_resume_{uuid.uuid4().hex[:8]}"
-        return run_available_now(out, name, "append", timeout=300)
+        return run_available_now(out, "r11_funnel_resume", "append", timeout=300)
 
     # independent incarnations (separate sources/checkpoints/sinks;
     # the state handoff rides b_dir's bootstrap rows) — overlap them,
@@ -160,6 +159,8 @@ SQL_STREAM_FUNNEL_RESUME = """
     FROM w3 GROUP BY user_id
 """
 
+query(q_stream_funnel_resume, SQL_STREAM_FUNNEL_RESUME)
+
 
 def q_stream_cdc_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feed halves split by ``event_id`` parity (NOT event time, so both
@@ -211,8 +212,7 @@ def q_stream_cdc_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         out = changelog_state_stream(stream, n_buckets=n_buckets)
-        name = f"r11_cdc_resume_{uuid.uuid4().hex[:8]}"
-        res = run_available_now(out, name, "update", timeout=300)
+        res = run_available_now(out, "r11_cdc_resume", "update", timeout=300)
         # the read contract: latest ver per key, deletes dropped
         w = Window.partitionBy("k")
         final = res.withColumn("mx", F.max("ver").over(w)).where(
@@ -268,13 +268,4 @@ SQL_STREAM_CDC_RESUME = """
     FROM latest WHERE op <> 'delete'
 """
 
-
-QUERIES_R11 = {
-    "stream_funnel_resume": q_stream_funnel_resume,
-    "stream_cdc_resume": q_stream_cdc_resume,
-}
-
-ORACLES_R11 = {
-    "stream_funnel_resume": SQL_STREAM_FUNNEL_RESUME,
-    "stream_cdc_resume": SQL_STREAM_CDC_RESUME,
-}
+query(q_stream_cdc_resume, SQL_STREAM_CDC_RESUME)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
 from emiproc_spark.qhelpers import qd, sql_qd, sql_sumd, sumd
+from emiproc_spark.registry import query
 
 DIM = 64
 DOT_SCALE = 1e12
@@ -94,6 +95,8 @@ SQL_REMAP_PROFILES = f"""
     FROM blend b JOIN tot t USING (cell_id)
 """
 
+query(q_remap_profiles, SQL_REMAP_PROFILES)
+
 
 # ======================================================================
 # group_profiles_indexes: category grouping applied to a
@@ -158,6 +161,8 @@ SQL_GROUP_PROFILES_INDEXES = f"""
     FROM blend b JOIN tot t USING (category, substance, ptype)
 """
 
+query(q_group_profiles_indexes, SQL_GROUP_PROFILES_INDEXES)
+
 
 # ======================================================================
 # merge_indexes: specificity-ordered overlay of sparse index tables
@@ -190,6 +195,8 @@ SQL_MERGE_INDEXES = f"""
            END AS profile_id
     FROM e
 """
+
+query(q_merge_indexes, SQL_MERGE_INDEXES)
 
 
 # ======================================================================
@@ -232,6 +239,8 @@ SQL_RESOLVE_DAYTYPE = f"""
     FROM hp JOIN tot USING (pid)
 """
 
+query(q_resolve_daytype, SQL_RESOLVE_DAYTYPE)
+
 
 # ======================================================================
 # regionize: ICON-OEM regions = distinct (timezone, profile) pairs with
@@ -257,6 +266,8 @@ SQL_REGIONIZE = f"""
            CAST(c % 3 AS INT) AS profile_id
     FROM range({fx.N_CELLS}) t(c)
 """
+
+query(q_regionize, SQL_REGIONIZE)
 
 
 # ======================================================================
@@ -284,6 +295,8 @@ SQL_TZ_SHIFT = """
                / (300.0 + 24 * k.k) AS ratio
     FROM range(3) k(k), range(6) r(r), range(24) p(pos)
 """
+
+query(q_tz_shift, SQL_TZ_SHIFT)
 
 
 # ======================================================================
@@ -320,6 +333,8 @@ SQL_FROM_DUCKDB = """
     SELECT n_nationkey, n_name, 'ch4', CAST(n_regionkey * 2.25 AS DOUBLE)
     FROM nation WHERE n_nationkey >= 5
 """
+
+query(q_from_duckdb, SQL_FROM_DUCKDB)
 
 
 # ======================================================================
@@ -377,6 +392,8 @@ SQL_OSM_WAYS = """
     FROM nation GROUP BY n_regionkey
 """
 
+query(q_osm_ways, SQL_OSM_WAYS)
+
 
 # ======================================================================
 # hamming_pairs: near-dup doc pairs by simhash Hamming distance,
@@ -420,6 +437,8 @@ SQL_HAMMING_PAIRS = """
     FROM sim a JOIN sim b ON a.doc_id < b.doc_id
     WHERE hamming(a.bits, b.bits) <= 3
 """
+
+query(q_hamming_pairs, SQL_HAMMING_PAIRS)
 
 
 # ======================================================================
@@ -467,6 +486,8 @@ SQL_KNN_JOIN = f"""
     FROM ranked WHERE rk <= 3
 """
 
+query(q_knn_join, SQL_KNN_JOIN)
+
 
 # ======================================================================
 # to_wide: long → (cat,sub)-pivoted wide layout (reference
@@ -504,6 +525,8 @@ SQL_TO_WIDE = f"""
     FROM e GROUP BY cell_id
 """
 
+query(q_to_wide, SQL_TO_WIDE)
+
 
 # ======================================================================
 # add_totals: per-substance rollup over categories — the reference's
@@ -531,6 +554,8 @@ SQL_ADD_TOTALS = f"""
     FROM e2 GROUP BY ROLLUP (substance, category)
     HAVING substance IS NOT NULL
 """
+
+query(q_add_totals, SQL_ADD_TOTALS)
 
 
 # ======================================================================
@@ -594,38 +619,7 @@ SQL_HOY_TO_CYCLES = f"""
     FROM cyc c JOIN tot t USING (pid, ptype)
 """
 
-
-QUERIES_R2 = {
-    "remap_profiles": q_remap_profiles,
-    "group_profiles_indexes": q_group_profiles_indexes,
-    "merge_indexes": q_merge_indexes,
-    "resolve_daytype": q_resolve_daytype,
-    "regionize": q_regionize,
-    "tz_shift": q_tz_shift,
-    "from_duckdb": q_from_duckdb,
-    "osm_ways": q_osm_ways,
-    "hamming_pairs": q_hamming_pairs,
-    "knn_join": q_knn_join,
-    "to_wide": q_to_wide,
-    "add_totals": q_add_totals,
-    "hoy_to_cycles": q_hoy_to_cycles,
-}
-
-ORACLES_R2 = {
-    "remap_profiles": SQL_REMAP_PROFILES,
-    "group_profiles_indexes": SQL_GROUP_PROFILES_INDEXES,
-    "merge_indexes": SQL_MERGE_INDEXES,
-    "resolve_daytype": SQL_RESOLVE_DAYTYPE,
-    "regionize": SQL_REGIONIZE,
-    "tz_shift": SQL_TZ_SHIFT,
-    "from_duckdb": SQL_FROM_DUCKDB,
-    "osm_ways": SQL_OSM_WAYS,
-    "hamming_pairs": SQL_HAMMING_PAIRS,
-    "knn_join": SQL_KNN_JOIN,
-    "to_wide": SQL_TO_WIDE,
-    "add_totals": SQL_ADD_TOTALS,
-    "hoy_to_cycles": SQL_HOY_TO_CYCLES,
-}
+query(q_hoy_to_cycles, SQL_HOY_TO_CYCLES)
 
 
 # ======================================================================
@@ -659,8 +653,7 @@ SQL_ICON_OEM_SF = """
     FROM range(6) r(r), range(24) p(pos)
 """
 
-QUERIES_R2["icon_oem_sf"] = q_icon_oem_sf
-ORACLES_R2["icon_oem_sf"] = SQL_ICON_OEM_SF
+query(q_icon_oem_sf, SQL_ICON_OEM_SF)
 
 
 # ======================================================================
@@ -699,8 +692,7 @@ SQL_SHAPEFILE_REGIONS = """
     JOIN region r ON r.r_regionkey = t.i // 2
 """
 
-QUERIES_R2["shapefile_regions"] = q_shapefile_regions
-ORACLES_R2["shapefile_regions"] = SQL_SHAPEFILE_REGIONS
+query(q_shapefile_regions, SQL_SHAPEFILE_REGIONS)
 
 
 # ======================================================================
@@ -736,6 +728,8 @@ SQL_ADD_PROFILES = """
     SELECT 3, 'daily', CAST(p.pos AS INT), 1.0 / 24 FROM range(24) p(pos)
 """
 
+query(q_add_profiles, SQL_ADD_PROFILES)
+
 
 # ======================================================================
 # add_constant_profile_to_missing_cells: pad the index with −1 rows
@@ -757,6 +751,8 @@ SQL_MISSING_CELLS = f"""
                AS profile_id
     FROM range({fx.N_CELLS}) t(c)
 """
+
+query(q_missing_cells, SQL_MISSING_CELLS)
 
 
 # ======================================================================
@@ -785,9 +781,4 @@ SQL_BROADCAST_TYPES = """
     LEFT JOIN assigned a ON a.comp_id = c.comp_id AND a.ptype = t.ptype
 """
 
-QUERIES_R2["add_profiles"] = q_add_profiles
-ORACLES_R2["add_profiles"] = SQL_ADD_PROFILES
-QUERIES_R2["missing_cells"] = q_missing_cells
-ORACLES_R2["missing_cells"] = SQL_MISSING_CELLS
-QUERIES_R2["broadcast_types"] = q_broadcast_types
-ORACLES_R2["broadcast_types"] = SQL_BROADCAST_TYPES
+query(q_broadcast_types, SQL_BROADCAST_TYPES)

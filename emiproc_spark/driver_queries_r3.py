@@ -12,7 +12,6 @@ microseconds.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +22,7 @@ from emiproc_spark.fixtures import events as _events
 from emiproc_spark.operators import temporal as tp
 from emiproc_spark.operators.profiles import get_weights_of_profiles
 from emiproc_spark.qhelpers import qd, sql_qd, sumd, sql_sumd
+from emiproc_spark.registry import query
 
 NS_PER_DAY = 86_400 * 10**9
 
@@ -92,6 +92,8 @@ SQL_PROFILE_POSITIONS = """
     FROM e
 """
 
+query(q_profile_positions, SQL_PROFILE_POSITIONS)
+
 
 # ======================================================================
 # tz-aware local-time scaling factors (reference
@@ -138,6 +140,8 @@ SQL_LOCAL_TIME_SF = f"""
     FROM loc
 """
 
+query(q_local_time_sf, SQL_LOCAL_TIME_SF)
+
 
 # ======================================================================
 # profile weights with the −1 → weight 0 rule (reference
@@ -179,6 +183,8 @@ SQL_PROFILE_WEIGHTS = f"""
                 THEN 0.0 ELSE weight END AS weight
     FROM w
 """
+
+query(q_profile_weights, SQL_PROFILE_WEIGHTS)
 
 
 # ======================================================================
@@ -287,20 +293,7 @@ SQL_FLUXIE_EXPORT = f"""
     SELECT * FROM cells UNION ALL SELECT * FROM countries
 """
 
-
-QUERIES_R3: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "profile_positions": q_profile_positions,
-    "local_time_sf": q_local_time_sf,
-    "profile_weights": q_profile_weights,
-    "fluxie_export": q_fluxie_export,
-}
-
-ORACLES_R3: dict[str, str] = {
-    "profile_positions": SQL_PROFILE_POSITIONS,
-    "local_time_sf": SQL_LOCAL_TIME_SF,
-    "profile_weights": SQL_PROFILE_WEIGHTS,
-    "fluxie_export": SQL_FLUXIE_EXPORT,
-}
+query(q_fluxie_export, SQL_FLUXIE_EXPORT)
 
 
 # ======================================================================
@@ -341,6 +334,8 @@ SQL_CRS_LV95 = f"""
                    ' + 119.79 * phi * phi * phi', 1000.0)} AS n
     FROM p
 """
+
+query(q_crs_lv95, SQL_CRS_LV95)
 
 
 # ======================================================================
@@ -385,6 +380,8 @@ SQL_ADD_SHAPED = f"""
     FROM u GROUP BY 1, 2
 """
 
+query(q_add_shaped, SQL_ADD_SHAPED)
+
 
 # ======================================================================
 # normalize_ratios incl. the all-zero → uniform rule (reference
@@ -423,18 +420,4 @@ SQL_NORMALIZE_RATIOS = f"""
     FROM base, UNNEST(range(1, 5)) u(i)
 """
 
-
-QUERIES_R3.update(
-    {
-        "crs_lv95": q_crs_lv95,
-        "add_shaped": q_add_shaped,
-        "normalize_ratios": q_normalize_ratios,
-    }
-)
-ORACLES_R3.update(
-    {
-        "crs_lv95": SQL_CRS_LV95,
-        "add_shaped": SQL_ADD_SHAPED,
-        "normalize_ratios": SQL_NORMALIZE_RATIOS,
-    }
-)
+query(q_normalize_ratios, SQL_NORMALIZE_RATIOS)

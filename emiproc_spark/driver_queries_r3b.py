@@ -18,14 +18,13 @@ written identically on both engines, multi-term reductions through the
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
 from emiproc_spark.qhelpers import qd, sql_qd, sql_sumd, sumd  # noqa: F401
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -109,6 +108,8 @@ SQL_SPECIATE_COUNTRY = f"""
     SELECT cell_id, category, substance, value_kg_y FROM sp
 """
 
+query(q_speciate_country, SQL_SPECIATE_COUNTRY)
+
 
 # ======================================================================
 # ICON triangular-mesh ingest + remap (reference ICONGrid,
@@ -191,6 +192,8 @@ SQL_ICON_MESH = f"""
     FROM x GROUP BY 1, 2, 3
 """
 
+query(q_icon_mesh, SQL_ICON_MESH)
+
 
 # ======================================================================
 # midpoint-stamped profile series (reference get_profile_da,
@@ -217,6 +220,8 @@ SQL_PROFILE_DA = """
     FROM range(-1, 8785) t(k)
 """
 
+query(q_profile_da, SQL_PROFILE_DA)
+
 
 # ======================================================================
 # calendar rule (reference get_day_per_year, emiproc/utilities.py:38-46)
@@ -237,6 +242,8 @@ SQL_DAYS_IN_YEAR = """
                 THEN 366 ELSE 365 END AS days
     FROM range(1896, 2125) t(y)
 """
+
+query(q_days_in_year, SQL_DAYS_IN_YEAR)
 
 
 # ======================================================================
@@ -285,6 +292,8 @@ SQL_TOTALS_EQUAL = f"""
                AS within_tol
     FROM ta JOIN tb USING (substance, category)
 """
+
+query(q_totals_equal, SQL_TOTALS_EQUAL)
 
 
 # ======================================================================
@@ -347,6 +356,8 @@ SQL_KNN_CLASSIFY = f"""
     SELECT query_id, pred_label, votes FROM best WHERE vk = 1
 """
 
+query(q_knn_classify, SQL_KNN_CLASSIFY)
+
 
 # ======================================================================
 # Structured Streaming end-to-end: a real stream (file source →
@@ -391,34 +402,18 @@ def _stream_events_dir(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-def _run_stream(
-    out_df: DataFrame, name: str, mode: str, no_data_batches: bool = True
-) -> DataFrame:
-    import uuid
-
-    from emiproc_spark.streaming.streams import run_available_now
-
-    name = f"{name}_{uuid.uuid4().hex[:8]}"  # unique per invocation
-    # no_data_batches=False skips the trailing watermark-advance
-    # micro-batch — pass it ONLY for queries whose final batch provably
-    # emits nothing (run_available_now docstring); the extra batch costs
-    # a full stateful-stage execution (all state partitions reload,
-    # commit, and round-trip Python for timed-out groups).
-    return run_available_now(out_df, name, mode, no_data_batches=no_data_batches)
-
-
 def q_stream_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-hour aggregation executed as an actual
     Structured Streaming query (streams.windowed_event_stats), complete
     output mode so every window reaches the sink."""
-    from emiproc_spark.streaming.streams import windowed_event_stats
+    from emiproc_spark.streaming.streams import run_available_now, windowed_event_stats
 
     src = _stream_events_dir(spark, sf_dir)
     stream = spark.readStream.schema(
         "ts timestamp, event_type string, user_id long, value long"
     ).parquet(src)
     out = windowed_event_stats(stream, "1 hour", "2 hours")
-    res = _run_stream(out, "r3b_stream_stats", "complete")
+    res = run_available_now(out, "r3b_stream_stats", "complete")
     return res.select(
         F.unix_seconds("window_start").alias("epoch_s"),
         "event_type",
@@ -437,12 +432,14 @@ SQL_STREAM_WINDOW_STATS = f"""
     GROUP BY 1, 2
 """
 
+query(q_stream_window_stats, SQL_STREAM_WINDOW_STATS)
+
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup (dropDuplicatesWithinWatermark) run to
     completion; only the key columns are returned, so the result is the
     distinct key set regardless of which arrival was kept."""
-    from emiproc_spark.streaming.streams import dedup_stream
+    from emiproc_spark.streaming.streams import dedup_stream, run_available_now
 
     src = _stream_events_dir(spark, sf_dir)
     stream = spark.readStream.schema(
@@ -456,13 +453,16 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropDuplicatesWithinWatermark emits every kept row in the DATA
     # batch that delivered it; the trailing no-data batch only evicts
     # expired state (emits nothing), so skip it — one stateful-stage
-    # execution saved, result rows identical
-    return _run_stream(out, "r3b_stream_dedup", "append", no_data_batches=False)
+    # execution saved.  tests/test_streaming_no_data_batches.py runs
+    # this query under both settings and asserts equal frames.
+    return run_available_now(out, "r3b_stream_dedup", "append", no_data_batches=False)
 
 
 SQL_STREAM_DEDUP = """
     SELECT DISTINCT user_id, event_type FROM events
 """
+
+query(q_stream_dedup, SQL_STREAM_DEDUP)
 
 
 # ======================================================================
@@ -512,7 +512,13 @@ SQL_PROFILES_YAML = """
     FROM range(7) p(pos)
 """
 
+try:  # pyyaml is an optional dependency (pyproject [yaml]/[dev]); the
+    # registry must import cleanly without it
+    import yaml as _yaml  # noqa: F401
 
+    query(q_profiles_yaml, SQL_PROFILES_YAML)
+except ImportError:  # pragma: no cover
+    pass
 
 
 # ======================================================================
@@ -544,40 +550,5 @@ def _sql_dedup_representative() -> str:
     """
 
 
-# ======================================================================
-# registry
-# ======================================================================
-QUERIES_R3B: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "speciate_country": q_speciate_country,
-    "icon_mesh": q_icon_mesh,
-    "profile_da": q_profile_da,
-    "days_in_year": q_days_in_year,
-    "totals_equal": q_totals_equal,
-    "knn_classify": q_knn_classify,
-    "stream_window_stats": q_stream_window_stats,
-    "stream_dedup": q_stream_dedup,
-    "dedup_representative": q_dedup_representative,
-}
+query(q_dedup_representative, _sql_dedup_representative())
 
-try:  # pyyaml is an optional dependency (pyproject [yaml]/[dev]); the
-    # registry must import cleanly without it
-    import yaml as _yaml  # noqa: F401
-
-    QUERIES_R3B["profiles_yaml"] = q_profiles_yaml
-except ImportError:  # pragma: no cover
-    pass
-
-ORACLES_R3B: dict[str, str] = {
-    "speciate_country": SQL_SPECIATE_COUNTRY,
-    "icon_mesh": SQL_ICON_MESH,
-    "profile_da": SQL_PROFILE_DA,
-    "days_in_year": SQL_DAYS_IN_YEAR,
-    "totals_equal": SQL_TOTALS_EQUAL,
-    "knn_classify": SQL_KNN_CLASSIFY,
-    "stream_window_stats": SQL_STREAM_WINDOW_STATS,
-    "stream_dedup": SQL_STREAM_DEDUP,
-    "dedup_representative": _sql_dedup_representative(),
-}
-
-if "profiles_yaml" in QUERIES_R3B:
-    ORACLES_R3B["profiles_yaml"] = SQL_PROFILES_YAML

@@ -7,7 +7,6 @@ returns a DataFrame whose row multiset a DuckDB oracle reproduces.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -16,6 +15,7 @@ from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
 
 from emiproc_spark.qhelpers import qd, sql_qd
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -114,6 +114,8 @@ SQL_EDGAR_PROFILES = """
     FROM (SELECT * FROM wk UNION ALL SELECT * FROM hp)
 """.format(qd=sql_qd("ratio"))
 
+query(q_edgar_profiles, SQL_EDGAR_PROFILES)
+
 
 # ======================================================================
 # doc_chunks — overlapping token-window chunking (RAG indexing prep)
@@ -139,6 +141,8 @@ SQL_DOC_CHUNKS = """
                AS chunk_text
     FROM toks, UNNEST(generate_series(0, len(arr) - 1, 24)) AS s(i)
 """
+
+query(q_doc_chunks, SQL_DOC_CHUNKS)
 
 
 # ======================================================================
@@ -174,6 +178,8 @@ SQL_UNIGRAM_LOGPROB = """
     )
 )
 
+query(q_unigram_logprob, SQL_UNIGRAM_LOGPROB)
+
 
 # ======================================================================
 # length_percentiles — exact corpus token-count percentiles via the
@@ -199,6 +205,8 @@ SQL_LENGTH_PERCENTILES = """
         UNION ALL SELECT 0.99, quantile_cont(n, 0.99) FROM lens
     )
 """.format(qd=sql_qd("v"))
+
+query(q_length_percentiles, SQL_LENGTH_PERCENTILES)
 
 
 # ======================================================================
@@ -243,6 +251,8 @@ _WINNOW_FP_TMPL = """
 
 SQL_WINNOW_FP = _WINNOW_FP_TMPL.format(docs="SELECT doc_id, text FROM documents")
 
+query(q_winnow_fp, SQL_WINNOW_FP)
+
 
 # ======================================================================
 # winnow_overlap — MOSS overlap pairs over shared fingerprints
@@ -272,6 +282,9 @@ def _sql_winnow_overlap() -> str:
     FROM j a JOIN j b ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
     GROUP BY 1, 2 HAVING COUNT(*) >= 2
     """
+
+
+query(q_winnow_overlap, _sql_winnow_overlap())
 
 
 # ======================================================================
@@ -313,6 +326,8 @@ SQL_QUALITY_FILTER = """
     SELECT doc_id, lang, source, reason, reason = 'ok' AS keep FROM r
 """
 
+query(q_quality_filter, SQL_QUALITY_FILTER)
+
 
 # ======================================================================
 # netcdf4_ingest — raster export → re-ingest through the NetCDF-4/HDF5
@@ -341,6 +356,9 @@ def _sql_netcdf4_ingest() -> str:
     from emiproc_spark.driver_queries_io import SQL_NETCDF_INGEST
 
     return SQL_NETCDF_INGEST
+
+
+query(q_netcdf4_ingest, _sql_netcdf4_ingest())
 
 
 # ======================================================================
@@ -422,6 +440,9 @@ def _sql_decon_spans() -> str:
     """
 
 
+query(q_decon_spans, _sql_decon_spans())
+
+
 # ======================================================================
 # temporal_expand_cell — annual→hourly with CELL-keyed profiles (the
 # post-country_to_cells path the dimension-indexed expansion rejects)
@@ -501,6 +522,9 @@ def _sql_temporal_expand_cell() -> str:
     """
 
 
+query(q_temporal_expand_cell, _sql_temporal_expand_cell())
+
+
 # ======================================================================
 # stream_sessionize — the custom STATEFUL streaming operator
 # (applyInPandasWithState gap sessionizer) run as a real Structured
@@ -517,9 +541,8 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sentinel-only sessions stay open and are filtered by timestamp, so
     the emitted set is exactly the batch sessionization."""
     from emiproc_spark import fixtures as fx
-    from emiproc_spark.driver_queries_r3b import _run_stream
     from emiproc_spark.qhelpers import QSCALE
-    from emiproc_spark.streaming.streams import sessionize_stream
+    from emiproc_spark.streaming.streams import run_available_now, sessionize_stream
 
     # whole-millisecond stamps: the stateful operator compares gaps at
     # ms resolution while the oracle compares µs — truncating aligns
@@ -571,8 +594,10 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final watermark (sentinel−1min), so the trailing no-data
     # batch provably emits nothing — skip it (it cost a full stateful
     # stage: 32 state store reloads + commits for zero output rows).
-    # The session_start <= cutoff filter below still guards leakage.
-    res = _run_stream(
+    # tests/test_streaming_no_data_batches.py runs this query under both
+    # settings and asserts equal frames.  The session_start <= cutoff
+    # filter below still guards leakage.
+    res = run_available_now(
         out, "r3c_stream_sessionize", "append", no_data_batches=False
     )
     # drop any sentinel-session leakage (a trailing timeout batch)
@@ -614,6 +639,8 @@ SQL_STREAM_SESSIONIZE = f"""
     FROM s GROUP BY user_id, sid
 """
 
+query(q_stream_sessionize, SQL_STREAM_SESSIONIZE)
+
 
 # ======================================================================
 # stream_neardup — the stateful streaming MinHash-LSH pair detector
@@ -627,23 +654,19 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs each (sorted) arrival against the ≤ max_bucket remembered
     members, i.e. pair (a, b) with a < b is emitted iff rank(a) within
     its bucket ≤ max_bucket — exactly the oracle's window rule."""
-    import uuid
-
     from emiproc_spark.driver_queries_text import _docs2
-    from emiproc_spark.streaming.streams import near_dup_stream
+    from emiproc_spark.streaming.streams import near_dup_stream, run_available_now
 
     d = fx.scratch_dir("emiproc_nd_stream_")
     src = os.path.join(d, "in")
     _docs2(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    from emiproc_spark.streaming.streams import run_available_now
-
     # explicit shard sizing per the operator docstring's rule
     # (max(a few shards per core, buckets/~1000)): the derived
     # default's 4096 floor is a resize-robustness constant ~30x this
     # corpus's bucket count, and every shard present in the single
     # batch costs a Python/Arrow/state round-trip.  The checkpoint is
-    # per-invocation (uuid), so no pin is affected; pair results are
+    # per-invocation, so no pin is affected; pair results are
     # shard-layout independent (the resume oracle proves it).
     n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count() * 2
     n_shards = max(
@@ -662,10 +685,11 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # last data batch — the old poll-the-sink-then-stop() workaround
     # raced the in-flight cleanup batch's state commit
     # (failedToCommitStateFileError in executor logs).
-    name = f"r3c_stream_neardup_{uuid.uuid4().hex[:8]}"
     # bounded so a no-data-batch regression fails this query instead of
     # stalling the whole driver sweep (r10 advisor)
-    return run_available_now(out, name, "append", no_data_batches=False, timeout=300)
+    return run_available_now(
+        out, "r3c_stream_neardup", "append", no_data_batches=False, timeout=300
+    )
 
 
 def _sql_stream_neardup() -> str:
@@ -698,6 +722,9 @@ def _sql_stream_neardup() -> str:
     JOIN ranked b ON a.bucket = b.bucket AND a.rk < b.rk
     WHERE a.rk <= {_ND_MAX_BUCKET}
     """
+
+
+query(q_stream_neardup, _sql_stream_neardup())
 
 
 # ======================================================================
@@ -758,6 +785,8 @@ SQL_OEM_PROFILES_EXPORT = """
         "((p.pos + CASE WHEN r.r = 0 THEN 1 ELSE 0 END) % 24 + 1) / 300.0 * 24"
     )
 )
+
+query(q_oem_profiles_export, SQL_OEM_PROFILES_EXPORT)
 
 
 # ======================================================================
@@ -824,6 +853,8 @@ SQL_GFED4_INGEST = """
     qd_temf=sql_qd("7800.0 * (lon_i + 1) / 20.0"),
 )
 
+query(q_gfed4_ingest, SQL_GFED4_INGEST)
+
 
 # ======================================================================
 # antimeridian_remap — dateline-straddling ICON triangle remapped from
@@ -877,6 +908,8 @@ SQL_ANTIMERIDIAN_REMAP = """
     ) AS t(src_id, dst_id, weight)
 """
 
+query(q_antimeridian_remap, SQL_ANTIMERIDIAN_REMAP)
+
 
 # ======================================================================
 # temp_mix — temperature-scaled source mixing (p_s ∝ share_s^τ)
@@ -921,43 +954,4 @@ def _sql_temp_mix() -> str:
     """
 
 
-# ======================================================================
-# registry
-# ======================================================================
-QUERIES_R3C: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "edgar_profiles": q_edgar_profiles,
-    "doc_chunks": q_doc_chunks,
-    "unigram_logprob": q_unigram_logprob,
-    "length_percentiles": q_length_percentiles,
-    "winnow_fp": q_winnow_fp,
-    "winnow_overlap": q_winnow_overlap,
-    "quality_filter": q_quality_filter,
-    "temp_mix": q_temp_mix,
-    "decon_spans": q_decon_spans,
-    "netcdf4_ingest": q_netcdf4_ingest,
-    "antimeridian_remap": q_antimeridian_remap,
-    "gfed4_ingest": q_gfed4_ingest,
-    "oem_profiles_export": q_oem_profiles_export,
-    "stream_sessionize": q_stream_sessionize,
-    "stream_neardup": q_stream_neardup,
-    "temporal_expand_cell": q_temporal_expand_cell,
-}
-
-ORACLES_R3C: dict[str, str] = {
-    "edgar_profiles": SQL_EDGAR_PROFILES,
-    "doc_chunks": SQL_DOC_CHUNKS,
-    "unigram_logprob": SQL_UNIGRAM_LOGPROB,
-    "length_percentiles": SQL_LENGTH_PERCENTILES,
-    "winnow_fp": SQL_WINNOW_FP,
-    "winnow_overlap": _sql_winnow_overlap(),
-    "quality_filter": SQL_QUALITY_FILTER,
-    "temp_mix": _sql_temp_mix(),
-    "decon_spans": _sql_decon_spans(),
-    "netcdf4_ingest": _sql_netcdf4_ingest(),
-    "antimeridian_remap": SQL_ANTIMERIDIAN_REMAP,
-    "gfed4_ingest": SQL_GFED4_INGEST,
-    "oem_profiles_export": SQL_OEM_PROFILES_EXPORT,
-    "stream_sessionize": SQL_STREAM_SESSIONIZE,
-    "stream_neardup": _sql_stream_neardup(),
-    "temporal_expand_cell": _sql_temporal_expand_cell(),
-}
+query(q_temp_mix, _sql_temp_mix())

@@ -17,12 +17,13 @@ at the very front of the 50-query sample the driver takes.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emiproc_spark.driver_queries_text import DOCS2_SQL, DOUBLE_OFFSET, SHINGLES_SQL
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -77,6 +78,8 @@ SQL_PNG_CYCLE = f"""
            CAST(SUM(v) AS DOUBLE) / {SIDE * SIDE} AS mean_byte
     FROM px GROUP BY doc_id
 """
+
+query(q_png_cycle, SQL_PNG_CYCLE)
 
 
 # ======================================================================
@@ -142,6 +145,8 @@ SQL_LSH_CAPPED = f"""
         FROM joined WHERE sz > 2 AND doc_id != rep
     )
 """
+
+query(q_lsh_capped, SQL_LSH_CAPPED)
 
 
 # ======================================================================
@@ -222,14 +227,4 @@ SQL_BOILERPLATE_STRIP = """
     LEFT JOIN clean ON clean.doc_id = d.doc_id
 """
 
-
-QUERIES_R4: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "png_cycle": q_png_cycle,
-    "lsh_capped": q_lsh_capped,
-    "boilerplate_strip": q_boilerplate_strip,
-}
-ORACLES_R4: dict[str, str] = {
-    "png_cycle": SQL_PNG_CYCLE,
-    "lsh_capped": SQL_LSH_CAPPED,
-    "boilerplate_strip": SQL_BOILERPLATE_STRIP,
-}
+query(q_boilerplate_strip, SQL_BOILERPLATE_STRIP)

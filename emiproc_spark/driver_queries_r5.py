@@ -33,7 +33,7 @@ that previously rested on unit tests only.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +43,7 @@ from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
 
 from emiproc_spark.qhelpers import qd, sql_qd
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -103,6 +104,8 @@ SQL_PROFILE_INDEX_WILDCARD = """
     FROM f, range(24) h(h)
 """
 
+query(q_profile_index_wildcard, SQL_PROFILE_INDEX_WILDCARD)
+
 
 # ======================================================================
 # specific_days — ensure_specific_days_consistency (temporal/utils.py:36-97)
@@ -156,6 +159,8 @@ SQL_SPECIFIC_DAYS = f"""
     FROM base, range(3) k(k)
 """
 
+query(q_specific_days, SQL_SPECIFIC_DAYS)
+
 
 # ======================================================================
 # profile_validity — check_valid_profiles (profiles/utils.py:54-92)
@@ -188,6 +193,9 @@ def _sql_profile_validity() -> str:
         FROM (VALUES {vals}) t(profile_id, a, b, c)
         WHERE a < 0 OR b < 0 OR c < 0 OR ABS(a + b + c - 1.0) > 1e-6
     """
+
+
+query(q_profile_validity, _sql_profile_validity())
 
 
 # ======================================================================
@@ -262,6 +270,8 @@ SQL_GPKG_LINES = f"""
            {sql_qd(f"(10.0 * (n_nationkey + 1) + 2 * {_LINE_WIDTH}) * 2 * {_LINE_WIDTH}")} AS area
     FROM nation
 """
+
+query(q_gpkg_lines, SQL_GPKG_LINES)
 
 
 # ======================================================================
@@ -357,6 +367,9 @@ def _sql_cf_attrs() -> str:
     """
 
 
+query(q_cf_attrs, _sql_cf_attrs())
+
+
 # ======================================================================
 # url_dedup — canonical-URL dedup (beyond reference: crawl-pipeline op).
 # Four surface forms per page, each exercising different rules; the
@@ -413,6 +426,8 @@ SQL_URL_DEDUP = """
     FROM canon GROUP BY canon_url
 """
 
+query(q_url_dedup, SQL_URL_DEDUP)
+
 
 # ======================================================================
 # diversity_sample — one representative per hyperplane-LSH bucket (the
@@ -437,6 +452,9 @@ def _sql_diversity_sample() -> str:
         SELECT bucket, MIN(vec_id) AS keeper, COUNT(*) AS n_members
         FROM ({SQL_ANN_LSH_BUCKETS}) GROUP BY bucket
     """
+
+
+query(q_diversity_sample, _sql_diversity_sample())
 
 
 # ======================================================================
@@ -477,6 +495,8 @@ SQL_SPECIFIC_DAY_SF = f"""
            )} AS sf
     FROM range(168) t(h)
 """
+
+query(q_specific_day_sf, SQL_SPECIFIC_DAY_SF)
 
 
 # ======================================================================
@@ -572,29 +592,4 @@ def _sql_ann_multiprobe() -> str:
     """
 
 
-# ======================================================================
-# registry
-# ======================================================================
-QUERIES_R5: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "profile_index_wildcard": q_profile_index_wildcard,
-    "specific_days": q_specific_days,
-    "profile_validity": q_profile_validity,
-    "gpkg_lines": q_gpkg_lines,
-    "cf_attrs": q_cf_attrs,
-    "url_dedup": q_url_dedup,
-    "diversity_sample": q_diversity_sample,
-    "specific_day_sf": q_specific_day_sf,
-    "ann_multiprobe": q_ann_multiprobe,
-}
-
-ORACLES_R5: dict[str, str] = {
-    "profile_index_wildcard": SQL_PROFILE_INDEX_WILDCARD,
-    "specific_days": SQL_SPECIFIC_DAYS,
-    "profile_validity": _sql_profile_validity(),
-    "gpkg_lines": SQL_GPKG_LINES,
-    "cf_attrs": _sql_cf_attrs(),
-    "url_dedup": SQL_URL_DEDUP,
-    "diversity_sample": _sql_diversity_sample(),
-    "specific_day_sf": SQL_SPECIFIC_DAY_SF,
-    "ann_multiprobe": _sql_ann_multiprobe(),
-}
+query(q_ann_multiprobe, _sql_ann_multiprobe())

@@ -26,14 +26,13 @@ operators added this round.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emiproc_spark.localdf import local_rows_df
 from emiproc_spark import fixtures as fx
 from emiproc_spark.driver_queries_text import DOCS2_SQL, DOUBLE_OFFSET, SQL_MINHASH_LSH, _docs2
+from emiproc_spark.registry import query
 
 NS_PER_MIN = 60 * 1_000_000_000
 
@@ -81,6 +80,8 @@ SQL_ASOF_JOIN = f"""
     FROM c ASOF LEFT JOIN v ON c.user_id = v.user_id AND c.ts >= v.ts
 """
 
+query(q_asof_join, SQL_ASOF_JOIN)
+
 
 # ======================================================================
 # range_join — interval overlap via bucket explode (operators/joins.py)
@@ -127,6 +128,8 @@ SQL_RANGE_JOIN = f"""
                  AND e.start_ < c.end_ AND c.start_ < e.end_
 """
 
+query(q_range_join, SQL_RANGE_JOIN)
+
 
 # ======================================================================
 # points_in_windows — point-in-interval join (operators/joins.py)
@@ -166,6 +169,8 @@ SQL_POINTS_IN_WINDOWS = f"""
     GROUP BY v.user_id
 """
 
+query(q_points_in_windows, SQL_POINTS_IN_WINDOWS)
+
 
 # ======================================================================
 # minhash_inc — incremental LSH batch dedup (operators/dedup.py)
@@ -183,6 +188,8 @@ SQL_MINHASH_INC = f"""
     SELECT doc_a, doc_b FROM ({SQL_MINHASH_LSH})
     WHERE doc_a >= {DOUBLE_OFFSET} OR doc_b >= {DOUBLE_OFFSET}
 """
+
+query(q_minhash_inc, SQL_MINHASH_INC)
 
 
 # ======================================================================
@@ -221,6 +228,9 @@ def _sql_bloom_decon() -> str:
     return SQL_DECONTAMINATE
 
 
+query(q_bloom_decon, _sql_bloom_decon())
+
+
 # ======================================================================
 # weighted_sample — Efraimidis–Spirakis weighted top-k (sampling.py)
 # ======================================================================
@@ -254,6 +264,9 @@ def _sql_weighted_sample() -> str:
     """
 
 
+query(q_weighted_sample, _sql_weighted_sample())
+
+
 # ======================================================================
 # stream_asof — stream-stream time-interval join (streaming/streams.py)
 # ======================================================================
@@ -277,8 +290,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from emiproc_spark.driver_queries_r3b import _run_stream
-    from emiproc_spark.streaming.streams import asof_enrich_stream
+    from emiproc_spark.streaming.streams import asof_enrich_stream, run_available_now
 
     if sf_dir in _ASOF_STREAM_DIRS:
         clicks_dir, views_dir = _ASOF_STREAM_DIRS[sf_dir]
@@ -333,7 +345,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        pairs = _run_stream(out, "r5b_stream_asof", "append")
+        pairs = run_available_now(out, "r5b_stream_asof", "append")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
@@ -364,6 +376,8 @@ SQL_STREAM_ASOF = f"""
     GROUP BY c.event_id, c.user_id, c.ts_us
 """
 
+query(q_stream_asof, SQL_STREAM_ASOF)
+
 
 # ======================================================================
 # heavy_hitters — sketch-then-confirm hot keys (operators/hotkeys.py)
@@ -392,6 +406,8 @@ SQL_HEAVY_HITTERS = """
     ORDER BY n DESC, tok
     LIMIT 20
 """
+
+query(q_heavy_hitters, SQL_HEAVY_HITTERS)
 
 
 # ======================================================================
@@ -466,30 +482,4 @@ SQL_WAV_CYCLE = f"""
     GROUP BY s.doc_id
 """
 
-
-# ======================================================================
-# registry
-# ======================================================================
-QUERIES_R5B: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "asof_join": q_asof_join,
-    "range_join": q_range_join,
-    "points_in_windows": q_points_in_windows,
-    "minhash_inc": q_minhash_inc,
-    "bloom_decon": q_bloom_decon,
-    "weighted_sample": q_weighted_sample,
-    "stream_asof": q_stream_asof,
-    "wav_cycle": q_wav_cycle,
-    "heavy_hitters": q_heavy_hitters,
-}
-
-ORACLES_R5B: dict[str, str] = {
-    "asof_join": SQL_ASOF_JOIN,
-    "range_join": SQL_RANGE_JOIN,
-    "points_in_windows": SQL_POINTS_IN_WINDOWS,
-    "minhash_inc": SQL_MINHASH_INC,
-    "bloom_decon": _sql_bloom_decon(),
-    "weighted_sample": _sql_weighted_sample(),
-    "stream_asof": SQL_STREAM_ASOF,
-    "wav_cycle": SQL_WAV_CYCLE,
-    "heavy_hitters": SQL_HEAVY_HITTERS,
-}
+query(q_wav_cycle, SQL_WAV_CYCLE)

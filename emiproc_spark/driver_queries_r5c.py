@@ -26,13 +26,13 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emiproc_spark import fixtures as fx
 from emiproc_spark.qhelpers import sql_sumd, sumd
+from emiproc_spark.registry import query
 
 # ======================================================================
 # bucketed_join — zero-shuffle co-located join (exports/store.py)
@@ -115,6 +115,8 @@ SQL_BUCKETED_JOIN = f"""
     FROM flow JOIN ret USING (cell_id)
 """
 
+query(q_bucketed_join, SQL_BUCKETED_JOIN)
+
 
 # ======================================================================
 # delta_totals — incremental rollup maintenance (partial-agg merge)
@@ -175,6 +177,8 @@ SQL_DELTA_TOTALS = f"""
     GROUP BY category, substance
 """
 
+query(q_delta_totals, SQL_DELTA_TOTALS)
+
 
 # ======================================================================
 # frame_sample — video-column plumbing (operators/multimodal.py:110)
@@ -212,6 +216,8 @@ SQL_FRAME_SAMPLE = f"""
     FROM (SELECT doc_id FROM documents WHERE doc_id < 400) d,
          UNNEST(range(0, d.doc_id * 13 % 256 + 40, {FRAME_STEP})) AS t(v)
 """
+
+query(q_frame_sample, SQL_FRAME_SAMPLE)
 
 
 # ======================================================================
@@ -258,6 +264,8 @@ def _sql_table_profile() -> str:
 
 SQL_TABLE_PROFILE = _sql_table_profile()
 
+query(q_table_profile, SQL_TABLE_PROFILE)
+
 
 # ======================================================================
 # int8_topk — quantized similarity search (operators/similarity.py)
@@ -301,6 +309,8 @@ SQL_INT8_TOPK = f"""
     LIMIT {INT8_K}
 """
 
+query(q_int8_topk, SQL_INT8_TOPK)
+
 
 # ======================================================================
 # fuzzy_join — edit-distance-1 key matching (operators/dedup.py)
@@ -337,6 +347,8 @@ SQL_FUZZY_JOIN = f"""
     FROM p a JOIN p b
       ON a.doc_id < b.doc_id AND levenshtein(a.k, b.k) <= 1
 """
+
+query(q_fuzzy_join, SQL_FUZZY_JOIN)
 
 
 # ======================================================================
@@ -399,6 +411,8 @@ SQL_INTERVAL_ISLANDS = f"""
     FROM g GROUP BY user_id
 """
 
+query(q_interval_islands, SQL_INTERVAL_ISLANDS)
+
 
 # ======================================================================
 # image_resize — decode → nearest-neighbor resize → stats (multimodal)
@@ -450,6 +464,8 @@ SQL_IMAGE_RESIZE = f"""
     FROM px GROUP BY doc_id
 """
 
+query(q_image_resize, SQL_IMAGE_RESIZE)
+
 
 # ======================================================================
 # stream_heavy — streaming Misra-Gries + exact confirm (streams.py)
@@ -472,8 +488,7 @@ def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from emiproc_spark.driver_queries_r3b import _run_stream
-    from emiproc_spark.streaming.streams import heavy_hitters_stream
+    from emiproc_spark.streaming.streams import heavy_hitters_stream, run_available_now
 
     if sf_dir not in _HH_STREAM_DIRS:
         d = os.path.join(fx.scratch_dir("emiproc_hh_stream_"), "in")
@@ -511,7 +526,7 @@ def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        res = _run_stream(sketches, "r5c_stream_hh", "update")
+        res = run_available_now(sketches, "r5c_stream_hh", "update")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -537,6 +552,8 @@ SQL_STREAM_HEAVY = f"""
     ORDER BY n DESC, user_id
     LIMIT {STREAM_HH_K}
 """
+
+query(q_stream_heavy, SQL_STREAM_HEAVY)
 
 
 # ======================================================================
@@ -599,31 +616,4 @@ def _sql_lsh_verified() -> str:
 """
 
 
-# ======================================================================
-# registry
-# ======================================================================
-QUERIES_R5C: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bucketed_join": q_bucketed_join,
-    "delta_totals": q_delta_totals,
-    "frame_sample": q_frame_sample,
-    "table_profile": q_table_profile,
-    "lsh_verified": q_lsh_verified,
-    "stream_heavy": q_stream_heavy,
-    "image_resize": q_image_resize,
-    "interval_islands": q_interval_islands,
-    "fuzzy_join": q_fuzzy_join,
-    "int8_topk": q_int8_topk,
-}
-
-ORACLES_R5C: dict[str, str] = {
-    "image_resize": SQL_IMAGE_RESIZE,
-    "interval_islands": SQL_INTERVAL_ISLANDS,
-    "fuzzy_join": SQL_FUZZY_JOIN,
-    "int8_topk": SQL_INT8_TOPK,
-    "lsh_verified": _sql_lsh_verified(),
-    "stream_heavy": SQL_STREAM_HEAVY,
-    "bucketed_join": SQL_BUCKETED_JOIN,
-    "delta_totals": SQL_DELTA_TOTALS,
-    "frame_sample": SQL_FRAME_SAMPLE,
-    "table_profile": SQL_TABLE_PROFILE,
-}
+query(q_lsh_verified, _sql_lsh_verified())

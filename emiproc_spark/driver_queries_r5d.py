@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +33,7 @@ from pyspark.sql import functions as F
 from emiproc_spark import fixtures as fx
 from emiproc_spark.operators.layout import zorder_key_sql
 from emiproc_spark.qhelpers import sql_sumd, sumd, sql_floor_div
+from emiproc_spark.registry import query
 
 # ======================================================================
 # scd2_history — changelog → SCD2 versions (operators/history.py)
@@ -78,6 +78,8 @@ SQL_SCD2_HISTORY = """
     FROM v
     WINDOW w2 AS (PARTITION BY user_id ORDER BY tsn, event_id)
 """
+
+query(q_scd2_history, SQL_SCD2_HISTORY)
 
 
 # ======================================================================
@@ -142,6 +144,8 @@ SQL_RESAMPLE_LOCF = f"""
     FROM j
 """
 
+query(q_resample_locf, SQL_RESAMPLE_LOCF)
+
 
 # ======================================================================
 # zorder_layout — Morton tiles (operators/layout.py)
@@ -177,6 +181,8 @@ SQL_ZORDER_LAYOUT = f"""
     FROM k GROUP BY 1
 """
 
+query(q_zorder_layout, SQL_ZORDER_LAYOUT)
+
 
 # ======================================================================
 # salted_join — skew-safe join parity (operators/joins.py)
@@ -209,6 +215,8 @@ SQL_SALTED_JOIN = f"""
     FROM orders JOIN customer ON c_custkey = o_custkey
     GROUP BY c_mktsegment
 """
+
+query(q_salted_join, SQL_SALTED_JOIN)
 
 
 # ======================================================================
@@ -260,22 +268,4 @@ SQL_ORC_PARTITIONED = f"""
     GROUP BY lang
 """
 
-
-# ======================================================================
-# registry
-# ======================================================================
-QUERIES_R5D: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "scd2_history": q_scd2_history,
-    "resample_locf": q_resample_locf,
-    "zorder_layout": q_zorder_layout,
-    "salted_join": q_salted_join,
-    "orc_partitioned": q_orc_partitioned,
-}
-
-ORACLES_R5D: dict[str, str] = {
-    "scd2_history": SQL_SCD2_HISTORY,
-    "resample_locf": SQL_RESAMPLE_LOCF,
-    "zorder_layout": SQL_ZORDER_LAYOUT,
-    "salted_join": SQL_SALTED_JOIN,
-    "orc_partitioned": SQL_ORC_PARTITIONED,
-}
+query(q_orc_partitioned, SQL_ORC_PARTITIONED)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from emiproc_spark import fixtures as fx
 from emiproc_spark.driver_queries_text import DIM, _dotq, sql_dotq
 from emiproc_spark.qhelpers import sql_qd, sql_floor_div
+from emiproc_spark.registry import query
 
 # ======================================================================
 # funnel — ordered event funnel (operators/behavior.py)
@@ -73,6 +74,8 @@ SQL_FUNNEL = """
     SELECT CAST(3 AS INT), 'purchase', c3 FROM c
 """
 
+query(q_funnel, SQL_FUNNEL)
+
 
 # ======================================================================
 # cohort_retention — weekly cohorts (operators/behavior.py)
@@ -102,6 +105,8 @@ SQL_COHORT_RETENTION = f"""
            COUNT(*) AS active_users
     FROM a GROUP BY cohort_period, period - cohort_period
 """
+
+query(q_cohort_retention, SQL_COHORT_RETENTION)
 
 
 # ======================================================================
@@ -156,6 +161,8 @@ SQL_KMV_DISTINCT = f"""
            )} AS kmv_estimate
     FROM k
 """
+
+query(q_kmv_distinct, SQL_KMV_DISTINCT)
 
 
 # ======================================================================
@@ -269,6 +276,8 @@ SQL_SEMDEDUP = f"""
     FROM assigned a LEFT JOIN dups d ON a.vec_id = d.vec_id
 """
 
+query(q_semdedup, SQL_SEMDEDUP)
+
 
 # ======================================================================
 # dup_spans — maximal duplicated sliding-shingle spans
@@ -325,19 +334,4 @@ SQL_DUP_SPANS = f"""
     FROM i GROUP BY doc_id, island
 """
 
-
-QUERIES_R5E = {
-    "funnel": q_funnel,
-    "cohort_retention": q_cohort_retention,
-    "kmv_distinct": q_kmv_distinct,
-    "semdedup": q_semdedup,
-    "dup_spans": q_dup_spans,
-}
-
-ORACLES_R5E = {
-    "funnel": SQL_FUNNEL,
-    "cohort_retention": SQL_COHORT_RETENTION,
-    "kmv_distinct": SQL_KMV_DISTINCT,
-    "semdedup": SQL_SEMDEDUP,
-    "dup_spans": SQL_DUP_SPANS,
-}
+query(q_dup_spans, SQL_DUP_SPANS)

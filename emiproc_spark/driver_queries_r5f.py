@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from emiproc_spark import fixtures as fx
 from emiproc_spark.driver_queries_text import DOCS2_SQL, SHINGLES_SQL, _docs2
 from emiproc_spark.qhelpers import qd
+from emiproc_spark.registry import query
 
 # ======================================================================
 # bm25_topk — Okapi BM25 retrieval (operators/retrieval.py)
@@ -81,6 +82,8 @@ SQL_BM25_TOPK = f"""
     )
     SELECT doc_id, score FROM per ORDER BY score DESC, doc_id LIMIT {_BM25_K}
 """
+
+query(q_bm25_topk, SQL_BM25_TOPK)
 
 
 # ======================================================================
@@ -154,6 +157,8 @@ def _sql_pagerank() -> str:
 
 
 SQL_PAGERANK = _sql_pagerank()
+
+query(q_pagerank, SQL_PAGERANK)
 
 
 # ======================================================================
@@ -259,15 +264,4 @@ SQL_MINHASH_EST = f"""
     JOIN sizes zb ON zb.doc_id = g.doc_b
 """
 
-
-QUERIES_R5F = {
-    "bm25_topk": q_bm25_topk,
-    "pagerank": q_pagerank,
-    "minhash_est": q_minhash_est,
-}
-
-ORACLES_R5F = {
-    "bm25_topk": SQL_BM25_TOPK,
-    "pagerank": SQL_PAGERANK,
-    "minhash_est": SQL_MINHASH_EST,
-}
+query(q_minhash_est, SQL_MINHASH_EST)

@@ -25,6 +25,7 @@ from emiproc_spark import fixtures as fx
 from emiproc_spark.driver_queries_r3c import SQL_UNIGRAM_LOGPROB
 from emiproc_spark.driver_queries_r5e import _SPAN_N, DUP_SPAN_CTES
 from emiproc_spark.qhelpers import qd
+from emiproc_spark.registry import query
 
 # ======================================================================
 # ppl_buckets — per-language quality quartiles (operators/text.py)
@@ -59,6 +60,8 @@ SQL_PPL_BUCKETS = f"""
     FROM b GROUP BY lang, bucket
 """
 
+query(q_ppl_buckets, SQL_PPL_BUCKETS)
+
 
 # ======================================================================
 # dup_fraction — duplicated-token budget (operators/dedup.py)
@@ -90,6 +93,8 @@ SQL_DUP_FRACTION = f"""
            COALESCE(a.dup_tokens / l.n_tokens, 0.0) AS dup_frac
     FROM lens l LEFT JOIN agg a USING (doc_id)
 """
+
+query(q_dup_fraction, SQL_DUP_FRACTION)
 
 
 # ======================================================================
@@ -126,15 +131,4 @@ SQL_JSONL_ROUNDTRIP = """
     FROM documents
 """
 
-
-QUERIES_R5G = {
-    "ppl_buckets": q_ppl_buckets,
-    "dup_fraction": q_dup_fraction,
-    "jsonl_roundtrip": q_jsonl_roundtrip,
-}
-
-ORACLES_R5G = {
-    "ppl_buckets": SQL_PPL_BUCKETS,
-    "dup_fraction": SQL_DUP_FRACTION,
-    "jsonl_roundtrip": SQL_JSONL_ROUNDTRIP,
-}
+query(q_jsonl_roundtrip, SQL_JSONL_ROUNDTRIP)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from emiproc_spark import fixtures as fx
 from emiproc_spark.qhelpers import sql_floor_div
+from emiproc_spark.registry import query
 
 _FUNNEL_STEPS = ["view", "click", "purchase"]
 
@@ -45,8 +46,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     global max timestamp, which emits that user's final funnel row.
     Timestamps ride at µs resolution end-to-end, so the oracle's
     epoch_ns // 1000 matches exactly."""
-    from emiproc_spark.driver_queries_r3b import _run_stream
-    from emiproc_spark.streaming.streams import funnel_stream
+    from emiproc_spark.streaming.streams import funnel_stream, run_available_now
 
     ev = (
         fx.events(spark, sf_dir)
@@ -83,7 +83,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocations saved vs one extra count job) and reverted; the
     # derived 1024 floor stands.
     out = funnel_stream(stream, _FUNNEL_STEPS)
-    res = _run_stream(out, "r5h_stream_funnel", "append")
+    res = run_available_now(out, "r5h_stream_funnel", "append")
     return res.select(
         "user_id",
         F.unix_micros("step1_ts").alias("step1_us"),
@@ -118,14 +118,7 @@ SQL_STREAM_FUNNEL = """
     FROM w3 GROUP BY user_id
 """
 
-
-QUERIES_R5H = {
-    "stream_funnel": q_stream_funnel,
-}
-
-ORACLES_R5H = {
-    "stream_funnel": SQL_STREAM_FUNNEL,
-}
+query(q_stream_funnel, SQL_STREAM_FUNNEL)
 
 
 # ======================================================================
@@ -178,8 +171,7 @@ SQL_VALUE_OUTLIERS = f"""
     FROM z GROUP BY event_type, n
 """
 
-QUERIES_R5H["value_outliers"] = q_value_outliers
-ORACLES_R5H["value_outliers"] = SQL_VALUE_OUTLIERS
+query(q_value_outliers, SQL_VALUE_OUTLIERS)
 
 
 # ======================================================================
@@ -234,8 +226,7 @@ def _sql_dedup_best() -> str:
 """
 
 
-QUERIES_R5H["dedup_best"] = q_dedup_best
-ORACLES_R5H["dedup_best"] = _sql_dedup_best()
+query(q_dedup_best, _sql_dedup_best())
 
 
 # ======================================================================
@@ -269,8 +260,7 @@ SQL_ROLLING_FEATURES = f"""
     )
 """
 
-QUERIES_R5H["rolling_features"] = q_rolling_features
-ORACLES_R5H["rolling_features"] = SQL_ROLLING_FEATURES
+query(q_rolling_features, SQL_ROLLING_FEATURES)
 
 
 # ======================================================================
@@ -303,8 +293,7 @@ SQL_ACTIVE_USERS = f"""
     FROM e GROUP BY period
 """
 
-QUERIES_R5H["active_users"] = q_active_users
-ORACLES_R5H["active_users"] = SQL_ACTIVE_USERS
+query(q_active_users, SQL_ACTIVE_USERS)
 
 
 # ======================================================================
@@ -339,8 +328,7 @@ def _sql_group_quantiles() -> str:
 """
 
 
-QUERIES_R5H["group_quantiles"] = q_group_quantiles
-ORACLES_R5H["group_quantiles"] = _sql_group_quantiles()
+query(q_group_quantiles, _sql_group_quantiles())
 
 
 # ======================================================================
@@ -387,8 +375,7 @@ def _sql_lsh_quality() -> str:
 """
 
 
-QUERIES_R5H["lsh_quality"] = q_lsh_quality
-ORACLES_R5H["lsh_quality"] = _sql_lsh_quality()
+query(q_lsh_quality, _sql_lsh_quality())
 
 
 # ======================================================================
@@ -445,8 +432,7 @@ def _sql_bigram_logprob() -> str:
 """
 
 
-QUERIES_R5H["bigram_logprob"] = q_bigram_logprob
-ORACLES_R5H["bigram_logprob"] = _sql_bigram_logprob()
+query(q_bigram_logprob, _sql_bigram_logprob())
 
 
 # ======================================================================
@@ -500,8 +486,7 @@ def _sql_nation_topk() -> str:
 """
 
 
-QUERIES_R5H["nation_topk"] = q_nation_topk
-ORACLES_R5H["nation_topk"] = _sql_nation_topk()
+query(q_nation_topk, _sql_nation_topk())
 
 
 # ======================================================================
@@ -585,8 +570,7 @@ def _sql_ivf_store_probe() -> str:
     return SQL_IVF_TOPK
 
 
-QUERIES_R5H["ivf_store_probe"] = q_ivf_store_probe
-ORACLES_R5H["ivf_store_probe"] = _sql_ivf_store_probe()
+query(q_ivf_store_probe, _sql_ivf_store_probe())
 
 
 # ======================================================================
@@ -615,8 +599,7 @@ def q_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(SQL_API_STMT)
 
 
-QUERIES_R5H["sql_api"] = q_sql_api
-ORACLES_R5H["sql_api"] = SQL_API_STMT
+query(q_sql_api, SQL_API_STMT)
 
 
 # ======================================================================
@@ -652,5 +635,4 @@ def _sql_data_split() -> str:
 """
 
 
-QUERIES_R5H["data_split"] = q_data_split
-ORACLES_R5H["data_split"] = _sql_data_split()
+query(q_data_split, _sql_data_split())

@@ -33,8 +33,6 @@ randomness, integer/µ quantization, deterministic tie-breaks.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,9 +49,7 @@ from emiproc_spark.driver_queries_text import (
 )
 from emiproc_spark.operators.sampling import sql_hash_fraction
 from emiproc_spark.qhelpers import qd, sql_qd, sql_floor_div
-
-QUERIES_R6: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_R6: dict[str, str] = {}
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -229,8 +225,7 @@ SQL_ANN_RECALL = f"""
     FROM top GROUP BY qid
 """
 
-QUERIES_R6["ann_recall"] = q_ann_recall
-ORACLES_R6["ann_recall"] = SQL_ANN_RECALL
+query(q_ann_recall, SQL_ANN_RECALL)
 
 
 # ======================================================================
@@ -453,8 +448,7 @@ SQL_CURATE_CORPUS = f"""{SQL_CURATE_CLEAN_CTES},
     FROM o
 """
 
-QUERIES_R6["curate_corpus"] = q_curate_corpus
-ORACLES_R6["curate_corpus"] = SQL_CURATE_CORPUS
+query(q_curate_corpus, SQL_CURATE_CORPUS)
 
 
 # ======================================================================
@@ -513,8 +507,7 @@ SQL_CDC_MERGE = """
     SELECT user_id, event_type, value FROM latest WHERE op <> 'delete'
 """
 
-QUERIES_R6["cdc_merge"] = q_cdc_merge
-ORACLES_R6["cdc_merge"] = SQL_CDC_MERGE
+query(q_cdc_merge, SQL_CDC_MERGE)
 
 
 # ======================================================================
@@ -585,8 +578,7 @@ SQL_RESAMPLE_INTERP = f"""
     FROM w
 """
 
-QUERIES_R6["resample_interp"] = q_resample_interp
-ORACLES_R6["resample_interp"] = SQL_RESAMPLE_INTERP
+query(q_resample_interp, SQL_RESAMPLE_INTERP)
 
 
 # ======================================================================
@@ -617,8 +609,7 @@ def _sql_phrase_search() -> str:
 """
 
 
-QUERIES_R6["phrase_search"] = q_phrase_search
-ORACLES_R6["phrase_search"] = _sql_phrase_search()
+query(q_phrase_search, _sql_phrase_search())
 
 
 # ======================================================================
@@ -687,8 +678,7 @@ def _sql_split_leakage() -> str:
 """
 
 
-QUERIES_R6["split_leakage"] = q_split_leakage
-ORACLES_R6["split_leakage"] = _sql_split_leakage()
+query(q_split_leakage, _sql_split_leakage())
 
 
 # ======================================================================
@@ -763,8 +753,7 @@ SQL_KMEANS_TOPICS = f"""
     FROM a2 GROUP BY cluster
 """
 
-QUERIES_R6["kmeans_topics"] = q_kmeans_topics
-ORACLES_R6["kmeans_topics"] = SQL_KMEANS_TOPICS
+query(q_kmeans_topics, SQL_KMEANS_TOPICS)
 
 
 # ======================================================================
@@ -780,8 +769,7 @@ _CDC_STREAM_DIRS: dict[str, str] = {}
 def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from emiproc_spark.driver_queries_r3b import _run_stream
-    from emiproc_spark.streaming.streams import changelog_state_stream
+    from emiproc_spark.streaming.streams import changelog_state_stream, run_available_now
 
     d = _CDC_STREAM_DIRS.get(sf_dir)
     if d is None or not os.path.isdir(d):
@@ -837,7 +825,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        res = _run_stream(out, "r6_stream_cdc", "update")
+        res = run_available_now(out, "r6_stream_cdc", "update")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     w = Window.partitionBy("k")
@@ -870,8 +858,7 @@ SQL_STREAM_CDC = """
     SELECT user_id, event_type, value FROM latest WHERE op <> 'delete'
 """
 
-QUERIES_R6["stream_cdc"] = q_stream_cdc
-ORACLES_R6["stream_cdc"] = SQL_STREAM_CDC
+query(q_stream_cdc, SQL_STREAM_CDC)
 
 
 # ======================================================================
@@ -916,8 +903,7 @@ def _sql_hybrid_search() -> str:
 """
 
 
-QUERIES_R6["hybrid_search"] = q_hybrid_search
-ORACLES_R6["hybrid_search"] = _sql_hybrid_search()
+query(q_hybrid_search, _sql_hybrid_search())
 
 
 # ======================================================================
@@ -979,8 +965,7 @@ SQL_ROBUST_OUTLIERS = f"""
     GROUP BY d.event_type
 """
 
-QUERIES_R6["robust_outliers"] = q_robust_outliers
-ORACLES_R6["robust_outliers"] = SQL_ROBUST_OUTLIERS
+query(q_robust_outliers, SQL_ROBUST_OUTLIERS)
 
 
 # ======================================================================
@@ -1049,8 +1034,7 @@ SQL_EXPECTATIONS = " UNION ALL ".join(
     ]
 )
 
-QUERIES_R6["expectations"] = q_expectations
-ORACLES_R6["expectations"] = SQL_EXPECTATIONS
+query(q_expectations, SQL_EXPECTATIONS)
 
 
 def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,8 +1071,7 @@ SQL_FK_INTEGRITY = """
       ON e.user_id = c.c_custkey
 """
 
-QUERIES_R6["fk_integrity"] = q_fk_integrity
-ORACLES_R6["fk_integrity"] = SQL_FK_INTEGRITY
+query(q_fk_integrity, SQL_FK_INTEGRITY)
 
 
 # ======================================================================
@@ -1129,8 +1112,7 @@ def _sql_setsim_exact() -> str:
 """
 
 
-QUERIES_R6["setsim_exact"] = q_setsim_exact
-ORACLES_R6["setsim_exact"] = _sql_setsim_exact()
+query(q_setsim_exact, _sql_setsim_exact())
 
 
 # ======================================================================
@@ -1167,8 +1149,7 @@ SQL_VOCAB_COVERAGE = f"""
     GROUP BY source
 """
 
-QUERIES_R6["vocab_coverage"] = q_vocab_coverage
-ORACLES_R6["vocab_coverage"] = SQL_VOCAB_COVERAGE
+query(q_vocab_coverage, SQL_VOCAB_COVERAGE)
 
 
 # ======================================================================
@@ -1233,8 +1214,7 @@ SQL_ATTRIBUTION = f"""
     ) c ON TRUE
 """
 
-QUERIES_R6["attribution"] = q_attribution
-ORACLES_R6["attribution"] = SQL_ATTRIBUTION
+query(q_attribution, SQL_ATTRIBUTION)
 
 
 # ======================================================================
@@ -1272,8 +1252,7 @@ def _sql_quantile_quantum() -> str:
 """
 
 
-QUERIES_R6["quantile_quantum"] = q_quantile_quantum
-ORACLES_R6["quantile_quantum"] = _sql_quantile_quantum()
+query(q_quantile_quantum, _sql_quantile_quantum())
 
 
 # ======================================================================
@@ -1390,5 +1369,4 @@ SQL_ZIPF_SLOPE = f"""
     FROM s
 """
 
-QUERIES_R6["zipf_slope"] = q_zipf_slope
-ORACLES_R6["zipf_slope"] = SQL_ZIPF_SLOPE
+query(q_zipf_slope, SQL_ZIPF_SLOPE)

@@ -29,8 +29,6 @@ explicit keys.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,9 +42,7 @@ from emiproc_spark.driver_queries_r6 import (
 )
 from emiproc_spark.operators import regrid as rg
 from emiproc_spark.qhelpers import sql_floor_div, sql_qd, sql_sumd, sumd
-
-QUERIES_R7: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_R7: dict[str, str] = {}
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -96,8 +92,7 @@ SQL_CURATION_GATES = f"""{SQL_CURATE_CLEAN_CTES},
     UNION ALL {_sql_gate_row('n_tokens', 'range', 'v_tok_lo')}
 """
 
-QUERIES_R7["curation_gates"] = q_curation_gates
-ORACLES_R7["curation_gates"] = SQL_CURATION_GATES
+query(q_curation_gates, SQL_CURATION_GATES)
 
 
 # ======================================================================
@@ -175,8 +170,7 @@ SQL_REMAP_GATE = f"""
     {_sql_mass_gate('remap_x2_detected', 't2')}
 """
 
-QUERIES_R7["remap_gate"] = q_remap_gate
-ORACLES_R7["remap_gate"] = SQL_REMAP_GATE
+query(q_remap_gate, SQL_REMAP_GATE)
 
 
 # ======================================================================
@@ -234,8 +228,7 @@ SQL_RATIO_GATE = f"""
     FROM g
 """
 
-QUERIES_R7["ratio_gate"] = q_ratio_gate
-ORACLES_R7["ratio_gate"] = SQL_RATIO_GATE
+query(q_ratio_gate, SQL_RATIO_GATE)
 
 
 # ======================================================================
@@ -317,8 +310,7 @@ SQL_RESAMPLE_NULLS = f"""
     FROM w
 """
 
-QUERIES_R7["resample_nulls"] = q_resample_nulls
-ORACLES_R7["resample_nulls"] = SQL_RESAMPLE_NULLS
+query(q_resample_nulls, SQL_RESAMPLE_NULLS)
 
 
 # ======================================================================
@@ -379,8 +371,7 @@ def _sql_psi_drift() -> str:
 """
 
 
-QUERIES_R7["psi_drift"] = q_psi_drift
-ORACLES_R7["psi_drift"] = _sql_psi_drift()
+query(q_psi_drift, _sql_psi_drift())
 
 
 # ======================================================================
@@ -483,8 +474,7 @@ def _sql_cluster_split() -> str:
 """
 
 
-QUERIES_R7["cluster_split"] = q_cluster_split
-ORACLES_R7["cluster_split"] = _sql_cluster_split()
+query(q_cluster_split, _sql_cluster_split())
 
 
 # ======================================================================
@@ -554,5 +544,4 @@ SQL_DSIR_SAMPLE = f"""
     LIMIT {DSIR_K}
 """
 
-QUERIES_R7["dsir_sample"] = q_dsir_sample
-ORACLES_R7["dsir_sample"] = SQL_DSIR_SAMPLE
+query(q_dsir_sample, SQL_DSIR_SAMPLE)

@@ -14,14 +14,10 @@ are engine-identical, integer-tick quantization, deterministic keys.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
 from emiproc_spark.localdf import local_rows_df
-
-QUERIES_R8: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_R8: dict[str, str] = {}
+from emiproc_spark.registry import query
 
 
 # ======================================================================
@@ -70,8 +66,7 @@ SQL_HOURLY_GATE = """
     FROM g
 """
 
-QUERIES_R8["hourly_gate"] = q_hourly_gate
-ORACLES_R8["hourly_gate"] = SQL_HOURLY_GATE
+query(q_hourly_gate, SQL_HOURLY_GATE)
 
 
 # ======================================================================
@@ -170,8 +165,7 @@ SQL_HARD_NEGATIVES = f"""
     SELECT query_id, doc_id, rank, score FROM ranked WHERE rank <= {_HN_K}
 """
 
-QUERIES_R8["hard_negatives"] = q_hard_negatives
-ORACLES_R8["hard_negatives"] = SQL_HARD_NEGATIVES
+query(q_hard_negatives, SQL_HARD_NEGATIVES)
 
 
 # ======================================================================
@@ -265,5 +259,4 @@ def _sql_mixture_epochs() -> str:
     return SQL_MIXTURE_EPOCHS.format(coin=coin)
 
 
-QUERIES_R8["mixture_epochs"] = q_mixture_epochs
-ORACLES_R8["mixture_epochs"] = _sql_mixture_epochs()
+query(q_mixture_epochs, _sql_mixture_epochs())

@@ -8,8 +8,6 @@ tie-breaks for top-k.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -19,6 +17,7 @@ from emiproc_spark.qhelpers import qd, sql_qd
 from emiproc_spark.operators import dedup as dd
 from emiproc_spark.operators import text as tx
 from emiproc_spark.operators.text import STOPWORDS_SQL
+from emiproc_spark.registry import query
 
 # doubled corpus: every text appears at least twice so dedup operators
 # have guaranteed positives on purely synthetic data
@@ -47,6 +46,8 @@ SQL_DEDUP_EXACT = f"""
     SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS keep_doc_id
     FROM d GROUP BY 1 HAVING COUNT(*) > 1
 """
+
+query(q_dedup_exact, SQL_DEDUP_EXACT)
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,6 +82,8 @@ SQL_TEXT_STATS = f"""
     FROM documents GROUP BY 1, 2
 """
 
+query(q_text_stats, SQL_TEXT_STATS)
+
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fx.load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -98,6 +101,8 @@ SQL_LANG_ID = f"""
     FROM documents
 """
 
+query(q_lang_id, SQL_LANG_ID)
+
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fx.load(spark, sf_dir, "documents")
@@ -114,6 +119,8 @@ SQL_DOC_FINGERPRINT = """
                AS n_distinct_fp
     FROM documents GROUP BY source
 """
+
+query(q_doc_fingerprint, SQL_DOC_FINGERPRINT)
 
 
 # shared shingle CTE (3-gram over single-space tokens, distinct per doc)
@@ -158,6 +165,8 @@ SQL_NGRAM_JACCARD = f"""
     WHERE n_common / CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.5
 """
 
+query(q_ngram_jaccard, SQL_NGRAM_JACCARD)
+
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = dd.minhash_signatures(_docs2(spark, sf_dir), k=8)
@@ -191,6 +200,8 @@ SQL_MINHASH_LSH = f"""
                   AND a.doc_id < b.doc_id
 """
 
+query(q_minhash_lsh, SQL_MINHASH_LSH)
+
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fx.load(spark, sf_dir, "documents").where(F.col("doc_id") < 1000).select(
@@ -221,6 +232,8 @@ SQL_SIMHASH = """
                AS simhash_bits
     FROM votes GROUP BY doc_id
 """
+
+query(q_simhash, SQL_SIMHASH)
 
 
 # ======================================================================
@@ -297,6 +310,8 @@ SQL_ANN_COSINE_TOPK = f"""
     LIMIT 10
 """
 
+query(q_ann_cosine_topk, SQL_ANN_COSINE_TOPK)
+
 
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket assignment (8 deterministic
@@ -352,6 +367,8 @@ SQL_ANN_LSH_BUCKETS = f"""
     FROM dots GROUP BY vec_id
 """
 
+query(q_ann_lsh_buckets, SQL_ANN_LSH_BUCKETS)
+
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload feature extraction through Arrow mapInPandas with
@@ -383,32 +400,7 @@ SQL_MULTIMODAL_FEATURES = """
     FROM codes
 """
 
-
-QUERIES_TEXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_exact": q_dedup_exact,
-    "text_stats": q_text_stats,
-    "lang_id": q_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    "ngram_jaccard": q_ngram_jaccard,
-    "minhash_lsh": q_minhash_lsh,
-    "simhash": q_simhash,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_lsh_buckets": q_ann_lsh_buckets,
-    "multimodal_features": q_multimodal_features,
-}
-
-ORACLES_TEXT: dict[str, str] = {
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "text_stats": SQL_TEXT_STATS,
-    "lang_id": SQL_LANG_ID,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
-    "minhash_lsh": SQL_MINHASH_LSH,
-    "simhash": SQL_SIMHASH,
-    "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-    "ann_lsh_buckets": SQL_ANN_LSH_BUCKETS,
-    "multimodal_features": SQL_MULTIMODAL_FEATURES,
-}
+query(q_multimodal_features, SQL_MULTIMODAL_FEATURES)
 
 
 # ======================================================================
@@ -474,8 +466,7 @@ SQL_EMBEDDING_DUP = f"""
     WHERE dp / (SQRT(na) * SQRT(nb)) >= {EMB_DUP_THRESHOLD}
 """
 
-QUERIES_TEXT["embedding_dup"] = q_embedding_dup
-ORACLES_TEXT["embedding_dup"] = SQL_EMBEDDING_DUP
+query(q_embedding_dup, SQL_EMBEDDING_DUP)
 
 
 # ======================================================================
@@ -628,8 +619,7 @@ SQL_IVF_TOPK = f"""
     LIMIT 10
 """
 
-QUERIES_TEXT["ivf_topk"] = q_ivf_topk
-ORACLES_TEXT["ivf_topk"] = SQL_IVF_TOPK
+query(q_ivf_topk, SQL_IVF_TOPK)
 
 
 # ======================================================================
@@ -654,5 +644,4 @@ SQL_TOKEN_COUNTS = f"""
     FROM documents GROUP BY 1, 2
 """
 
-QUERIES_TEXT["token_counts"] = q_token_counts
-ORACLES_TEXT["token_counts"] = SQL_TOKEN_COUNTS
+query(q_token_counts, SQL_TOKEN_COUNTS)

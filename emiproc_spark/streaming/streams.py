@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import logging
 import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -240,14 +241,23 @@ def run_available_now(
     available source data (``trigger(availableNow=True)`` → memory
     sink) and return the finished result table.
 
+    The memory sink is named ``query_name`` plus a random ``_<8 hex>``
+    suffix, so repeated runs in one session never collide; read the
+    result from the returned frame, not by name.
+
     ``no_data_batches`` maps to Spark's
     ``spark.sql.streaming.noDataMicroBatches.enabled`` for this query
     (saved/restored around ``start()`` — the engine reads it at query
-    start).  Pass ``False`` for operators whose OUTPUT comes only from
-    data batches — the sharded stateful streams here (``near_dup_stream``,
-    ``funnel_stream``, ``changelog_state_stream``): their timers and
-    state maintenance emit nothing, and for ``ProcessingTimeTimeout``
-    state (neardup) the no-data cleanup batches otherwise keep an
+    start).  The rule: pass ``False`` only when every output row is
+    emitted by a DATA batch, so the trailing no-data batches (watermark
+    advance, timeouts, state eviction) add nothing to the result.
+    ``tests/test_streaming_no_data_batches.py`` checks this rule for the
+    ``stream_dedup`` and ``stream_sessionize`` queries by running
+    them under both settings and comparing the frames.  It holds for
+    the sharded stateful streams (``near_dup_stream``,
+    ``funnel_stream``, ``changelog_state_stream``), whose timers and
+    state maintenance emit nothing; for ``ProcessingTimeTimeout`` state
+    (neardup) the no-data cleanup batches would otherwise keep an
     availableNow run alive until the TTL drains — the old workaround
     (poll the sink, then ``stop()``) raced the in-flight cleanup
     batch's state commit and logged a benign-but-alarming
@@ -255,10 +265,10 @@ def run_available_now(
     suppressed the run TERMINATES NATURALLY after the last data batch:
     no ``stop()`` call exists to race.
 
-    Keep the default ``True`` for watermark-driven operators
-    (``dedup_stream``, ``sessionize_stream``, ``windowed_event_stats``
-    in append mode): their FINAL windows/sessions flush in exactly
-    those no-data batches.
+    Keep the default ``True`` whenever a final window or session can
+    only flush when the watermark passes it in a no-data batch (e.g.
+    ``windowed_event_stats`` in append mode, or ``sessionize_stream``
+    without an event that closes each key's last session).
 
     ``timeout`` (seconds) bounds the wait; on expiry the query is
     stopped and a ``TimeoutError`` raised (a ProcessingTimeTimeout
@@ -273,6 +283,7 @@ def run_available_now(
     still observe the temporary value; start those before or after.
     """
     spark = out.sparkSession
+    query_name = f"{query_name}_{uuid.uuid4().hex[:8]}"
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     with _AVAILABLE_NOW_LOCK:
         prev = spark.conf.get(conf_key, None)

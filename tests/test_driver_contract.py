@@ -61,3 +61,63 @@ def test_rotation_front_and_evidence_refill():
     assert list(entrymod.oracle_sql()) == [
         k for k in names if k in entrymod.oracle_sql()
     ]
+
+
+def test_query_registrar_rejects_bad_names_and_duplicates(monkeypatch):
+    """registry.query() keys a query by its function name minus ``q_``,
+    and refuses a function not named ``q_*`` or a name already taken,
+    registering nothing when it refuses."""
+    from emiproc_spark import registry
+
+    monkeypatch.setattr(registry, "QUERIES", {})
+    monkeypatch.setattr(registry, "ORACLES", {})
+
+    def q_demo(spark, sf_dir):
+        return None
+
+    registry.query(q_demo, "SELECT 1")
+    assert registry.QUERIES == {"demo": q_demo}
+    assert registry.ORACLES == {"demo": "SELECT 1"}
+
+    def demo(spark, sf_dir):
+        return None
+
+    def _another_q_demo():
+        def q_demo(spark, sf_dir):
+            return None
+
+        return q_demo
+
+    with pytest.raises(ValueError, match="not named q_"):
+        registry.query(demo, "SELECT 2")
+    with pytest.raises(ValueError, match="already registered"):
+        registry.query(_another_q_demo(), "SELECT 3")
+    assert registry.QUERIES == {"demo": q_demo}
+    assert registry.ORACLES == {"demo": "SELECT 1"}
+
+
+def test_every_q_function_is_registered():
+    """A dropped query() line would silently drop a query from QUERIES:
+    every top-level ``q_*`` function defined in a
+    ``driver_queries*`` module must be in QUERIES, under its own name."""
+    import importlib
+    import importlib.util
+    import pkgutil
+
+    import emiproc_spark
+    from emiproc_spark.driver_queries import ORACLES, QUERIES
+
+    defined = {}
+    for info in pkgutil.iter_modules(emiproc_spark.__path__):
+        if not info.name.startswith("driver_queries"):
+            continue
+        mod = importlib.import_module(f"emiproc_spark.{info.name}")
+        for attr, obj in vars(mod).items():
+            if (attr.startswith("q_") and callable(obj)
+                    and getattr(obj, "__module__", None) == mod.__name__):
+                defined[attr[2:]] = obj
+    if importlib.util.find_spec("yaml") is None:  # optional dependency
+        defined.pop("profiles_yaml", None)
+    assert len(defined) >= 222
+    assert {k: QUERIES.get(k) for k in defined} == defined
+    assert set(QUERIES) == set(defined) == set(ORACLES)
