@@ -368,38 +368,25 @@ query(q_knn_classify, SQL_KNN_CLASSIFY)
 # ======================================================================
 from emiproc_spark.fixtures import NS_PER_HOUR as NS_PER_HOUR_R3B
 
-_STREAM_DIR_CACHE: dict[str, str] = {}
-
 
 def _stream_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Events rewritten once per sf_dir as ONE parquet file: a single
     input file ⇒ the availableNow run is a single micro-batch, so
     within-watermark dedup state is never evicted mid-run and the
     finished stream equals the batch aggregation exactly."""
-    if sf_dir in _STREAM_DIR_CACHE:
-        return _STREAM_DIR_CACHE[sf_dir]
-    import os
-
-    from emiproc_spark.fixtures import events as _events
     from emiproc_spark.qhelpers import QSCALE
 
-    ev = _events(spark, sf_dir)
-    out = os.path.join(fx.scratch_dir("emiproc_stream_"), "in")
-    (
-        ev.select(
+    def build(path: str) -> None:
+        fx.events(spark, sf_dir).select(
             F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
             "event_type",
             "user_id",
             F.floor(F.col("value") * F.lit(QSCALE) + F.lit(0.5))
             .cast("long")
             .alias("value"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    _STREAM_DIR_CACHE[sf_dir] = out
-    return out
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+
+    return fx.store("stream_events", sf_dir, build)
 
 
 def q_stream_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -271,7 +271,6 @@ query(q_weighted_sample, _sql_weighted_sample())
 # stream_asof — stream-stream time-interval join (streaming/streams.py)
 # ======================================================================
 STREAM_ASOF_TOL_MIN = 30
-_ASOF_STREAM_DIRS: dict[str, tuple[str, str]] = {}
 
 
 def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,9 +291,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from emiproc_spark.streaming.streams import asof_enrich_stream, run_available_now
 
-    if sf_dir in _ASOF_STREAM_DIRS:
-        clicks_dir, views_dir = _ASOF_STREAM_DIRS[sf_dir]
-    else:
+    def build(path: str) -> None:
         ev = fx.events(spark, sf_dir).where(F.col("user_id") % 4 == 1).select(
             "event_id",
             F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
@@ -305,27 +302,23 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.agg(F.unix_micros(F.max("ts"))).collect()[0][0]
             + (STREAM_ASOF_TOL_MIN + 10) * 60 * 1_000_000
         )
-
-        def side(etype: str, path: str) -> str:
-            sentinel = local_rows_df(spark, 
-                [(-1, -1)], "event_id long, user_id long"
-            ).select(
-                "event_id", F.timestamp_micros(F.lit(flush_us)).alias("ts"), "user_id"
-            )
+        sentinel = local_rows_df(
+            spark, [(-1, -1)], "event_id long, user_id long"
+        ).select(
+            "event_id", F.timestamp_micros(F.lit(flush_us)).alias("ts"), "user_id"
+        )
+        for etype, side in (("click", "clicks"), ("view", "views")):
             (
                 ev.where(F.col("event_type") == etype)
                 .select("event_id", "ts", "user_id")
                 .unionByName(sentinel)
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(path)
+                .parquet(os.path.join(path, side))
             )
-            return path
 
-        d = fx.scratch_dir("emiproc_asof_stream_")
-        clicks_dir = side("click", os.path.join(d, "clicks"))
-        views_dir = side("view", os.path.join(d, "views"))
-        _ASOF_STREAM_DIRS[sf_dir] = (clicks_dir, views_dir)
+    d = fx.store("asof_stream", sf_dir, build)
+    clicks_dir, views_dir = os.path.join(d, "clicks"), os.path.join(d, "views")
     schema = "event_id long, ts timestamp, user_id long"
     clicks = spark.readStream.schema(schema).parquet(clicks_dir)
     views = (

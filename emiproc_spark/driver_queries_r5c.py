@@ -25,7 +25,6 @@ multimodal column family.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,31 +38,19 @@ from emiproc_spark.registry import query
 # ======================================================================
 BKT_BUCKETS = 16
 
-# sf_dir -> (table_a, table_b); bucketed tables are written once per
-# session per sf_dir (the write is itself part of the pattern under
-# test, but repeating it on every bench iteration would time the sink,
-# not the join).
-_BKT_TABLES: dict[str, tuple[str, str]] = {}
-
 
 def _bucketed_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two bucketed inventories, written once per session per
+    sf_dir (the write is itself part of the pattern under test, but
+    repeating it on every bench iteration would time the sink, not the
+    join).  Catalog tables die with their session, so the session's
+    application id is part of the store name."""
     from emiproc_spark.exports.store import (
         read_inventory_table,
         save_inventory_bucketed,
     )
 
-    cached = _BKT_TABLES.get(sf_dir)
-    # the cache holds catalog TABLE NAMES, which die with the session
-    # (unlike the sibling filesystem-path caches) — revalidate against
-    # the current session's catalog before trusting it
-    if cached is not None and not all(
-        spark.catalog.tableExists(t) for t in cached
-    ):
-        cached = None
-    if cached is None:
-        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-        ta, tb = f"emiproc_bkt_a_{tag}", f"emiproc_bkt_b_{tag}"
-        root = fx.scratch_dir("emiproc_bkt_")
+    def build(path: str) -> None:
         em = fx.emissions(spark, sf_dir)
         flow = (
             em.where(F.col("category").isin("A", "N"))
@@ -75,15 +62,17 @@ def _bucketed_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
             .groupBy("cell_id")
             .agg(sumd("value_kg_y").alias("return_kg_y"))
         )
+        t = os.path.basename(path)
         save_inventory_bucketed(
-            flow, ta, buckets=BKT_BUCKETS, path=os.path.join(root, "a")
+            flow, f"{t}_a", buckets=BKT_BUCKETS, path=os.path.join(path, "a")
         )
         save_inventory_bucketed(
-            ret, tb, buckets=BKT_BUCKETS, path=os.path.join(root, "b")
+            ret, f"{t}_b", buckets=BKT_BUCKETS, path=os.path.join(path, "b")
         )
-        _BKT_TABLES[sf_dir] = (ta, tb)
-    ta, tb = _BKT_TABLES[sf_dir]
-    return read_inventory_table(spark, ta), read_inventory_table(spark, tb)
+
+    name = f"bkt_{spark.sparkContext.applicationId}"
+    t = os.path.basename(fx.store(name, sf_dir, build))
+    return read_inventory_table(spark, f"{t}_a"), read_inventory_table(spark, f"{t}_b")
 
 
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,11 +461,6 @@ query(q_image_resize, SQL_IMAGE_RESIZE)
 # ======================================================================
 STREAM_HH_K = 20
 
-# sf_dir -> 4-file parquet dir (maxFilesPerTrigger=1 => four real
-# micro-batches, so the sketch state is merged+decayed across batches,
-# not built in one shot)
-_HH_STREAM_DIRS: dict[str, str] = {}
-
 
 def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real Structured Streaming run of the bounded-state heavy-hitter
@@ -490,13 +474,14 @@ def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from emiproc_spark.streaming.streams import heavy_hitters_stream, run_available_now
 
-    if sf_dir not in _HH_STREAM_DIRS:
-        d = os.path.join(fx.scratch_dir("emiproc_hh_stream_"), "in")
+    def build(path: str) -> None:
         ev = fx.events(spark, sf_dir).select("event_id", "user_id")
-        # overlap the four 1-task slice writes (guide §2.6); pinned
-        # mtimes keep the maxFilesPerTrigger=1 batch order identical
-        # to the old sequential appends (the MG merge order is part of
-        # the sketch's identity)
+        # 4-file parquet dir (maxFilesPerTrigger=1 => four real
+        # micro-batches, so the sketch state is merged+decayed across
+        # batches, not built in one shot); overlap the four 1-task
+        # slice writes (guide §2.6); pinned mtimes keep the batch
+        # order identical to the old sequential appends (the MG merge
+        # order is part of the sketch's identity)
         from concurrent.futures import ThreadPoolExecutor
 
         from emiproc_spark.streaming.bootstrap import write_ordered_file
@@ -506,14 +491,14 @@ def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pool.map(
                     lambda p: write_ordered_file(
                         ev.where(F.col("event_id") % 4 == p).select("user_id"),
-                        d,
+                        path,
                         p,
                     ),
                     range(4),
                 )
             )
-        _HH_STREAM_DIRS[sf_dir] = d
-    d = _HH_STREAM_DIRS[sf_dir]
+
+    d = fx.store("hh_stream", sf_dir, build)
 
     stream = (
         spark.readStream.schema("user_id long")

@@ -24,9 +24,6 @@ clustering, skew-safe joins and a second columnar store format.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -224,10 +221,6 @@ query(q_salted_join, SQL_SALTED_JOIN)
 # ======================================================================
 ORC_LANGS = ("en", "de", "fr")
 
-# sf_dir -> written ORC dir (write once per session per sf_dir — the
-# benchmark times the pruned read, not the sink)
-_ORC_DIRS: dict[str, str] = {}
-
 
 def q_orc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → lang-partitioned ORC → pruned read of 3 of 5
@@ -236,18 +229,15 @@ def q_orc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     same predicate."""
     from emiproc_spark.exports.store import read_partitioned, save_partitioned
 
-    path = _ORC_DIRS.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-        path = os.path.join(
-            fx.scratch_dir("emiproc_orc_"), f"docs_{tag}"
-        )
+    # written once per sf_dir: the benchmark times the pruned read,
+    # not the sink
+    def build(path: str) -> None:
         docs = fx.load(spark, sf_dir, "documents").select(
             "doc_id", "n_chars", "lang"
         )
         save_partitioned(docs, path, ["lang"], fmt="orc")
-        _ORC_DIRS[sf_dir] = path
 
+    path = fx.store("orc_docs", sf_dir, build)
     back = read_partitioned(spark, path, fmt="orc")
     return (
         back.where(F.col("lang").isin(*ORC_LANGS))

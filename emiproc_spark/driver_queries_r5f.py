@@ -170,7 +170,6 @@ query(q_pagerank, SQL_PAGERANK)
 # materialized to parquet once per sf_dir (the ivf_store_probe /
 # bucketed_join pattern) and every family member reads the store —
 # doubles round-trip parquet bit-exactly, so parity is unaffected.
-_CAND_FRAMES: dict[str, str] = {}
 
 
 def minhash_candidate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,17 +177,9 @@ def minhash_candidate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle Jaccard side-by-side: (doc_a, doc_b, est_jaccard, n_common,
     jaccard) — n_common/jaccard are 0 for band-collision false
     positives with no common shingle."""
-    import os
-    import re
-
     from emiproc_spark.operators import dedup as dd
 
-    path = _CAND_FRAMES.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-        path = os.path.join(
-            fx.scratch_dir("emiproc_minhash_cand_"), f"cand_{tag}"
-        )
+    def build(path: str) -> None:
         docs = _docs2(spark, sf_dir)
         sigs = dd.minhash_signatures(docs, k=8)
         pairs = dd.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
@@ -206,7 +197,8 @@ def minhash_candidate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("jaccard", F.lit(0.0)).alias("jaccard"),
         )
         frame.write.mode("overwrite").parquet(path)
-        _CAND_FRAMES[sf_dir] = path
+
+    path = fx.store("minhash_cand", sf_dir, build)
     return spark.read.parquet(path).select(
         "doc_a", "doc_b", "est_jaccard", "n_common", "jaccard"
     )

@@ -15,9 +15,6 @@ duplicated-text budget, and a JSON-lines sink/source round-trip.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -100,20 +97,13 @@ query(q_dup_fraction, SQL_DUP_FRACTION)
 # ======================================================================
 # jsonl_roundtrip — JSON-lines sink + schema-explicit source
 # ======================================================================
-_JSONL_DIRS: dict[str, str] = {}
-
-
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _JSONL_DIRS.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-        path = os.path.join(
-            fx.scratch_dir("emiproc_jsonl_"), f"docs_{tag}"
-        )
+    def build(path: str) -> None:
         fx.load(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text"
         ).write.mode("overwrite").json(path)
-        _JSONL_DIRS[sf_dir] = path
+
+    path = fx.store("jsonl_docs", sf_dir, build)
     # explicit schema: inference would cost a second full scan, and at
     # 100 TB the contract should come from the catalog, not the data
     back = spark.read.schema("doc_id long, lang string, text string").json(

@@ -27,7 +27,6 @@ vector store.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -496,7 +495,6 @@ query(q_nation_topk, _sql_nation_topk())
 # tests/test_plan_shapes.py).  Results are identical to ivf_topk, so
 # its oracle is reused verbatim — the new surface is the store path.
 # ======================================================================
-_IVF_DIRS: dict[str, str] = {}
 
 
 def q_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,12 +502,7 @@ def q_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from emiproc_spark.exports.store import read_partitioned, save_partitioned
     from emiproc_spark.qhelpers import qd
 
-    path = _IVF_DIRS.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-        path = os.path.join(
-            fx.scratch_dir("emiproc_ivf_store_"), f"vecs_{tag}"
-        )
+    def build(path: str) -> None:
         scored = ivf_scored(spark, sf_dir)
         w = Window.partitionBy("vec_id").orderBy(
             F.col("cos").desc(), F.col("cid")
@@ -523,7 +516,8 @@ def q_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         save_partitioned(
             emb.join(assigned, "vec_id"), path, ["cell"], fmt="parquet"
         )
-        _IVF_DIRS[sf_dir] = path
+
+    path = fx.store("ivf_vecs", sf_dir, build)
 
     probes = [
         int(r["cid"])

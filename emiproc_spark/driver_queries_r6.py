@@ -247,81 +247,74 @@ CURATE_SHARDS = 8
 # doesn't execute the five-stage chain twice.  The store still runs the
 # full pipelines.curate_corpus composition — the queries read its
 # outputs, the oracles recompute everything independently.
-_CURATE_STORE: dict[str, str] = {}
 
 
 def curate_stage_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the five-stage curate run once per sf_dir and return
-    the store path.  Scratch placement and the executor-visibility
-    contract (shared filesystem on multi-node; ``SPARK_GRAFT_SCRATCH``
-    override; exit-time cleanup) live in ``fixtures.scratch_dir``."""
+    the store path (placement and build-once contract:
+    ``fixtures.store``)."""
     import os
-    import re
 
     from emiproc_spark import pipelines
 
-    path = _CURATE_STORE.get(sf_dir)
-    if path is not None and os.path.isdir(path):
-        return path
-    tag = re.sub(r"\W+", "_", sf_dir).strip("_")
-    path = os.path.join(fx.scratch_dir("emiproc_curate_"), tag)
-    d = fx.load(spark, sf_dir, "documents").select("doc_id", "text")
-    # the decontaminate fixture: eval split + planted contamination so
-    # stage 4 provably removes rows
-    eval_docs = d.where(F.col("doc_id") % 41 == 0)
-    ev = eval_docs.select(
-        F.col("doc_id").alias("ev_id"), F.col("text").alias("ev_text")
-    )
-    corpus = (
-        d.where(F.col("doc_id") % 41 != 0)
-        .withColumn(
-            "ev_id",
-            F.when(F.col("doc_id") % 7 == 0, (F.col("doc_id") % 12) * 41),
+    def build(path: str) -> None:
+        d = fx.load(spark, sf_dir, "documents").select("doc_id", "text")
+        # the decontaminate fixture: eval split + planted contamination so
+        # stage 4 provably removes rows
+        eval_docs = d.where(F.col("doc_id") % 41 == 0)
+        ev = eval_docs.select(
+            F.col("doc_id").alias("ev_id"), F.col("text").alias("ev_text")
         )
-        .join(F.broadcast(ev), "ev_id", "left")
-        .select(
-            "doc_id",
-            F.concat_ws(" ", F.col("text"), F.col("ev_text")).alias("text"),
+        corpus = (
+            d.where(F.col("doc_id") % 41 != 0)
+            .withColumn(
+                "ev_id",
+                F.when(F.col("doc_id") % 7 == 0, (F.col("doc_id") % 12) * 41),
+            )
+            .join(F.broadcast(ev), "ev_id", "left")
+            .select(
+                "doc_id",
+                F.concat_ws(" ", F.col("text"), F.col("ev_text")).alias("text"),
+            )
         )
-    )
-    stages = pipelines.curate_corpus(
-        corpus,
-        eval_docs,
-        minhash_k=8,
-        bands=4,
-        rows_per_band=2,
-        # no bucket cap: the oracle models the uncapped banding, and at
-        # driver scale no bucket approaches the production cap anyway
-        max_bucket_size=None,
-        jaccard_threshold=CURATE_JACCARD,
-        min_tokens=CURATE_MIN_TOKENS,
-        max_dup_token_frac=CURATE_MAX_DUP_FRAC,
-        decon_n=CURATE_DECON_N,
-        ctx_len=None,  # packing/gates derive from the materialized clean
-    )
-    # the expensive part (dedup → LSH verify → CC → quality → decon)
-    # executes exactly ONCE — `clean` is written, and the cheap tails
-    # (packing plan, output gates — the same pipeline functions) run on
-    # the read-back frame instead of re-deriving the whole chain per
-    # written output
-    stages["clean"].write.mode("overwrite").parquet(
-        os.path.join(path, "clean")
-    )
-    clean = spark.read.parquet(os.path.join(path, "clean")).select(
-        "doc_id", "text"
-    )
-    from emiproc_spark.operators import packing as pk
-    from emiproc_spark.operators import text as tx
+        stages = pipelines.curate_corpus(
+            corpus,
+            eval_docs,
+            minhash_k=8,
+            bands=4,
+            rows_per_band=2,
+            # no bucket cap: the oracle models the uncapped banding, and at
+            # driver scale no bucket approaches the production cap anyway
+            max_bucket_size=None,
+            jaccard_threshold=CURATE_JACCARD,
+            min_tokens=CURATE_MIN_TOKENS,
+            max_dup_token_frac=CURATE_MAX_DUP_FRAC,
+            decon_n=CURATE_DECON_N,
+            ctx_len=None,  # packing/gates derive from the materialized clean
+        )
+        # the expensive part (dedup → LSH verify → CC → quality → decon)
+        # executes exactly ONCE — `clean` is written, and the cheap tails
+        # (packing plan, output gates — the same pipeline functions) run on
+        # the read-back frame instead of re-deriving the whole chain per
+        # written output
+        stages["clean"].write.mode("overwrite").parquet(
+            os.path.join(path, "clean")
+        )
+        clean = spark.read.parquet(os.path.join(path, "clean")).select(
+            "doc_id", "text"
+        )
+        from emiproc_spark.operators import packing as pk
+        from emiproc_spark.operators import text as tx
 
-    sized = clean.withColumn("n_tokens", tx.token_count(F.col("text")))
-    pk.pack_sequences(sized, CURATE_CTX, n_shards=CURATE_SHARDS).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "packed"))
-    pipelines.curation_output_gates(
-        clean, "text", CURATE_MIN_TOKENS
-    ).write.mode("overwrite").parquet(os.path.join(path, "gates"))
-    _CURATE_STORE[sf_dir] = path
-    return path
+        sized = clean.withColumn("n_tokens", tx.token_count(F.col("text")))
+        pk.pack_sequences(sized, CURATE_CTX, n_shards=CURATE_SHARDS).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "packed"))
+        pipelines.curation_output_gates(
+            clean, "text", CURATE_MIN_TOKENS
+        ).write.mode("overwrite").parquet(os.path.join(path, "gates"))
+
+    return fx.store("curate", sf_dir, build)
 
 
 def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,7 +756,6 @@ query(q_kmeans_topics, SQL_KMEANS_TOPICS)
 # fold is arrival-order independent — the final state must equal the
 # batch answer over the same feed.
 # ======================================================================
-_CDC_STREAM_DIRS: dict[str, str] = {}
 
 
 def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -771,9 +763,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from emiproc_spark.streaming.streams import changelog_state_stream, run_available_now
 
-    d = _CDC_STREAM_DIRS.get(sf_dir)
-    if d is None or not os.path.isdir(d):
-        d = os.path.join(fx.scratch_dir("emiproc_cdc_stream_"), "in")
+    def build(path: str) -> None:
         ev = fx.events(spark, sf_dir).select(
             "user_id",
             F.col("ts").alias("tsn"),
@@ -798,12 +788,13 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             list(
                 pool.map(
                     lambda p: write_ordered_file(
-                        ev.where(F.col("event_id") % 4 == p), d, p
+                        ev.where(F.col("event_id") % 4 == p), path, p
                     ),
                     range(4),
                 )
             )
-        _CDC_STREAM_DIRS[sf_dir] = d
+
+    d = fx.store("cdc_stream", sf_dir, build)
 
     stream = (
         spark.readStream.schema(

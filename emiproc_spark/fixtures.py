@@ -14,8 +14,14 @@ substance = l_linestatus (F/O), value = l_extendedprice.
 
 from __future__ import annotations
 
+import os
+import re
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from emiproc_spark.plans.cache import cached_dir
 
 # ---- grid geometry constants ------------------------------------------
 FINE_NX = FINE_NY = 10  # 10×10 unit cells over [0,10]²
@@ -38,8 +44,8 @@ _SCRATCH_DIRS: list[str] = []
 
 
 def scratch_dir(prefix: str) -> str:
-    """Scratch directory for per-sf materialized stores (parquet a
-    later query reads back).
+    """Scratch directory for files a query writes and reads back, and
+    the root of the per-sf stores (``store``).
 
     Routes through ``SPARK_GRAFT_SCRATCH`` when set, else the system
     temp dir.  CONTRACT: the returned path must be readable by every
@@ -50,7 +56,6 @@ def scratch_dir(prefix: str) -> str:
     removed at interpreter exit so repeated runs don't accumulate.
     """
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -64,6 +69,21 @@ def scratch_dir(prefix: str) -> str:
         )
     _SCRATCH_DIRS.append(path)
     return path
+
+
+_STORE_ROOT: str | None = None
+
+
+def store(name: str, sf_dir: str, build: Callable[[str], None]) -> str:
+    """Path of the per-``sf_dir`` store ``name``: a derived table that
+    queries read instead of recomputing, built by ``build(path)`` once
+    per process (``plans.cache.cached_dir``).  Stores live under one
+    ``scratch_dir`` root; the path's basename is a valid identifier."""
+    global _STORE_ROOT
+    if _STORE_ROOT is None:
+        _STORE_ROOT = scratch_dir("emiproc_store_")
+    tag = re.sub(r"\W+", "_", f"{name}_{sf_dir}").strip("_")
+    return cached_dir(os.path.join(_STORE_ROOT, tag), build)
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:

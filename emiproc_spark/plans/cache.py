@@ -8,6 +8,9 @@ a fingerprint of its inputs; any later session with the same inputs
 reads instead of recomputing.  At 100 TB, weights/masks are the small
 side of every join — keeping them as parquet dimension tables also lets
 Catalyst broadcast them.
+
+``cached_dir`` is the engine's one build-once step: ``cached_table``
+and every per-``sf_dir`` query store (``fixtures.store``) go through it.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +30,19 @@ def fingerprint(*parts) -> str:
     return hashlib.sha256(blob).hexdigest()[:16]
 
 
+def cached_dir(path: str, build: Callable[[str], None]) -> str:
+    """Return ``path``, calling ``build(path)`` first unless the sibling
+    marker ``path + "._OK"`` exists.  The marker is written last, so a
+    crashed build is rebuilt from an empty ``path``, never half-read; it
+    sits beside ``path`` because streaming file sources list the dir."""
+    marker = path + "._OK"
+    if not os.path.exists(marker):
+        shutil.rmtree(path, ignore_errors=True)
+        build(path)
+        open(marker, "w").close()
+    return path
+
+
 def cached_table(
     spark: SparkSession,
     cache_dir: str,
@@ -34,16 +51,9 @@ def cached_table(
     build: Callable[[], DataFrame],
 ) -> DataFrame:
     """Return the persisted table for (name, key), building and writing
-    it on first use.  The marker file commits last, so a crashed write
-    is rebuilt, never half-read."""
+    it on first use (one ``build()`` per miss, via ``cached_dir``)."""
     path = os.path.join(cache_dir, f"{name}-{key}.parquet")
-    marker = path + "._OK"
-    if os.path.exists(marker):
-        return spark.read.parquet(path)
-    df = build()
-    df.write.mode("overwrite").parquet(path)
-    with open(marker, "w") as f:
-        f.write(key)
+    cached_dir(path, lambda p: build().write.mode("overwrite").parquet(p))
     return spark.read.parquet(path)
 
 

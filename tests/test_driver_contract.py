@@ -121,3 +121,29 @@ def test_every_q_function_is_registered():
     assert len(defined) >= 222
     assert {k: QUERIES.get(k) for k in defined} == defined
     assert set(QUERIES) == set(defined) == set(ORACLES)
+
+
+def test_no_module_level_store_dicts():
+    """Per-``sf_dir`` stores go through ``fixtures.store``; a
+    module-level ``{}``/``dict()`` in a driver-query module is a
+    hand-rolled store cache that outlives a store-root reset."""
+    import ast
+    import glob
+    import os
+
+    import emiproc_spark
+
+    pkg = os.path.dirname(emiproc_spark.__file__)
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "driver_queries*.py"))):
+        for node in ast.parse(open(path).read()).body:
+            value = getattr(node, "value", None)
+            if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+                continue
+            if (isinstance(value, ast.Dict) and not value.keys) or (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id == "dict"
+            ):
+                found.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not found, f"module-level store dicts: {found}"

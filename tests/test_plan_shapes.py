@@ -406,7 +406,8 @@ _BROADCAST_HINT_ALLOWED = {
         1, "nation dimension (25 rows)"),
     ("driver_queries_r6.py", "q_ann_recall"): (
         2, "query positions (k rows) and probe cells (k×nprobe)"),
-    ("driver_queries_r6.py", "curate_stage_store"): (
+    # curate_stage_store's nested store build
+    ("driver_queries_r6.py", "build"): (
         1, "eval-doc frame for planted contamination — benchmark-bounded"
            " in production (a fixed held-out suite)"),
     ("driver_queries_r7.py", "q_remap_gate"): (
