@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
     derive a gridded inventory, group categories, remap onto a coarser
     grid (tile spatial join + weighted agg), return remapped emissions."""
     from emiproc_spark import fixtures as fx
-    from emiproc_spark.driver_queries import sumd
+    from emiproc_spark.qhelpers import sumd
     from emiproc_spark.operators import basic as ops
     from emiproc_spark.operators import regrid as rg
     from pyspark.sql import functions as F

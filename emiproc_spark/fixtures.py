@@ -197,6 +197,96 @@ SPECIATION_SQL = """
 """
 
 
+# ---- document fixtures -----------------------------------------------
+# doubled corpus: every text appears at least twice so dedup operators
+# have guaranteed positives on purely synthetic data
+DOUBLE_OFFSET = 1_000_000
+
+
+def docs2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    twin = d.select((F.col("doc_id") + DOUBLE_OFFSET).alias("doc_id"), "text")
+    return d.unionByName(twin)
+
+
+DOCS2_SQL = f"""
+    SELECT doc_id, text FROM documents
+    UNION ALL
+    SELECT doc_id + {DOUBLE_OFFSET} AS doc_id, text FROM documents
+"""
+
+
+# PII-augmented documents (emails/phones are synthesized so matches are
+# guaranteed)
+def augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = (
+        load(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 2000)
+        .select("doc_id", "text")
+    )
+    return d.withColumn(
+        "text",
+        F.concat(
+            F.col("text"),
+            F.lit(" reach me: user"),
+            F.col("doc_id").cast("string"),
+            F.lit("@ex"),
+            (F.col("doc_id") % 7).cast("string"),
+            F.lit(".com or 415-555-"),
+            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+        ),
+    )
+
+
+AUGMENTED_SQL = """
+    SELECT doc_id,
+           text || ' reach me: user' || CAST(doc_id AS VARCHAR)
+                || '@ex' || CAST(doc_id % 7 AS VARCHAR)
+                || '.com or 415-555-'
+                || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS text
+    FROM documents WHERE doc_id < 2000
+"""
+
+
+# planted contamination: the synthetic corpus has no natural 5-gram
+# overlap with its eval split (every 41st doc), so every 7th corpus doc
+# gets an eval doc's text appended, on both engines
+def planted_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(corpus, eval_docs)``: the Spark twin of ``SQL_CORPUS_PLANTED``
+    and the eval split it was contaminated from."""
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    eval_docs = d.where(F.col("doc_id") % 41 == 0)
+    ev = eval_docs.select(
+        F.col("doc_id").alias("ev_id"), F.col("text").alias("ev_text")
+    )
+    corpus = (
+        d.where(F.col("doc_id") % 41 != 0)
+        .withColumn(
+            "ev_id",
+            F.when(F.col("doc_id") % 7 == 0, (F.col("doc_id") % 12) * 41),
+        )
+        .join(F.broadcast(ev), "ev_id", "left")
+        .select(
+            "doc_id",
+            F.concat_ws(" ", F.col("text"), F.col("ev_text")).alias("text"),
+        )
+    )
+    return corpus, eval_docs
+
+
+SQL_CORPUS_PLANTED = """
+    (SELECT d.doc_id,
+            d.text || COALESCE(' ' || e.text, '') AS text
+     FROM documents d
+     LEFT JOIN (SELECT doc_id, text FROM documents WHERE doc_id % 41 = 0) e
+       ON d.doc_id % 7 = 0 AND e.doc_id = (d.doc_id % 12) * 41
+     WHERE d.doc_id % 41 <> 0)
+"""
+
+# embedding width of embeddings.parquet
+DIM = 64
+
+
 def register_tables(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view so workloads can run
     through ``spark.sql(...)`` — the SQL half of the DataFrame/SQL API

@@ -703,7 +703,7 @@ def _sq_dist_q12(vec_col: str, cvec: list[float]) -> Column:
     each (x−c)² term rounds to 1e-12 and the terms sum as exact longs,
     so the distance — and every argmin on it — is addition-order-free
     and engine-reproducible (the distance analogue of the cosine
-    kernels' ``_dotq`` convention)."""
+    kernels' ``qhelpers.dotq`` convention)."""
     terms = F.zip_with(
         F.col(vec_col),
         F.array(*[F.lit(float(v)) for v in cvec]),

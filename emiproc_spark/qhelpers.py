@@ -30,6 +30,25 @@ def sql_sumd(expr: str) -> str:
     )
 
 
+# per-element products of unit-scale vectors: quantized finer than sums
+DOT_SCALE = 1e12
+
+
+def dotq(prod) -> F.Column:
+    """Quantized (order-free) sum of per-element products."""
+    c = F.col(prod) if isinstance(prod, str) else prod
+    return F.sum(
+        F.floor(c * F.lit(DOT_SCALE) + F.lit(0.5)).cast("long")
+    ).cast("double") / F.lit(DOT_SCALE)
+
+
+def sql_dotq(expr: str) -> str:
+    return (
+        f"CAST(SUM(CAST(FLOOR(({expr}) * {DOT_SCALE} + 0.5) AS BIGINT)) AS DOUBLE)"
+        f" / {DOT_SCALE}"
+    )
+
+
 # |v| beyond which µ-quantization stops being exact: v·1e6 must stay
 # within 2^53 (doubles are integral-exact there) AND within int64.
 # 8e9·1e6 = 8e15 < 2^53 ≈ 9.007e15.

@@ -1,8 +1,8 @@
 """The query registrar.
 
-Each ``driver_queries*`` module calls :func:`query` once per query,
-beside the query's DuckDB oracle.  ``driver_queries`` imports those
-modules and orders what they registered into its public
+Each ``emiproc_spark.queries`` module calls :func:`query` once per
+query, beside the query's DuckDB oracle.  ``driver_queries`` imports
+that package and orders what it registered into its public
 ``QUERIES``/``ORACLES``.  This module imports nothing from
 ``emiproc_spark``, so a query module registers the same queries
 whichever module is imported first.

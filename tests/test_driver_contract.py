@@ -36,7 +36,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     assert r["values_match"], r
     # a 0-row match passes while checking nothing — every query is
     # designed to produce rows even at sf0.001 (doc_sample/data_mix once
-    # silently matched empty for a full round; see driver_queries_curate)
+    # silently matched empty for a full round; see queries/text.py)
     assert r["spark_rows"] > 0, f"{name}: trivially-empty oracle match"
 
 
@@ -98,24 +98,27 @@ def test_query_registrar_rejects_bad_names_and_duplicates(monkeypatch):
 
 def test_every_q_function_is_registered():
     """A dropped query() line would silently drop a query from QUERIES:
-    every top-level ``q_*`` function defined in a
-    ``driver_queries*`` module must be in QUERIES, under its own name."""
+    every top-level ``q_*`` function defined in an
+    ``emiproc_spark.queries`` module must be in QUERIES, under its own
+    name."""
     import importlib
     import importlib.util
     import pkgutil
 
-    import emiproc_spark
+    import emiproc_spark.queries
     from emiproc_spark.driver_queries import ORACLES, QUERIES
 
     defined = {}
-    for info in pkgutil.iter_modules(emiproc_spark.__path__):
-        if not info.name.startswith("driver_queries"):
-            continue
-        mod = importlib.import_module(f"emiproc_spark.{info.name}")
+    scanned = set()
+    for info in pkgutil.iter_modules(emiproc_spark.queries.__path__):
+        mod = importlib.import_module(f"emiproc_spark.queries.{info.name}")
+        scanned.add(mod.__name__)
         for attr, obj in vars(mod).items():
             if (attr.startswith("q_") and callable(obj)
                     and getattr(obj, "__module__", None) == mod.__name__):
                 defined[attr[2:]] = obj
+    # the scan covers every module a registered query lives in
+    assert {fn.__module__ for fn in QUERIES.values()} <= scanned
     if importlib.util.find_spec("yaml") is None:  # optional dependency
         defined.pop("profiles_yaml", None)
     assert len(defined) >= 222
@@ -125,17 +128,23 @@ def test_every_q_function_is_registered():
 
 def test_no_module_level_store_dicts():
     """Per-``sf_dir`` stores go through ``fixtures.store``; a
-    module-level ``{}``/``dict()`` in a driver-query module is a
-    hand-rolled store cache that outlives a store-root reset."""
+    module-level ``{}``/``dict()`` in a query module is a hand-rolled
+    store cache that outlives a store-root reset."""
     import ast
     import glob
     import os
 
-    import emiproc_spark
+    import emiproc_spark.queries
+    from emiproc_spark.driver_queries import QUERIES
 
-    pkg = os.path.dirname(emiproc_spark.__file__)
+    pkg = os.path.dirname(emiproc_spark.queries.__file__)
+    paths = sorted(glob.glob(os.path.join(pkg, "*.py")))
+    scanned = {
+        f"emiproc_spark.queries.{os.path.basename(p)[:-3]}" for p in paths
+    }
+    assert {fn.__module__ for fn in QUERIES.values()} <= scanned
     found = []
-    for path in sorted(glob.glob(os.path.join(pkg, "driver_queries*.py"))):
+    for path in paths:
         for node in ast.parse(open(path).read()).body:
             value = getattr(node, "value", None)
             if not isinstance(node, (ast.Assign, ast.AnnAssign)):

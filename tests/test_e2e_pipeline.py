@@ -41,9 +41,9 @@ def tprofiles(spark):
 
 @pytest.fixture(scope="module")
 def tno_path(spark):
-    from emiproc_spark.driver_queries_io import _tno_fixture
+    from emiproc_spark.queries.io import tno_fixture
 
-    return _tno_fixture(spark, SF_DIR)
+    return tno_fixture(spark, SF_DIR)
 
 
 @pytest.fixture(scope="module")
@@ -99,12 +99,12 @@ def test_ep1_ingest_remap_group_speciate_conserves(spark, ingested):
 
 
 def test_ep2_raster_export_roundtrip(spark, ingested):
-    from emiproc_spark.driver_queries_io import _raster_grid
+    from emiproc_spark.queries.io import raster_grid
     from emiproc_spark.exports.netcdf import export_raster_netcdf
     from emiproc_spark.sources.netcdf import from_netcdf_rasters
 
     out = os.path.join(tempfile.mkdtemp(prefix="emiproc_e2e_"), "inv.nc")
-    export_raster_netcdf(ingested, _raster_grid(spark), out, add_totals=True)
+    export_raster_netcdf(ingested, raster_grid(spark), out, add_totals=True)
     back = from_netcdf_rasters(spark, out)
     assert total_emissions_almost_equal(
         get_total_emissions(ingested),

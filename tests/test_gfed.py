@@ -80,13 +80,13 @@ def test_gfed4_builtin_codec_end_to_end(spark, tmp_path):
     import pytest as _p
     from pyspark.sql import functions as F
 
-    from emiproc_spark.driver_queries_r3c import (
+    from emiproc_spark.queries.io import (
         GFED_NLAT,
-        _write_gfed4_fixture,
+        write_gfed4_fixture,
     )
     from emiproc_spark.sources.gfed import gfed4_emissions, gfed4_monthly_ratios
 
-    _write_gfed4_fixture(str(tmp_path))
+    write_gfed4_fixture(str(tmp_path))
     rows = {
         (r["cell_id"], r["category"]): r["value_kg_y"]
         for r in gfed4_emissions(spark, str(tmp_path)).collect()

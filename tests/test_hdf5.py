@@ -182,7 +182,7 @@ def test_raster_export_netcdf4_container_roundtrip(spark):
 
     from pyspark.sql import functions as F
 
-    from emiproc_spark.driver_queries_io import _raster_grid
+    from emiproc_spark.queries.io import raster_grid
     from emiproc_spark.exports.netcdf import export_raster_netcdf
     from emiproc_spark.sources.netcdf import from_netcdf_rasters
 
@@ -191,7 +191,7 @@ def test_raster_export_netcdf4_container_roundtrip(spark):
         "cell_id long, category string, substance string, value_kg_y double",
     )
     out = export_raster_netcdf(
-        e, _raster_grid(spark), tempfile.mktemp(suffix=".nc"),
+        e, raster_grid(spark), tempfile.mktemp(suffix=".nc"),
         add_totals=False, container="hdf5",
     )
     back = from_netcdf_rasters(spark, out)

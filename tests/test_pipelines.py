@@ -16,9 +16,9 @@ from emiproc_spark.sources.tno import tno_area_emissions, tno_point_sources
 
 @pytest.fixture(scope="module")
 def tno_path(spark):
-    from emiproc_spark.driver_queries_io import _tno_fixture
+    from emiproc_spark.queries.io import tno_fixture
 
-    return _tno_fixture(spark, "/root/testdata/sf0.001")
+    return tno_fixture(spark, "/root/testdata/sf0.001")
 
 
 def _src_grid(spark):
@@ -281,7 +281,7 @@ def test_edgar_to_hourly_country_profiles(spark, tmp_path):
     the composite (weekly × hour-of-week-per-month) factor."""
     import numpy as np
 
-    from emiproc_spark.driver_queries_r3c import _write_edgar_aux
+    from emiproc_spark.queries.io import write_edgar_aux
     from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, read_netcdf, write_netcdf
     from emiproc_spark.sources.edgar_profiles import edgar_auxiliary_profiles
 
@@ -305,7 +305,7 @@ def test_edgar_to_hourly_country_profiles(spark, tmp_path):
 
     aux = tmp_path / "aux"
     aux.mkdir()
-    _write_edgar_aux(aux)
+    write_edgar_aux(aux)
     grid = regular_grid(spark, 0.0, 0.0, nx, ny, 1.0, 1.0, with_geometry=False)
     cell_country = grid.select(
         "cell_id", F.lit("AAA").alias("country"), F.lit(1.0).alias("fraction")

@@ -361,7 +361,7 @@ def test_no_unbounded_global_window(spark, name):
 # frame is a guaranteed driver-collect + OOM at 100× scale (the r7
 # judge finding: split_leakage / cluster_split force-broadcast their
 # per-document split-assignment frames).  Every F.broadcast call site
-# in the driver-query modules must appear below with WHY the hinted
+# in the query modules and fixtures must appear below with WHY the hinted
 # side is bounded; a new site fails this test until it is reviewed.
 # Frames that merely LOOK small at bench sf (anything scaling with the
 # corpus/fact tables) must NOT be hinted — AQE broadcasts those at
@@ -369,73 +369,77 @@ def test_no_unbounded_global_window(spark, name):
 # ----------------------------------------------------------------------
 _BROADCAST_HINT_ALLOWED = {
     # (module, enclosing function): (site count, bounded because…)
-    ("driver_queries.py", "q_revenue_by_nation"): (
+    ("inventory", "q_revenue_by_nation"): (
         2, "nation (25 rows) and region (5 rows) are fixed dimensions"),
-    ("driver_queries.py", "q_group_categories"): (
+    ("inventory", "q_group_categories"): (
         1, "literal category→group map, a handful of rows"),
-    ("driver_queries.py", "q_group_substances"): (
+    ("inventory", "q_group_substances"): (
         1, "literal substance→group map, a handful of rows"),
-    ("driver_queries.py", "q_remap_inventory"): (
+    ("inventory", "q_remap_inventory"): (
         1, "rect-rect weights over the fixed test grids — grid-dimension"
            "-sized, never corpus-sized"),
-    ("driver_queries.py", "q_profiles_combine"): (
-        1, "literal 3-row category→group map"),
-    ("driver_queries.py", "q_hdd_factors"): (
-        1, "single-row global mean scaffold"),
-    ("driver_queries.py", "q_composite_scaling"): (
-        1, "literal 2-row profile table"),
-    ("driver_queries_curate.py", "q_decontaminate"): (
-        1, "eval benchmark set — bounded by the benchmark, not the corpus"),
-    ("driver_queries_r3b.py", "q_icon_mesh"): (
-        1, "poly-poly weights over the fixed ICON mesh × test grid"),
-    ("driver_queries_r3c.py", "q_decon_spans"): (
-        1, "eval span set — benchmark-bounded"),
-    ("driver_queries_r5.py", "q_specific_day_sf"): (
-        1, "temporal-profile dimension table"),
-    ("driver_queries_r5.py", "q_ann_multiprobe"): (
-        2, "query vectors (k rows) and their probe cells (k×nprobe)"),
-    ("driver_queries_r5b.py", "q_bloom_decon"): (
-        1, "eval n-gram filter — benchmark-bounded"),
-    ("driver_queries_r5c.py", "q_stream_heavy"): (
-        1, "heavy-hitter candidate ids — bounded by stream state size"),
-    ("driver_queries_r5e.py", "q_semdedup"): (
-        1, "centroid terms — k×dim rows"),
-    ("driver_queries_r5h.py", "q_ivf_store_probe"): (
-        1, "probe-cell set for the query batch — k×nprobe rows"),
-    ("driver_queries_r5h.py", "q_nation_topk"): (
+    ("inventory", "q_nation_topk"): (
         1, "nation dimension (25 rows)"),
-    ("driver_queries_r6.py", "q_ann_recall"): (
-        2, "query positions (k rows) and probe cells (k×nprobe)"),
-    # curate_stage_store's nested store build
-    ("driver_queries_r6.py", "build"): (
-        1, "eval-doc frame for planted contamination — benchmark-bounded"
-           " in production (a fixed held-out suite)"),
-    ("driver_queries_r7.py", "q_remap_gate"): (
-        1, "rect-rect weights over the fixed test grids"),
-    ("driver_queries_text.py", "q_ann_cosine_topk"): (
-        1, "query-vector batch (k rows)"),
-    ("driver_queries_text.py", "ivf_scored"): (
+    ("profiles", "q_profiles_combine"): (
+        1, "literal 3-row category→group map"),
+    ("profiles", "q_hdd_factors"): (
+        1, "single-row global mean scaffold"),
+    ("profiles", "q_composite_scaling"): (
+        1, "literal 2-row profile table"),
+    ("profiles", "q_specific_day_sf"): (
+        1, "temporal-profile dimension table"),
+    ("io", "q_icon_mesh"): (
+        1, "poly-poly weights over the fixed ICON mesh × test grid"),
+    # the planted-contamination corpus of decontaminate, decon_spans,
+    # bloom_decon and the curate store
+    ("fixtures", "planted_corpus"): (
+        1, "eval-doc frame (eval set, spans, n-gram filter) — benchmark-"
+           "bounded, not corpus-bounded (a fixed held-out suite in "
+           "production)"),
+    ("similarity", "query_cosines"): (
+        1, "query-vector batch (k rows) — the exact re-rank of "
+           "ann_cosine_topk, ann_multiprobe, ivf_topk, ivf_store_probe "
+           "and ann_recall"),
+    ("similarity", "q_ann_multiprobe"): (
+        1, "the query vectors' buckets (k rows)"),
+    ("similarity", "q_semdedup"): (
+        1, "centroid terms — k×dim rows"),
+    ("similarity", "q_ann_recall"): (
+        1, "probe cells (k×nprobe)"),
+    ("similarity", "ivf_scored"): (
         1, "IVF centroid terms — k×dim rows"),
-    ("driver_queries_text.py", "q_ivf_topk"): (
-        2, "query vectors and centroid assignments — k-bounded"),
-    ("driver_queries_text.py", "q_ann_lsh_buckets"): (
+    ("similarity", "q_ivf_topk"): (
+        1, "centroid assignments of the probe cells — k-bounded"),
+    ("similarity", "q_ann_lsh_buckets"): (
         1, "query-vector batch (k rows)"),
+    ("quality", "q_remap_gate"): (
+        1, "rect-rect weights over the fixed test grids"),
+    ("streaming", "q_stream_heavy"): (
+        1, "heavy-hitter candidate ids — bounded by stream state size"),
 }
 
 
 def _broadcast_call_sites():
     """(module, enclosing function) → count of ``*.broadcast(...)``
-    call expressions, via AST over every driver-query module."""
+    call expressions, via AST over every query module and the shared
+    fixtures."""
     import ast
     import collections
     import glob
     import os
 
-    import emiproc_spark
+    import emiproc_spark.queries
+    from emiproc_spark import fixtures
 
-    pkg = os.path.dirname(emiproc_spark.__file__)
+    pkg = os.path.dirname(emiproc_spark.queries.__file__)
+    paths = sorted(glob.glob(os.path.join(pkg, "*.py")))
+    scanned = {
+        f"emiproc_spark.queries.{os.path.basename(p)[:-3]}" for p in paths
+    }
+    assert {fn.__module__ for fn in QUERIES.values()} <= scanned
+    paths.append(fixtures.__file__)
     sites = collections.Counter()
-    for path in sorted(glob.glob(os.path.join(pkg, "driver_queries*.py"))):
+    for path in paths:
         tree = ast.parse(open(path).read())
         spans = [
             (n.lineno, n.end_lineno, n.name)
@@ -454,7 +458,7 @@ def _broadcast_call_sites():
                     if a <= node.lineno <= b
                 )
                 fn = encl[0][1] if encl else "<module>"
-                sites[(os.path.basename(path), fn)] += 1
+                sites[(os.path.basename(path)[:-3], fn)] += 1
     return sites
 
 

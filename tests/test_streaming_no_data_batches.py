@@ -9,8 +9,7 @@ compare the frames.
 
 import pytest
 
-from emiproc_spark.driver_queries_r3b import q_stream_dedup
-from emiproc_spark.driver_queries_r3c import q_stream_sessionize
+from emiproc_spark.queries.streaming import q_stream_dedup, q_stream_sessionize
 from emiproc_spark.streaming import streams
 
 
