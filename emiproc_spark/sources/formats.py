@@ -2,8 +2,9 @@
 
 Each public reader mirrors one reference ingest class's *semantics* —
 variable naming, attribute contracts, unit conversions, coordinate
-quirks — re-expressed as a per-file ``binaryFile`` + ``mapInPandas``
-decode (pure-numpy NetCDF-3 codec) feeding Spark-side aggregation:
+quirks — re-expressed as a per-file decode over the NetCDF raster scan
+(``netcdf.scan_rasters``: classic NetCDF-3 or NetCDF-4 files, decoded by
+``netcdf.default_container_decoder``) feeding Spark-side aggregation:
 
 - :func:`edgar_v8`        — reference ``inventories/edgar/edgarv8.py:140-235``
 - :func:`edgar_legacy`    — reference ``inventories/edgar/edgarv8.py:239-327``
@@ -29,7 +30,7 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -39,84 +40,15 @@ from pyspark.sql import functions as F
 from emiproc_spark.sources.netcdf import (
     DAY_PER_YR,
     SEC_PER_YR,
-    _centers_to_edges,
-    spherical_cell_areas,
+    _area_grid,
+    _lonmajor_frame,
+    _to_tlalo,
+    default_container_decoder,
+    scan_rasters,
 )
+from emiproc_spark.sources.readers import scan_files
 
 DAYS_IN_MONTH = np.array([31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31])
-
-_SCAN_SCHEMA = (
-    "file string, t_index int, cell_id long, category string, "
-    "substance string, value_kg_y double"
-)
-
-
-def _file_scan(
-    spark: SparkSession,
-    path: str,
-    decode: Callable[[str, object], Iterator[pd.DataFrame]],
-) -> DataFrame:
-    """One Spark task per file; ``decode(fpath, ds)`` yields long-form
-    batches with columns matching ``_SCAN_SCHEMA`` (minus ``file``)."""
-    from emiproc_spark.functions.netcdf3 import read_netcdf
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                ds = read_netcdf(bytes(content))
-                for out in decode(fpath, ds):
-                    out.insert(0, "file", fpath)
-                    yield out
-
-    return files.mapInPandas(run, schema=_SCAN_SCHEMA)
-
-
-def _lonmajor_frame(
-    arr: np.ndarray, cat: str, sub: str, drop_zero: bool = True
-) -> pd.DataFrame:
-    """(nt, nlat, nlon) array → long rows with lon-major cell ids."""
-    nt, nlat, nlon = arr.shape
-    flat = np.transpose(arr, (0, 2, 1)).reshape(nt, nlon * nlat)
-    cell = np.tile(np.arange(nlon * nlat, dtype=np.int64), nt)
-    t_idx = np.repeat(np.arange(nt, dtype=np.int32), nlon * nlat)
-    vals = flat.reshape(-1)
-    if drop_zero:
-        nz = vals != 0.0
-        cell, t_idx, vals = cell[nz], t_idx[nz], vals[nz]
-    return pd.DataFrame(
-        {
-            "t_index": t_idx,
-            "cell_id": cell,
-            "category": cat,
-            "substance": sub,
-            "value_kg_y": vals,
-        }
-    )
-
-
-def _area_grid(ds, lat_name: str, lon_name: str) -> np.ndarray:
-    """Per-lat-row spherical cell areas (m²) from coordinate centers."""
-    lat_c = np.asarray(ds.variables[lat_name].data, dtype=np.float64)
-    lon_c = np.asarray(ds.variables[lon_name].data, dtype=np.float64)
-    _, dlat = _centers_to_edges(lat_c)
-    _, dlon = _centers_to_edges(lon_c)
-    return spherical_cell_areas(lat_c, abs(dlon), abs(dlat))
-
-
-def _to_tlalo(v, time_name: str, lat_name: str, lon_name: str) -> np.ndarray:
-    """Normalize a variable's array to (time?, lat, lon), prepending a
-    singleton time axis when absent; NaN → 0."""
-    arr = np.asarray(v.data, dtype=np.float64)
-    dims = list(v.dims)
-    order = [d for d in (time_name, lat_name, lon_name) if d in dims]
-    if set(dims) != set(order):
-        raise ValueError(f"unexpected dims {dims}")
-    arr = np.transpose(arr, [dims.index(d) for d in order])
-    if time_name not in dims:
-        arr = arr[np.newaxis, ...]
-    return np.nan_to_num(arr, nan=0.0)
 
 
 # ======================================================================
@@ -159,26 +91,15 @@ def edgar_v8_categories(
     so a file whose stem does not carry the year but whose attribute
     matches is still counted (a stem-only probe would silently hand
     its category the constant sf=1.0 profile downstream)."""
-    from emiproc_spark.functions.netcdf3 import read_netcdf
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    def decode(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:
+        ds = default_container_decoder(content, header_only=True)
+        cat = _edgar_v8_admit(fpath, ds, year, use_short_category_names)
+        if cat is not None:
+            yield pd.DataFrame({"category": [cat]})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cats = set()
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                c = _edgar_v8_admit(
-                    fpath, read_netcdf(bytes(content), header_only=True), year,
-                    use_short_category_names,
-                )
-                if c is not None:
-                    cats.add(c)
-            yield pd.DataFrame({"category": sorted(cats)})
-
-    return sorted(
-        r["category"]
-        for r in files.mapInPandas(run, "category string").distinct().collect()
-    )
+    probe = scan_files(spark, path, "category string", decode)
+    return sorted(r["category"] for r in probe.distinct().collect())
 
 
 def edgar_v8(
@@ -207,12 +128,12 @@ def edgar_v8(
         v = ds.variables["emissions"]
         units = v.attrs.get("units")
         if units != "Tonnes":
-            raise ValueError(f"{fpath}: units {units!r}, expected 'Tonnes'")
+            raise ValueError(f"units {units!r}, expected 'Tonnes'")
         sub = v.attrs["substance"]
-        arr = _to_tlalo(v, "time", lat_name, lon_name) * 1e3  # Tonnes → kg
+        arr = _to_tlalo(v.data, v.dims, "time", lat_name, lon_name) * 1e3  # Tonnes → kg
         yield _lonmajor_frame(arr, cat, sub)
 
-    scan = _file_scan(spark, path, decode)
+    scan = scan_rasters(spark, path, decode)
     return scan.groupBy("cell_id", "category", "substance").agg(
         F.sum("value_kg_y").alias("value_kg_y")
     )
@@ -245,7 +166,7 @@ def edgar_legacy(
     def decode(fpath: str, ds) -> Iterator[pd.DataFrame]:
         m = re.search(pat, os.path.basename(fpath))
         if not m:
-            raise ValueError(f"{fpath}: category pattern {pat!r} did not match")
+            raise ValueError(f"category pattern {pat!r} did not match")
         cat = m.group(1)
         data_vars = [
             n
@@ -253,9 +174,9 @@ def edgar_legacy(
             if lat_name in v.dims and lon_name in v.dims
         ]
         if not data_vars:
-            raise ValueError(f"{fpath}: no (lat, lon) data variable")
+            raise ValueError("no (lat, lon) data variable")
         v = ds.variables[data_vars[0]]
-        arr = _to_tlalo(v, "time", lat_name, lon_name)
+        arr = _to_tlalo(v.data, v.dims, "time", lat_name, lon_name)
         lon_c = np.asarray(ds.variables[lon_name].data, dtype=np.float64)
         shifted = (lon_c + 180.0) % 360.0 - 180.0
         order = np.argsort(shifted, kind="stable")
@@ -264,7 +185,7 @@ def edgar_legacy(
         arr = arr * SEC_PER_YR * areas[np.newaxis, :, np.newaxis]
         yield _lonmajor_frame(arr, cat, substance.upper())
 
-    scan = _file_scan(spark, path, decode)
+    scan = scan_rasters(spark, path, decode)
     return scan.groupBy("cell_id", "category", "substance").agg(
         F.sum("value_kg_y").alias("value_kg_y")
     )
@@ -290,9 +211,7 @@ def _gfas_scan(
             leap = year % 4 == 0 and (year % 100 != 0 or year % 400 == 0)
             expected = 366 if leap else 365
             if nt != expected:
-                raise ValueError(
-                    f"{fpath}: {nt} timesteps, expected {expected} for {year}"
-                )
+                raise ValueError(f"{nt} timesteps, expected {expected} for {year}")
         names = variables or [
             n
             for n, v in ds.variables.items()
@@ -301,11 +220,12 @@ def _gfas_scan(
         areas = _area_grid(ds, lat_name, lon_name)
         for name in names:
             sub = name.replace("fire", "").upper()
-            arr = _to_tlalo(ds.variables[name], time_name, lat_name, lon_name)
+            v = ds.variables[name]
+            arr = _to_tlalo(v.data, v.dims, time_name, lat_name, lon_name)
             arr = arr * SEC_PER_YR * areas[np.newaxis, :, np.newaxis]
             yield _lonmajor_frame(arr, "gfas", sub, drop_zero=False)
 
-    return _file_scan(spark, path, decode)
+    return scan_rasters(spark, path, decode)
 
 
 def gfas_emissions(
@@ -403,15 +323,15 @@ def cams_reg_aq(
             raise ValueError(f"no substance mapping found for {sub_file!r}")
         for var, cat in cats.items():
             if var not in ds.variables:
-                raise ValueError(f"category {var} not found in the file {fpath}")
+                raise ValueError(f"category {var} not found in the file")
             v = ds.variables[var]
             units = v.attrs.get("units")
             if units != "Tg":
                 raise ValueError(f"units are {units!r}, expected Tg")
-            arr = _to_tlalo(v, "time", lat_name, lon_name) * 1e9  # Tg → kg
+            arr = _to_tlalo(v.data, v.dims, "time", lat_name, lon_name) * 1e9  # Tg → kg
             yield _lonmajor_frame(arr, cat, sub)
 
-    scan = _file_scan(spark, path, decode)
+    scan = scan_rasters(spark, path, decode)
     return scan.groupBy("cell_id", "category", "substance").agg(
         F.sum("value_kg_y").alias("value_kg_y")
     )
@@ -439,14 +359,12 @@ def _saunois_scan(
         if "lev" in dims:
             ax = dims.index("lev")
             if arr.shape[ax] != 1:
-                raise ValueError(f"{fpath}: lev dimension size != 1")
+                raise ValueError("lev dimension size != 1")
             arr = np.squeeze(arr, axis=ax)
             dims.remove("lev")
-        order = [d for d in (time_name, lat_name, lon_name) if d in dims]
-        arr = np.transpose(arr, [dims.index(d) for d in order])
-        arr = np.nan_to_num(arr, nan=0.0)
+        arr = _to_tlalo(arr, dims, time_name, lat_name, lon_name)
         if arr.shape[0] != 12:
-            raise ValueError(f"{fpath}: expected 12 months, got {arr.shape[0]}")
+            raise ValueError(f"expected 12 months, got {arr.shape[0]}")
         if weighted:
             # g/m2/day × days-in-month, summed → g/m2/y; ×1e-3×area → kg/y
             areas = _area_grid(ds, lat_name, lon_name)
@@ -456,7 +374,7 @@ def _saunois_scan(
         else:
             yield _lonmajor_frame(arr, cat, "CH4", drop_zero=False)
 
-    return _file_scan(spark, path, decode)
+    return scan_rasters(spark, path, decode)
 
 
 def saunois_emissions(
@@ -532,16 +450,14 @@ def wetcharts(
                     )
                 arr = np.take(arr, sel[0], axis=ax)
             dims.remove(model_name)
-        order = [d for d in (time_name, lat_name, lon_name) if d in dims]
-        arr = np.transpose(arr, [dims.index(d) for d in order])
-        arr = np.nan_to_num(arr, nan=0.0)
+        arr = _to_tlalo(arr, dims, time_name, lat_name, lon_name)
         if arr.shape[0] != 12:
-            raise ValueError(f"{fpath}: the dataset should have 12 months")
+            raise ValueError("the dataset should have 12 months")
         areas = _area_grid(ds, lat_name, lon_name)
         arr = arr * areas[np.newaxis, :, np.newaxis] * 1e-6 * DAY_PER_YR
         yield _lonmajor_frame(arr, category, substance, drop_zero=False)
 
-    scan = _file_scan(spark, path, decode)
+    scan = scan_rasters(spark, path, decode)
     return (
         scan.groupBy("cell_id", "category", "substance")
         .agg(F.avg("value_kg_y").alias("value_kg_y"))
@@ -575,11 +491,11 @@ def lpj_guess(
                 )
             parts = name.split("_")
             sub, cat = parts[0], "_".join(parts[1:])
-            arr = _to_tlalo(v, time_name, lat_name, lon_name)
+            arr = _to_tlalo(v.data, v.dims, time_name, lat_name, lon_name)
             annual = arr.sum(axis=0) * 1e-6 * areas[:, np.newaxis]
             yield _lonmajor_frame(annual[np.newaxis, ...], cat, sub)
 
-    scan = _file_scan(spark, path, decode)
+    scan = scan_rasters(spark, path, decode)
     return scan.groupBy("cell_id", "category", "substance").agg(
         F.sum("value_kg_y").alias("value_kg_y")
     )

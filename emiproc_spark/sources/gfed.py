@@ -11,13 +11,12 @@ GFED4 ships one HDF5 file per year with groups
 with categories stripped of their ``DM_``/``C_`` prefix
 (gfed.py:170-172) and monthly ratios as the temporal profile.
 
-HDF5 is an external container format this environment cannot decode
-(no h5py); the *decode* step is therefore pluggable: the default
-decoder imports h5py inside the executor task and raises an actionable
-ImportError when absent, while :func:`gfed4_month_frames` — the entire
-emission/profile algebra — takes plain numpy arrays and is fully
-tested.  When h5py exists, the scan is the usual one-task-per-file
-``binaryFile`` + ``mapInPandas`` shape.
+The *decode* step is pluggable: the default decoder reads the HDF5
+groups with h5py inside the executor task when it is installed, and
+with the built-in pure-numpy HDF5 codec (functions/hdf5.py) otherwise,
+while :func:`gfed4_month_frames` — the entire emission/profile algebra
+— takes plain numpy arrays.  The scan is the shared one-task-per-file
+``readers.scan_files``.
 """
 
 from __future__ import annotations
@@ -28,6 +27,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from emiproc_spark.sources.netcdf import (
+    _area_grid,
+    _lonmajor_frame,
+    _to_tlalo,
+    scan_rasters,
+)
+from emiproc_spark.sources.readers import scan_files
 
 MonthData = tuple[int, str, np.ndarray]  # (month 1..12, category, kg/cell raster)
 
@@ -112,15 +119,9 @@ def gfed4_scan(
     if use_variable not in ("C", "DM"):
         raise ValueError("use_variable must be either 'C' or 'DM'")
     decode = decoder or default_h5_decoder(use_variable)
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield from gfed4_month_frames(decode(bytes(content)))
-
-    return files.mapInPandas(
-        run, schema="month int, cell_id long, category string, value_kg double"
+    return scan_files(
+        spark, path, "month int, cell_id long, category string, value_kg double",
+        lambda fpath, content: gfed4_month_frames(decode(content)),
     )
 
 
@@ -163,8 +164,8 @@ def gfed4_monthly_ratios(
 
 
 # ======================================================================
-# GFED5 — NetCDF-3-decodable daily files, one per month
-# (reference GFED5, gfed.py:308-372)
+# GFED5 — daily NetCDF files, one per month (reference GFED5,
+# gfed.py:308-372)
 # ======================================================================
 def gfed5_emissions(
     spark: SparkSession,
@@ -179,51 +180,20 @@ def gfed5_emissions(
     substance variable, sum over the days × 1e-3 × spherical cell area
     (reference gfed.py:355-364); category fixed to ``gfed``.
 
-    Unlike GFED4 this format is classic NetCDF — the pure-numpy codec
-    decodes it without external dependencies."""
-    from emiproc_spark.sources.netcdf import _centers_to_edges, spherical_cell_areas
+    Unlike GFED4 this format is plain NetCDF (classic or NetCDF-4),
+    decoded by the shared raster scan without external dependencies."""
 
-    files = spark.read.format("binaryFile").load(path).select("content")
+    def decode(fpath: str, ds) -> Iterator[pd.DataFrame]:
+        areas = _area_grid(ds, lat_name, lon_name)
+        for sub in substances:
+            if sub not in ds.variables:
+                raise ValueError(f"Substance {sub} not in the dataset.")
+            v = ds.variables[sub]
+            arr = _to_tlalo(v.data, v.dims, time_name, lat_name, lon_name)
+            total = arr.sum(axis=0) * 1e-3 * areas[:, np.newaxis]
+            yield _lonmajor_frame(total[np.newaxis, ...], category, sub)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from emiproc_spark.functions.netcdf3 import read_netcdf
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                ds = read_netcdf(bytes(content))
-                lat_c = np.asarray(ds.variables[lat_name].data, dtype=np.float64)
-                lon_c = np.asarray(ds.variables[lon_name].data, dtype=np.float64)
-                _, dlat = _centers_to_edges(lat_c)
-                _, dlon = _centers_to_edges(lon_c)
-                areas = spherical_cell_areas(lat_c, abs(dlon), abs(dlat))
-                for sub in substances:
-                    if sub not in ds.variables:
-                        raise ValueError(f"Substance {sub} not in the dataset.")
-                    v = ds.variables[sub]
-                    arr = np.asarray(v.data, dtype=np.float64)
-                    dims = list(v.dims)
-                    order = [d for d in (time_name, lat_name, lon_name) if d in dims]
-                    arr = np.transpose(arr, [dims.index(d) for d in order])
-                    if time_name not in dims:
-                        arr = arr[np.newaxis, ...]
-                    arr = np.nan_to_num(arr, nan=0.0)
-                    total = arr.sum(axis=0) * 1e-3 * areas[:, np.newaxis]
-                    flat = total.T.reshape(-1)
-                    nz = np.flatnonzero(flat)
-                    if nz.size:
-                        yield pd.DataFrame(
-                            {
-                                "cell_id": nz.astype(np.int64),
-                                "category": category,
-                                "substance": sub,
-                                "value_kg_y": flat[nz],
-                            }
-                        )
-
-    scan = files.mapInPandas(
-        run, schema="cell_id long, category string, substance string, value_kg_y double"
-    )
     # monthly files mosaic by summation
-    return scan.groupBy("cell_id", "category", "substance").agg(
-        F.sum("value_kg_y").alias("value_kg_y")
-    )
+    return scan_rasters(spark, path, decode).groupBy(
+        "cell_id", "category", "substance"
+    ).agg(F.sum("value_kg_y").alias("value_kg_y"))

@@ -8,13 +8,15 @@ cadastre cells carry kg/h (× 8766 h/yr → kg/y, reference
 gral.py:185-187, 305-307); lines carry kg/h/km (× 8766 × length_km,
 gral.py:236-241).
 
-Spark shape: per-file ``binaryFile`` decode (positional columns via
-pandas inside ``mapInPandas``), geometry encoded to WKB vectorized,
-group→(substance, category) resolution as a broadcast join.
+Spark shape: one per-file scan over every ``.dat`` file
+(``readers.scan_files``; positional columns via pandas), geometry
+encoded to WKB vectorized, group→(substance, category) resolution as a
+broadcast join.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
 from collections.abc import Iterator
@@ -24,9 +26,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
-
 from emiproc_spark.functions import geometry as geom
+from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.sources.readers import scan_files
 
 HOUR_PER_YR = 365.25 * 24.0  # reference emiproc/utils/constants.py:7
 
@@ -45,109 +47,83 @@ _SCHEMA = (
 )
 
 
-def _scan_dat(
-    spark: SparkSession, path: str, skip: int, decode
-) -> DataFrame:
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                df = pd.read_csv(
-                    io.BytesIO(bytes(content)), header=skip, index_col=False
-                )
-                if len(df):
-                    yield decode(df)
-
-    return files.mapInPandas(run, schema=_SCHEMA)
+def _column(df: pd.DataFrame, i: int, dtype=np.float64) -> np.ndarray:
+    """Positional column ``i``; an empty field (a truncated file) raises
+    instead of casting NaN into a bogus value or source group."""
+    col = df[df.columns[i]]
+    if col.isna().any():
+        raise ValueError(
+            f"column {df.columns[i]!r} has empty fields (truncated file?)"
+        )
+    return col.to_numpy(dtype=dtype)
 
 
 def _decode_points(df: pd.DataFrame) -> pd.DataFrame:
-        c = df.columns
-        x = df[c[PT_X]].to_numpy(dtype=np.float64)
-        y = df[c[PT_Y]].to_numpy(dtype=np.float64)
-        return pd.DataFrame(
-            {
-                "source_group": df[c[PT_GROUP]].to_numpy(dtype=np.int32),
-                "geometry": [geom.wkb_point(a, b) for a, b in zip(x, y)],
-                "value_kg_y": df[c[PT_EMI]].to_numpy(dtype=np.float64) * HOUR_PER_YR,
-                "height": df[c[PT_Z]].to_numpy(dtype=np.float64),
-                "width": df[c[PT_DIAM]].to_numpy(dtype=np.float64),
-                "speed": df[c[PT_SPEED]].to_numpy(dtype=np.float64),
-                "temperature": df[c[PT_TEMP]].to_numpy(dtype=np.float64),
-                "vertical_extension": np.zeros(len(df)),
-            }
-        )
-
-def gral_point_sources(spark: SparkSession, path: str) -> DataFrame:
-    """``point.dat`` → point WKB + kg/y + stack EmissionInfo fields
+    """``point.dat`` rows → point WKB + kg/y + stack EmissionInfo fields
     (reference _read_points, gral.py:164-199)."""
-    return _scan_dat(spark, path, 1, _decode_points)
+    x = _column(df, PT_X)
+    y = _column(df, PT_Y)
+    return pd.DataFrame(
+        {
+            "source_group": _column(df, PT_GROUP, np.int32),
+            "geometry": [geom.wkb_point(a, b) for a, b in zip(x, y)],
+            "value_kg_y": _column(df, PT_EMI) * HOUR_PER_YR,
+            "height": _column(df, PT_Z),
+            "width": _column(df, PT_DIAM),
+            "speed": _column(df, PT_SPEED),
+            "temperature": _column(df, PT_TEMP),
+            "vertical_extension": np.zeros(len(df)),
+        }
+    )
 
 
 def _decode_lines(df: pd.DataFrame) -> pd.DataFrame:
-        c = df.columns
-        x1 = df[c[LN_X1]].to_numpy(dtype=np.float64)
-        y1 = df[c[LN_Y1]].to_numpy(dtype=np.float64)
-        x2 = df[c[LN_X2]].to_numpy(dtype=np.float64)
-        y2 = df[c[LN_Y2]].to_numpy(dtype=np.float64)
-        km = np.hypot(x2 - x1, y2 - y1) * 1e-3
-        return pd.DataFrame(
-            {
-                "source_group": df[c[LN_GROUP]].to_numpy(dtype=np.int32),
-                "geometry": [
-                    geom.wkb_linestring([(a, b), (p, q)])
-                    for a, b, p, q in zip(x1, y1, x2, y2)
-                ],
-                "value_kg_y": df[c[LN_EMI]].to_numpy(dtype=np.float64)
-                * HOUR_PER_YR
-                * km,
-                "height": df[c[LN_Z1]].to_numpy(dtype=np.float64),
-                "width": df[c[LN_WIDTH]].to_numpy(dtype=np.float64),
-                "speed": np.zeros(len(df)),
-                "temperature": np.zeros(len(df)),
-                "vertical_extension": np.abs(
-                    df[c[LN_EXT]].to_numpy(dtype=np.float64)
-                ),
-            }
-        )
-
-def gral_line_sources(spark: SparkSession, path: str) -> DataFrame:
-    """``line.dat`` → segment WKB + kg/y (rate × hours × km, reference
-    _read_lines, gral.py:200-250)."""
-    return _scan_dat(spark, path, 4, _decode_lines)
+    """``line.dat`` rows → segment WKB + kg/y (rate × hours × km,
+    reference _read_lines, gral.py:200-250)."""
+    x1 = _column(df, LN_X1)
+    y1 = _column(df, LN_Y1)
+    x2 = _column(df, LN_X2)
+    y2 = _column(df, LN_Y2)
+    km = np.hypot(x2 - x1, y2 - y1) * 1e-3
+    return pd.DataFrame(
+        {
+            "source_group": _column(df, LN_GROUP, np.int32),
+            "geometry": [
+                geom.wkb_linestring([(a, b), (p, q)])
+                for a, b, p, q in zip(x1, y1, x2, y2)
+            ],
+            "value_kg_y": _column(df, LN_EMI) * HOUR_PER_YR * km,
+            "height": _column(df, LN_Z1),
+            "width": _column(df, LN_WIDTH),
+            "speed": np.zeros(len(df)),
+            "temperature": np.zeros(len(df)),
+            "vertical_extension": np.abs(_column(df, LN_EXT)),
+        }
+    )
 
 
 def _decode_cadastre(df: pd.DataFrame) -> pd.DataFrame:
-        c = df.columns
-        x = df[c[CAD_X]].to_numpy(dtype=np.float64)
-        y = df[c[CAD_Y]].to_numpy(dtype=np.float64)
-        dx = df[c[CAD_DX]].to_numpy(dtype=np.float64)
-        dy = df[c[CAD_DY]].to_numpy(dtype=np.float64)
-        return pd.DataFrame(
-            {
-                "source_group": df[c[CAD_GROUP]].to_numpy(dtype=np.int32),
-                "geometry": [
-                    geom.wkb_polygon(
-                        [(a, b), (a + w, b), (a + w, b + h), (a, b + h)]
-                    )
-                    for a, b, w, h in zip(x, y, dx, dy)
-                ],
-                "value_kg_y": df[c[CAD_EMI]].to_numpy(dtype=np.float64) * HOUR_PER_YR,
-                "height": df[c[CAD_Z]].to_numpy(dtype=np.float64),
-                "width": np.zeros(len(df)),
-                "speed": np.zeros(len(df)),
-                "temperature": np.zeros(len(df)),
-                "vertical_extension": df[c[CAD_DZ]].to_numpy(dtype=np.float64),
-            }
-        )
-
-def gral_cadastre_sources(spark: SparkSession, path: str) -> DataFrame:
-    """``cadastre.dat`` → axis-aligned square polygons + kg/y
+    """``cadastre.dat`` rows → axis-aligned square polygons + kg/y
     (reference _read_cadastre, gral.py:252-317)."""
-    return _scan_dat(spark, path, 0, _decode_cadastre)
+    x = _column(df, CAD_X)
+    y = _column(df, CAD_Y)
+    dx = _column(df, CAD_DX)
+    dy = _column(df, CAD_DY)
+    return pd.DataFrame(
+        {
+            "source_group": _column(df, CAD_GROUP, np.int32),
+            "geometry": [
+                geom.wkb_polygon([(a, b), (a + w, b), (a + w, b + h), (a, b + h)])
+                for a, b, w, h in zip(x, y, dx, dy)
+            ],
+            "value_kg_y": _column(df, CAD_EMI) * HOUR_PER_YR,
+            "height": _column(df, CAD_Z),
+            "width": np.zeros(len(df)),
+            "speed": np.zeros(len(df)),
+            "temperature": np.zeros(len(df)),
+            "vertical_extension": _column(df, CAD_DZ),
+        }
+    )
 
 
 # file name → (junk lines before header row, decoder)
@@ -191,32 +167,18 @@ def gral_inventory(
     ]
     if not present:
         raise FileNotFoundError(f"no point/line/cadastre .dat files in {emissions_dir}")
+
+    def decode(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:
+        skip, rows_to_sources = DAT_DECODERS[os.path.basename(fpath)]
+        df = pd.read_csv(io.BytesIO(content), header=skip, index_col=False)
+        if len(df):
+            yield rows_to_sources(df)
+
     # ONE scan over every .dat file, dispatching per file name — a single
     # Spark job instead of one per source kind
-    files = (
-        spark.read.format("binaryFile")
-        .load([os.path.join(emissions_dir, f) for f in present])
-        .select("path", "content")
+    scan = scan_files(
+        spark, [os.path.join(emissions_dir, f) for f in present], _SCHEMA, decode
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                skip, decode = DAT_DECODERS[os.path.basename(fpath)]
-                # a malformed .dat must name ITSELF, not surface as an
-                # anonymous task failure in a multi-file scan
-                try:
-                    df = pd.read_csv(
-                        io.BytesIO(bytes(content)), header=skip, index_col=False
-                    )
-                    if len(df):
-                        yield decode(df)
-                except (ValueError, KeyError) as e:
-                    raise ValueError(f"{fpath}: malformed GRAL .dat: {e}") from e
-
-    scan = files.mapInPandas(run, schema=_SCHEMA)
     mdf = local_rows_df(
         spark,
         [(g, s, c) for g, (s, c) in source_group_mapping.items()],

@@ -17,11 +17,14 @@ Layout semantics mirrored from the reference:
   (``_array_to_series``, netcdf_raster.py:37-49), or kept to build
   per-cell temporal-profile ratios (netcdf_raster.py:236-247).
 
-Spark plan: ``binaryFile`` datasource → one file per task →
-``mapInPandas`` decoding with the pure-numpy NetCDF-3 codec
-(functions/netcdf3.py) and emitting vectorized long-form batches.  At
-100 TB the input is many NetCDF files; per-file tasks parallelize the
-scan with zero driver involvement, and the decode is numpy-vectorized
+Spark plan: ``binaryFile`` datasource → one file per task
+(``readers.scan_files``) → ``mapInPandas`` decoding through
+:func:`default_container_decoder` — classic NetCDF-3 with the
+pure-numpy codec (functions/netcdf3.py), NetCDF-4/HDF5 with h5py or the
+built-in pure-numpy HDF5 codec (functions/hdf5.py) — and emitting
+vectorized long-form batches.  At 100 TB the input is many NetCDF
+files; per-file tasks parallelize the scan with zero driver
+involvement, and the decode is numpy-vectorized
 (no per-cell Python loop).  Time-mean / ratio math stays in Spark
 (groupBy / window) rather than numpy so partial aggregation and AQE
 apply when files are many.
@@ -29,12 +32,15 @@ apply when files are many.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, read_netcdf
+from emiproc_spark.sources.readers import scan_files
 
 R_EARTH = 6371000.0  # m — reference emiproc/grids.py:30
 DAY_PER_YR = 365.25
@@ -128,8 +134,6 @@ SCAN_SCHEMA = (
     "substance string, value_kg_y double"
 )
 
-_HDF5_MAGIC = b"\x89HDF\r\n\x1a\n"
-
 
 def read_netcdf4_bytes(content: bytes):
     """NetCDF-4/HDF5 container → in-memory :class:`NCDataset` via h5py
@@ -161,8 +165,6 @@ def read_netcdf4_bytes(content: bytes):
                     v.data = np.where(v.data == fv, np.nan, v.data)
         return ds
     import io
-
-    from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable
 
     ds = NCDataset()
     with h5py.File(io.BytesIO(content), "r") as f:
@@ -202,20 +204,91 @@ def read_netcdf4_bytes(content: bytes):
     return ds
 
 
-def default_container_decoder(content: bytes):
-    """Sniff the container magic: classic NetCDF-3 decodes with the
-    pure-numpy codec; HDF5 (NetCDF-4) routes through
-    :func:`read_netcdf4_bytes`."""
-    from emiproc_spark.functions.netcdf3 import read_netcdf
+def default_container_decoder(content: bytes, header_only: bool = False):
+    """The NetCDF container decision for every source: classic NetCDF-3
+    (``CDF`` magic) decodes with the pure-numpy codec, where
+    ``header_only`` skips the variable data; an HDF5 signature at offset
+    0 or behind a userblock (:func:`functions.hdf5.is_hdf5`) routes
+    NetCDF-4 through :func:`read_netcdf4_bytes` (always a full read)."""
+    from emiproc_spark.functions.hdf5 import is_hdf5
 
     if content[:3] == b"CDF":
-        return read_netcdf(content)
-    if content[: len(_HDF5_MAGIC)] == _HDF5_MAGIC:
+        return read_netcdf(content, header_only=header_only)
+    if is_hdf5(content):
         return read_netcdf4_bytes(content)
     raise ValueError(
         "unrecognized NetCDF container (neither classic CDF magic nor "
         "HDF5 signature)"
     )
+
+
+def _to_tlalo(arr, dims, time_name: str, lat_name: str, lon_name: str) -> np.ndarray:
+    """Normalize an array with dimension names ``dims`` to (time, lat,
+    lon), prepending a singleton time axis when absent; NaN → 0."""
+    arr = np.asarray(arr, dtype=np.float64)
+    dims = list(dims)
+    order = [d for d in (time_name, lat_name, lon_name) if d in dims]
+    if set(dims) != set(order):
+        raise ValueError(f"unexpected dims {dims}")
+    arr = np.transpose(arr, [dims.index(d) for d in order])
+    if time_name not in dims:
+        arr = arr[np.newaxis, ...]
+    return np.nan_to_num(arr, nan=0.0)
+
+
+def _area_grid(ds, lat_name: str, lon_name: str) -> np.ndarray:
+    """Per-lat-row spherical cell areas (m²) from coordinate centers;
+    positive whichever way either axis runs."""
+    lat_c = np.asarray(ds.variables[lat_name].data, dtype=np.float64)
+    lon_c = np.asarray(ds.variables[lon_name].data, dtype=np.float64)
+    _, dlat = _centers_to_edges(lat_c)
+    _, dlon = _centers_to_edges(lon_c)
+    return spherical_cell_areas(lat_c, abs(dlon), abs(dlat))
+
+
+def _lonmajor_frame(
+    arr: np.ndarray, cat: str, sub: str, drop_zero: bool = True
+) -> pd.DataFrame:
+    """(nt, nlat, nlon) array → long rows with lon-major cell ids
+    (``cell_id = lon_i * nlat + lat_i``, xarray
+    ``stack(cell=(lon, lat))``, netcdf_raster.py:228)."""
+    nt, nlat, nlon = arr.shape
+    flat = np.transpose(arr, (0, 2, 1)).reshape(nt, nlon * nlat)
+    cell = np.tile(np.arange(nlon * nlat, dtype=np.int64), nt)
+    t_idx = np.repeat(np.arange(nt, dtype=np.int32), nlon * nlat)
+    vals = flat.reshape(-1)
+    if drop_zero:
+        nz = vals != 0.0
+        cell, t_idx, vals = cell[nz], t_idx[nz], vals[nz]
+    return pd.DataFrame(
+        {
+            "t_index": t_idx,
+            "cell_id": cell,
+            "category": cat,
+            "substance": sub,
+            "value_kg_y": vals,
+        }
+    )
+
+
+def scan_rasters(
+    spark: SparkSession,
+    path: str,
+    decode: Callable[[str, object], Iterator[pd.DataFrame]],
+    container_decoder=None,
+) -> DataFrame:
+    """The NetCDF raster scan: one task per file; ``decode(fpath, ds)``
+    yields :func:`_lonmajor_frame` batches, emitted as ``SCAN_SCHEMA``
+    rows tagged with their file.  ``container_decoder`` (bytes →
+    NCDataset-like) defaults to :func:`default_container_decoder`."""
+    open_ds = container_decoder or default_container_decoder
+
+    def run(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:
+        for out in decode(fpath, open_ds(content)):
+            out.insert(0, "file", fpath)
+            yield out
+
+    return scan_files(spark, path, SCAN_SCHEMA, run)
 
 
 def scan_netcdf(
@@ -234,83 +307,33 @@ def scan_netcdf(
     time dimension emit ``t_index = 0``.
 
     ``container_decoder``: bytes → NCDataset-like (``dims`` dict +
-    ``variables`` of (dims, data, attrs)).  Defaults to magic-byte
-    dispatch between the built-in NetCDF-3 codec and the h5py-gated
-    NetCDF-4 reader; inject a custom decoder for exotic containers.
+    ``variables`` of (dims, data, attrs)).  Defaults to
+    :func:`default_container_decoder` (the built-in NetCDF-3 codec or
+    the NetCDF-4 reader); inject a custom decoder for exotic containers.
 
     Building block for :func:`from_netcdf_rasters` (time-mean inventory)
     and :func:`netcdf_temporal_ratios` (per-cell profile ratios).
     """
-    decoder = container_decoder or default_container_decoder
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    def decode(fpath: str, ds) -> Iterator[pd.DataFrame]:
+        for var, cat, sub in _resolve_mapping(ds, var_to_catsub, lon_name, lat_name):
+            v = ds.variables[var]
+            arr, dims = v.data, list(v.dims)
+            # select the category slab when a category dim exists
+            if "category" in dims and "category" in ds.variables:
+                sel = _char_labels(ds.variables["category"].data).index(cat)
+                arr = np.take(arr, sel, axis=dims.index("category"))
+                dims.remove("category")
+            arr = _to_tlalo(arr, dims, time_name, lat_name, lon_name)
+            this_unit = unit or v.attrs.get("units")
+            if this_unit is None:
+                raise ValueError(f"no unit for variable {var!r}")
+            factor, by_area = unit_scaling(this_unit, sub)
+            if by_area:
+                arr = arr * _area_grid(ds, lat_name, lon_name)[np.newaxis, :, np.newaxis]
+            yield _lonmajor_frame(arr * factor, cat, sub, drop_zero)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                ds = decoder(bytes(content))
-                nlat = ds.dims[lat_name]
-                nlon = ds.dims[lon_name]
-                for var, cat, sub in _resolve_mapping(
-                    ds, var_to_catsub, lon_name, lat_name
-                ):
-                    v = ds.variables[var]
-                    arr = np.asarray(v.data, dtype=np.float64)
-                    dims = list(v.dims)
-                    # select the category slab when a category dim exists
-                    if "category" in dims and "category" in ds.variables:
-                        labels = _char_labels(ds.variables["category"].data)
-                        sel = labels.index(cat)
-                        arr = np.take(arr, sel, axis=dims.index("category"))
-                        dims.remove("category")
-                    # normalize axis order to (time?, lat, lon)
-                    order = [d for d in (time_name, lat_name, lon_name) if d in dims]
-                    if set(dims) != set(order):
-                        raise ValueError(f"unexpected dims {dims} on {var}")
-                    arr = np.transpose(arr, [dims.index(d) for d in order])
-                    if time_name not in dims:
-                        arr = arr[np.newaxis, ...]
-                    nt = arr.shape[0]
-                    arr = np.nan_to_num(arr, nan=0.0)
-
-                    this_unit = unit or v.attrs.get("units")
-                    if this_unit is None:
-                        raise ValueError(f"no unit for variable {var!r}")
-                    factor, by_area = unit_scaling(this_unit, sub)
-                    if by_area:
-                        lat_c = np.asarray(
-                            ds.variables[lat_name].data, dtype=np.float64
-                        )
-                        lon_c = np.asarray(
-                            ds.variables[lon_name].data, dtype=np.float64
-                        )
-                        _, dlat = _centers_to_edges(lat_c)
-                        _, dlon = _centers_to_edges(lon_c)
-                        areas = spherical_cell_areas(lat_c, dlon, abs(dlat))
-                        arr = arr * areas[np.newaxis, :, np.newaxis]
-                    arr = arr * factor
-
-                    # lon-major stacking: cell_id = lon_i * nlat + lat_i
-                    # (xarray stack(cell=(lon, lat)), netcdf_raster.py:228)
-                    flat = np.transpose(arr, (0, 2, 1)).reshape(nt, nlon * nlat)
-                    cell = np.tile(np.arange(nlon * nlat, dtype=np.int64), nt)
-                    t_idx = np.repeat(np.arange(nt, dtype=np.int32), nlon * nlat)
-                    vals = flat.reshape(-1)
-                    if drop_zero:
-                        nz = vals != 0.0
-                        cell, t_idx, vals = cell[nz], t_idx[nz], vals[nz]
-                    yield pd.DataFrame(
-                        {
-                            "file": fpath,
-                            "t_index": t_idx,
-                            "cell_id": cell,
-                            "category": cat,
-                            "substance": sub,
-                            "value_kg_y": vals,
-                        }
-                    )
-
-    return files.mapInPandas(decode, schema=SCAN_SCHEMA)
+    return scan_rasters(spark, path, decode, container_decoder)
 
 
 def from_netcdf_rasters(
@@ -390,9 +413,8 @@ def netcdf_regular_grid(
     file's coordinate variables — RegularGrid.from_centers semantics
     (reference grids.py:429-480).  Dimension-scale driver-side read:
     coordinates are tiny; the data variables are never touched here."""
-    from emiproc_spark.functions.netcdf3 import read_netcdf
-
-    ds = read_netcdf(path)
+    with open(path, "rb") as f:
+        ds = default_container_decoder(f.read())
     lon_c = np.asarray(ds.variables[lon_name].data, dtype=np.float64)
     lat_c = np.asarray(ds.variables[lat_name].data, dtype=np.float64)
     _, dlon = _centers_to_edges(lon_c)

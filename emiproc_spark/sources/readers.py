@@ -13,11 +13,14 @@ edge.  Here that shape is a small set of composable ingest primitives:
 - ``from_duckdb`` — DuckDB databases (reference
   inventories/zurich/duck.py:84-154) via Arrow, no JDBC needed;
 - ``from_netcdf_raster`` — generic NetCDF raster ingest (reference
-  inventories/netcdf_raster.py:112-295) via the pure-numpy NetCDF-3
-  codec (functions/netcdf3.py) decoded in executors — see
+  inventories/netcdf_raster.py:112-295): classic NetCDF-3 and
+  NetCDF-4/HDF5 containers decoded in executors by the package's own
+  pure-numpy codecs (functions/netcdf3.py, functions/hdf5.py) — see
   sources/netcdf.py for the distributed plan;
 - ``from_csv_emissions`` — delimited text (reference GRAL/Swiss CSV
-  paths).
+  paths);
+- ``scan_files`` — the one per-file scan every file-format source
+  (NetCDF, HDF5, ESRI ASCII, GRAL ``.dat``) decodes through.
 
 Unit conversion: ``convert_units`` implements the reference's
 kg/m²/s → kg/y/cell and t → kg rules (utils/units.py:11-45,
@@ -26,6 +29,9 @@ edgar tonnes ×1e3 edgarv8.py:224-231).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -172,9 +178,46 @@ def from_netcdf_raster(
     inventories/netcdf_raster.py:112-295): each variable maps to a
     (category, substance); cells are the lon-major flattened raster.
 
-    Real implementation in :mod:`emiproc_spark.sources.netcdf` — a
-    pure-numpy NetCDF-3 codec decoded inside ``mapInPandas`` executors
+    Real implementation in :mod:`emiproc_spark.sources.netcdf` —
+    NetCDF-3 or NetCDF-4 files decoded inside ``mapInPandas`` executors
     over per-file ``binaryFile`` tasks (no xarray dependency)."""
     from emiproc_spark.sources.netcdf import from_netcdf_rasters
 
     return from_netcdf_rasters(spark, path, var_to_catsub, unit=unit, **kwargs)
+
+
+def _binary_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """(path, content) per non-empty file under ``path`` — the package's
+    one ``binaryFile`` read."""
+    return spark.read.format("binaryFile").load(path).select("path", "content")
+
+
+def scan_files(
+    spark: SparkSession,
+    path: str | list[str],
+    schema: str,
+    decode: Callable[[str, bytes], Iterator[pd.DataFrame]],
+) -> DataFrame:
+    """One Spark task per file: ``decode(fpath, content)`` yields pandas
+    frames matching ``schema``.  A decode error is re-raised as a
+    ``ValueError`` prefixed with the failing file's path, so a corrupt
+    file in a directory scan names itself instead of surfacing as an
+    anonymous task failure."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for fpath, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    yield from decode(fpath, bytes(content))
+                except Exception as e:
+                    raise ValueError(f"{fpath}: {e}") from e
+
+    return _binary_files(spark, path).mapInPandas(run, schema=schema)
+
+
+def require_one_file(spark: SparkSession, path: str, reader: str, why: str) -> None:
+    """Raise unless ``path`` matches exactly one non-empty file — for
+    grid readers whose cell ids are per-file indexes."""
+    n_files = _binary_files(spark, path).select("path").distinct().count()
+    if n_files != 1:
+        raise ValueError(f"{reader}: {path!r} matched {n_files} files; {why}")

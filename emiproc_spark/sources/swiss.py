@@ -14,13 +14,14 @@ Layout semantics:
   (swiss.py:87-105) and are corrected for point sources per category
   (swiss.py:115-189).
 
-Spark plan: ``binaryFile`` per-raster tasks decode + normalize
+Spark plan: per-raster ``readers.scan_files`` tasks decode + normalize
 vectorized; the totals join is a broadcast; the correction algebra is
 pure DataFrame arithmetic on dimension-sized tables.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.sources.readers import scan_files
 
 # reference default_point_source_correction modes (swiss.py:14-31)
 KEEP_RASTER_ONLY = "keep_raster_only"
@@ -90,36 +92,24 @@ def scan_swiss_rasters(
     swiss.py:285).  With ``normalize_keys`` the per-file sum is attached
     for later normalization without a second shuffle.
     """
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
+    def decode(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:
+        _, arr = parse_ascii_grid(content.decode("ascii"))
+        flat = arr.T[:, ::-1].reshape(-1)
+        nz = np.flatnonzero(flat)
+        yield pd.DataFrame(
+            {
+                "raster_key": os.path.splitext(os.path.basename(fpath))[0],
+                "cell_id": nz.astype(np.int64),
+                "value": flat[nz],
+                "file_total": float(flat.sum()),
+            }
+        )
 
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                stem = os.path.splitext(os.path.basename(fpath))[0]
-                # a corrupt file in a directory scan must name ITSELF,
-                # not surface as an anonymous task failure
-                try:
-                    _, arr = parse_ascii_grid(
-                        bytes(content).decode("ascii")
-                    )
-                except (ValueError, UnicodeDecodeError) as e:
-                    raise ValueError(f"{fpath}: {e}") from e
-                flat = arr.T[:, ::-1].reshape(-1)
-                nz = np.flatnonzero(flat)
-                yield pd.DataFrame(
-                    {
-                        "raster_key": stem,
-                        "cell_id": nz.astype(np.int64),
-                        "value": flat[nz],
-                        "file_total": float(flat.sum()),
-                    }
-                )
-
-    return files.mapInPandas(
+    return scan_files(
+        spark, path,
+        "raster_key string, cell_id long, value double, file_total double",
         decode,
-        schema="raster_key string, cell_id long, value double, file_total double",
     )
 
 

@@ -21,8 +21,9 @@ Layout semantics mirrored from the reference:
   ``strict_mapping=True`` raises when a mapped substance is absent
   from the file (the reference's error; default stays lazy).
 
-Spark plan: ``binaryFile`` → per-file ``mapInPandas`` decode with the
-pure-numpy NetCDF-3 codec emitting one long row per (source, substance)
+Spark plan: ``binaryFile`` → per-file ``mapInPandas`` decode (classic
+NetCDF-3 or NetCDF-4/HDF5, through ``netcdf.default_container_decoder``)
+emitting one long row per (source, substance)
 — numpy-vectorized, no per-source Python loop — then category /
 substance resolution and the area scatter-add as JVM-side broadcast
 joins + hash aggregation.  At scale the decode parallelizes per file
@@ -39,14 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from emiproc_spark.localdf import local_rows_df
-
-
-def _char_list(arr: np.ndarray) -> list[str]:
-    arr = np.asarray(arr)
-    if arr.ndim == 1:
-        return [b"".join(arr).decode().rstrip("\x00 ")]
-    return [b"".join(row).decode().rstrip("\x00 ") for row in arr]
-
+from emiproc_spark.sources.netcdf import _char_labels, default_container_decoder
+from emiproc_spark.sources.readers import scan_files
 
 TNO_SCAN_SCHEMA = (
     "file string, source_id long, source_type string, cell_id long, "
@@ -67,82 +62,61 @@ def scan_tno(
     precomputed (sentinel −1 for point sources — the long column holds
     no NULLs) and category codes resolved.
     """
-    # magic-dispatched: classic NetCDF-3 via the pure-numpy codec, real
-    # TNO NetCDF-4/HDF5 distributions via h5py or the built-in minimal
-    # HDF5 codec (functions/hdf5.py)
-    from emiproc_spark.sources.netcdf import default_container_decoder
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    def decode(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:
+        # classic NetCDF-3 or the real TNO NetCDF-4/HDF5 distributions
+        ds = default_container_decoder(content)
+        ny = ds.dims[lat_dim]
+        type_codes = _char_labels(ds.variables["source_type_code"].data)
+        cat_codes = _char_labels(ds.variables["emis_cat_code"].data)
+        st_idx = np.asarray(ds.variables["source_type_index"].data, dtype=np.int64)
+        cat_idx = np.asarray(
+            ds.variables["emission_category_index"].data, dtype=np.int64
+        )
+        lon_i = np.asarray(ds.variables["longitude_index"].data, dtype=np.int64)
+        lat_i = np.asarray(ds.variables["latitude_index"].data, dtype=np.int64)
+        n = st_idx.size
+        # 1-based indices (tno.py:146 "Indexes start at 1")
+        types = np.array([t.strip() for t in type_codes])[st_idx - 1]
+        unknown = set(np.unique(types)) - {"a", "p"}
+        if unknown:
+            raise NotImplementedError(f"Unknown source_type_code {sorted(unknown)}")
+        cats = np.array(cat_codes)[cat_idx - 1]
+        is_area = types == "a"
+        cell = np.where(is_area, (lon_i - 1) * ny + (lat_i - 1), -1)
+        lon_s = np.asarray(ds.variables["longitude_source"].data, dtype=np.float64)
+        lat_s = np.asarray(ds.variables["latitude_source"].data, dtype=np.float64)
+        emis_vars = [
+            name
+            for name, v in ds.variables.items()
+            if source_dim in v.dims
+            and str(v.attrs.get("long_name", "")).startswith("emission of")
+        ]
+        if not emis_vars:
+            raise ValueError("no emission variables found")
+        src_ids = np.arange(n, dtype=np.int64)
+        for var in emis_vars:
+            vals = np.asarray(ds.variables[var].data, dtype=np.float64)
+            keep = (
+                (vals != 0.0) & ~np.isnan(vals) if drop_zero else np.ones(n, dtype=bool)
+            )
+            out = pd.DataFrame(
+                {
+                    "file": fpath,
+                    "source_id": src_ids[keep],
+                    "source_type": np.where(is_area[keep], "area", "point"),
+                    "cell_id": cell[keep],
+                    "lon": lon_s[keep],
+                    "lat": lat_s[keep],
+                    "category": cats[keep],
+                    "file_substance": var,
+                    "value_kg_y": vals[keep],
+                }
+            )
+            out.loc[out["source_type"] == "area", ["lon", "lat"]] = np.nan
+            yield out
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                ds = default_container_decoder(bytes(content))
-                ny = ds.dims[lat_dim]
-                type_codes = _char_list(ds.variables["source_type_code"].data)
-                cat_codes = _char_list(ds.variables["emis_cat_code"].data)
-                st_idx = np.asarray(
-                    ds.variables["source_type_index"].data, dtype=np.int64
-                )
-                cat_idx = np.asarray(
-                    ds.variables["emission_category_index"].data, dtype=np.int64
-                )
-                lon_i = np.asarray(
-                    ds.variables["longitude_index"].data, dtype=np.int64
-                )
-                lat_i = np.asarray(
-                    ds.variables["latitude_index"].data, dtype=np.int64
-                )
-                n = st_idx.size
-                # 1-based indices (tno.py:146 "Indexes start at 1")
-                types = np.array([t.strip() for t in type_codes])[st_idx - 1]
-                unknown = set(np.unique(types)) - {"a", "p"}
-                if unknown:
-                    raise NotImplementedError(
-                        f"Unknown source_type_code {sorted(unknown)}"
-                    )
-                cats = np.array(cat_codes)[cat_idx - 1]
-                is_area = types == "a"
-                cell = np.where(is_area, (lon_i - 1) * ny + (lat_i - 1), -1)
-                lon_s = np.asarray(
-                    ds.variables["longitude_source"].data, dtype=np.float64
-                )
-                lat_s = np.asarray(
-                    ds.variables["latitude_source"].data, dtype=np.float64
-                )
-                emis_vars = [
-                    name
-                    for name, v in ds.variables.items()
-                    if source_dim in v.dims
-                    and str(v.attrs.get("long_name", "")).startswith("emission of")
-                ]
-                if not emis_vars:
-                    raise ValueError(f"no emission variables found in {fpath}")
-                src_ids = np.arange(n, dtype=np.int64)
-                for var in emis_vars:
-                    vals = np.asarray(ds.variables[var].data, dtype=np.float64)
-                    keep = (
-                        (vals != 0.0) & ~np.isnan(vals)
-                        if drop_zero
-                        else np.ones(n, dtype=bool)
-                    )
-                    out = pd.DataFrame(
-                        {
-                            "file": fpath,
-                            "source_id": src_ids[keep],
-                            "source_type": np.where(is_area[keep], "area", "point"),
-                            "cell_id": cell[keep],
-                            "lon": lon_s[keep],
-                            "lat": lat_s[keep],
-                            "category": cats[keep],
-                            "file_substance": var,
-                            "value_kg_y": vals[keep],
-                        }
-                    )
-                    out.loc[out["source_type"] == "area", ["lon", "lat"]] = np.nan
-                    yield out
-
-    return files.mapInPandas(decode, schema=TNO_SCAN_SCHEMA)
+    return scan_files(spark, path, TNO_SCAN_SCHEMA, decode)
 
 
 def _apply_substance_mapping(
@@ -322,8 +296,6 @@ def tno_gridded_profiles(
     # nulls, so count them explicitly — a malformed CSV row (empty or
     # unparsable coordinate under the strict schema) must fail loudly,
     # not silently vanish from the equi-join below and lose mass
-    import numpy as np
-
     axes = df.agg(
         F.collect_set("longitude").alias("lons"),
         F.collect_set("latitude").alias("lats"),

@@ -8,14 +8,14 @@ between y-neighbors).  Cell corners are reconstructed from the center
 plus the left/right/top/bottom edge offsets exactly like the reference
 (wrf.py:66-117), vectorized end-to-end.
 
-Spark shape: the wrfinput file decodes executor-side (``mapInPandas``
-over ``binaryFile``, magic-dispatched to the NetCDF-3 or built-in HDF5
-codec), corner algebra and WKB encoding are numpy-batched, and the
-output schema matches the ICON mesh table — (cell_id, geometry, bbox,
-lon, lat, area_m2) — so ``weights_poly_poly``/``weights_poly_rect``
-remap onto it unchanged.  ``cell_id = x·ny + y`` (the reference's
-``.T.reshape(-1)`` lon-major convention, shared with
-``exports/wrf.py``'s unstack).
+Spark shape: the wrfinput file decodes executor-side
+(``readers.scan_files``, through ``netcdf.default_container_decoder``
+to the NetCDF-3 or the NetCDF-4/HDF5 codec), corner algebra and WKB
+encoding are numpy-batched, and the output schema matches the ICON
+mesh table — (cell_id, geometry, bbox, lon, lat, area_m2) — so
+``weights_poly_poly``/``weights_poly_rect`` remap onto it unchanged.
+``cell_id = x·ny + y`` (the reference's ``.T.reshape(-1)`` lon-major
+convention, shared with ``exports/wrf.py``'s unstack).
 """
 
 from __future__ import annotations
@@ -27,7 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from emiproc_spark.functions.geometry import ring_wkb_batch
-from emiproc_spark.sources.netcdf import R_EARTH
+from emiproc_spark.sources.netcdf import R_EARTH, default_container_decoder
+from emiproc_spark.sources.readers import require_one_file, scan_files
 
 WRF_GRID_SCHEMA = (
     "cell_id long, geometry binary, xmin double, ymin double, "
@@ -52,79 +53,72 @@ def spherical_polygon_areas(qlon: np.ndarray, qlat: np.ndarray) -> np.ndarray:
 
 def wrf_grid(spark: SparkSession, path: str, batch_rows: int = 65536) -> DataFrame:
     """wrfinput file(s) → grid table (see module docstring)."""
-    from emiproc_spark.sources.netcdf import default_container_decoder
+    require_one_file(
+        spark, path, "wrf_grid",
+        "WRF cell ids are per-domain — load each wrfinput separately and "
+        "offset cell_ids before unioning (same contract as icon_mesh_grid)",
+    )
 
-    files = spark.read.format("binaryFile").load(path)
-    n_files = files.select("path").distinct().count()
-    if n_files != 1:
-        raise ValueError(
-            f"wrf_grid: {path!r} matched {n_files} files; WRF cell ids are "
-            "per-domain — load each wrfinput separately and offset "
-            "cell_ids before unioning (same contract as icon_mesh_grid)"
+    def decode(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:
+        ds = default_container_decoder(content)
+
+        def first_time(name: str) -> np.ndarray:
+            d = np.asarray(ds.variables[name].data, dtype=np.float64)
+            return d[0] if d.ndim == 3 else d
+
+        center_lon2 = first_time("XLONG")  # (ny, nx)
+        center_lat2 = first_time("XLAT")
+        lon_u = first_time("XLONG_U")  # (ny, nx+1)
+        lat_u = first_time("XLAT_U")
+        lon_v = first_time("XLONG_V")  # (ny+1, nx)
+        lat_v = first_time("XLAT_V")
+        ny, nx = center_lon2.shape
+
+        # reference's lon-major flattening (wrf.py:55-57)
+        rs = lambda a: a.T.reshape(-1)  # noqa: E731
+        c_lon, c_lat = rs(center_lon2), rs(center_lat2)
+        left_lon, right_lon = rs(lon_u[:, :-1]), rs(lon_u[:, 1:])
+        left_lat, right_lat = rs(lat_u[:, :-1]), rs(lat_u[:, 1:])
+        bot_lon, top_lon = rs(lon_v[:-1, :]), rs(lon_v[1:, :])
+        bot_lat, top_lat = rs(lat_v[:-1, :]), rs(lat_v[1:, :])
+
+        # corner = center + edge offsets (wrf.py:83-117):
+        # BL, BR, TR, TL
+        qlon = np.stack(
+            [
+                c_lon + (left_lon - c_lon) + (bot_lon - c_lon),
+                c_lon + (right_lon - c_lon) + (bot_lon - c_lon),
+                c_lon + (right_lon - c_lon) + (top_lon - c_lon),
+                c_lon + (left_lon - c_lon) + (top_lon - c_lon),
+            ],
+            axis=1,
         )
-    files = files.select("content")
+        qlat = np.stack(
+            [
+                c_lat + (left_lat - c_lat) + (bot_lat - c_lat),
+                c_lat + (right_lat - c_lat) + (bot_lat - c_lat),
+                c_lat + (right_lat - c_lat) + (top_lat - c_lat),
+                c_lat + (left_lat - c_lat) + (top_lat - c_lat),
+            ],
+            axis=1,
+        )
+        n = nx * ny
+        areas = spherical_polygon_areas(qlon, qlat)
+        for lo in range(0, n, batch_rows):
+            sl = slice(lo, min(lo + batch_rows, n))
+            yield pd.DataFrame(
+                {
+                    "cell_id": np.arange(sl.start, sl.stop, dtype=np.int64),
+                    "geometry": ring_wkb_batch(qlon[sl], qlat[sl]),
+                    "xmin": qlon[sl].min(axis=1),
+                    "ymin": qlat[sl].min(axis=1),
+                    "xmax": qlon[sl].max(axis=1),
+                    "ymax": qlat[sl].max(axis=1),
+                    "lon": c_lon[sl],
+                    "lat": c_lat[sl],
+                    "area_m2": areas[sl],
+                }
+            )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                ds = default_container_decoder(bytes(content))
 
-                def first_time(name: str) -> np.ndarray:
-                    d = np.asarray(ds.variables[name].data, dtype=np.float64)
-                    return d[0] if d.ndim == 3 else d
-
-                center_lon2 = first_time("XLONG")  # (ny, nx)
-                center_lat2 = first_time("XLAT")
-                lon_u = first_time("XLONG_U")  # (ny, nx+1)
-                lat_u = first_time("XLAT_U")
-                lon_v = first_time("XLONG_V")  # (ny+1, nx)
-                lat_v = first_time("XLAT_V")
-                ny, nx = center_lon2.shape
-
-                # reference's lon-major flattening (wrf.py:55-57)
-                rs = lambda a: a.T.reshape(-1)  # noqa: E731
-                c_lon, c_lat = rs(center_lon2), rs(center_lat2)
-                left_lon, right_lon = rs(lon_u[:, :-1]), rs(lon_u[:, 1:])
-                left_lat, right_lat = rs(lat_u[:, :-1]), rs(lat_u[:, 1:])
-                bot_lon, top_lon = rs(lon_v[:-1, :]), rs(lon_v[1:, :])
-                bot_lat, top_lat = rs(lat_v[:-1, :]), rs(lat_v[1:, :])
-
-                # corner = center + edge offsets (wrf.py:83-117):
-                # BL, BR, TR, TL
-                qlon = np.stack(
-                    [
-                        c_lon + (left_lon - c_lon) + (bot_lon - c_lon),
-                        c_lon + (right_lon - c_lon) + (bot_lon - c_lon),
-                        c_lon + (right_lon - c_lon) + (top_lon - c_lon),
-                        c_lon + (left_lon - c_lon) + (top_lon - c_lon),
-                    ],
-                    axis=1,
-                )
-                qlat = np.stack(
-                    [
-                        c_lat + (left_lat - c_lat) + (bot_lat - c_lat),
-                        c_lat + (right_lat - c_lat) + (bot_lat - c_lat),
-                        c_lat + (right_lat - c_lat) + (top_lat - c_lat),
-                        c_lat + (left_lat - c_lat) + (top_lat - c_lat),
-                    ],
-                    axis=1,
-                )
-                n = nx * ny
-                areas = spherical_polygon_areas(qlon, qlat)
-                for lo in range(0, n, batch_rows):
-                    sl = slice(lo, min(lo + batch_rows, n))
-                    yield pd.DataFrame(
-                        {
-                            "cell_id": np.arange(sl.start, sl.stop, dtype=np.int64),
-                            "geometry": ring_wkb_batch(qlon[sl], qlat[sl]),
-                            "xmin": qlon[sl].min(axis=1),
-                            "ymin": qlat[sl].min(axis=1),
-                            "xmax": qlon[sl].max(axis=1),
-                            "ymax": qlat[sl].max(axis=1),
-                            "lon": c_lon[sl],
-                            "lat": c_lat[sl],
-                            "area_m2": areas[sl],
-                        }
-                    )
-
-    return files.mapInPandas(decode, schema=WRF_GRID_SCHEMA)
+    return scan_files(spark, path, WRF_GRID_SCHEMA, decode)

@@ -156,3 +156,48 @@ def test_no_module_level_store_dicts():
             ):
                 found.append(f"{os.path.basename(path)}:{node.lineno}")
     assert not found, f"module-level store dicts: {found}"
+
+
+def test_sources_share_one_file_scan_and_one_container_decision():
+    """Every file-format source reads through ``readers.scan_files`` (the
+    one ``binaryFile`` read), and NetCDF bytes are sniffed and decoded
+    only in ``netcdf.default_container_decoder`` (its HDF5 branch is
+    ``read_netcdf4_bytes``).  GFED4's HDF5 group reader
+    (``gfed.default_h5_decoder``) is the one other raw-HDF5 decode."""
+    import ast
+    import glob
+    import os
+    import re
+
+    import emiproc_spark.sources
+
+    pkg = os.path.dirname(emiproc_spark.sources.__file__)
+    reads, decodes, sniffs = [], set(), set()
+    for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
+        module = os.path.basename(path)
+        src = open(path).read()
+        reads += [
+            f"{module}:{n}"
+            for n, line in enumerate(src.splitlines(), 1)
+            if re.search(r"""format\(\s*["']binaryFile["']\s*\)""", line)
+        ]
+        for top in ast.parse(src).body:
+            where = (module, getattr(top, "name", None))
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                    if name in ("read_netcdf", "read_netcdf4", "read_hdf5"):
+                        decodes.add(where)
+                    if name == "is_hdf5":
+                        sniffs.add(where)
+                if isinstance(node, ast.Constant) and isinstance(node.value, bytes):
+                    if node.value.startswith((b"CDF", b"\x89HDF")):
+                        sniffs.add(where)
+    assert len(reads) == 1 and reads[0].startswith("readers.py:"), reads
+    assert sniffs == {("netcdf.py", "default_container_decoder")}, sniffs
+    assert decodes <= {
+        ("netcdf.py", "default_container_decoder"),
+        ("netcdf.py", "read_netcdf4_bytes"),
+        ("gfed.py", "default_h5_decoder"),
+    }, decodes

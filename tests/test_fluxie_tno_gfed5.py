@@ -186,3 +186,9 @@ def test_gfed5(spark, tmp_path):
 
     with pytest.raises(Exception, match="not in the dataset"):
         gfed5_emissions(spark, str(tmp_path), substances=["XX"]).collect()
+
+
+def test_gfed5_netcdf4_gives_equal_rows(rows_per_writer):
+    rows = rows_per_writer(test_gfed5, ["gfed5_emissions"])
+    assert rows["write_netcdf4"] == rows["write_netcdf"]
+    assert rows["write_netcdf"]

@@ -273,3 +273,31 @@ def test_edgar_v8_categories_follows_attribute_rule(spark, tmp_path):
         .select("category").distinct().collect()
     }
     assert got == set(cats)
+
+
+@pytest.mark.parametrize(
+    "reader_test",
+    [
+        test_edgar_v8,
+        test_edgar_legacy_lon_wrap,
+        test_gfas,
+        test_cams_reg_aq,
+        test_saunois,
+        test_wetcharts_model_mean_and_select,
+        test_lpj_guess,
+        test_edgar_v8_categories_follows_attribute_rule,
+    ],
+    ids=lambda t: t.__name__[len("test_"):],
+)
+def test_netcdf4_gives_equal_rows(rows_per_writer, reader_test):
+    """Every reader test above passes with its fixtures written as
+    NetCDF-4, and each reader call returns the same rows as from the
+    classic file."""
+    rows = rows_per_writer(
+        reader_test,
+        ["edgar_v8", "edgar_legacy", "gfas_emissions", "gfas_temporal_ratios",
+         "cams_reg_aq", "saunois_emissions", "saunois_temporal_ratios",
+         "wetcharts", "lpj_guess"],
+    )
+    assert rows["write_netcdf4"] == rows["write_netcdf"]
+    assert rows["write_netcdf"]

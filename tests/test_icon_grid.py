@@ -130,3 +130,28 @@ def test_remap_through_wrapped_cell_sums_both_parts(spark, tmp_path):
     # both sides found the (single) mesh cell with nonzero overlap
     assert set(got) == {0, 100}
     assert all(v > 0.1 for v in got.values())
+
+
+@pytest.mark.parametrize(
+    "reader, why",
+    [
+        ("icon_mesh_grid", "ICON cell ids are per-file — pass a single grid "
+         "file (load multiple domains separately and offset cell_ids before "
+         "unioning)"),
+        ("wrf_grid", "WRF cell ids are per-domain — load each wrfinput "
+         "separately and offset cell_ids before unioning (same contract as "
+         "icon_mesh_grid)"),
+    ],
+)
+def test_grid_readers_reject_multiple_files(spark, tmp_path, reader, why):
+    """Grid readers with per-file cell ids raise when the path matches
+    two files, before any decode (the files are junk).  A zero-length
+    file is not counted: the file scan skips it."""
+    from emiproc_spark.sources.wrf_grid import wrf_grid
+
+    for name, data in (("a.nc", b"junk"), ("b.nc", b"junk"), ("empty.nc", b"")):
+        (tmp_path / name).write_bytes(data)
+    read = {"icon_mesh_grid": icon_mesh_grid, "wrf_grid": wrf_grid}[reader]
+    with pytest.raises(ValueError) as err:
+        read(spark, str(tmp_path))
+    assert str(err.value) == f"{reader}: {str(tmp_path)!r} matched 2 files; {why}"

@@ -223,3 +223,49 @@ def test_netcdf4_roundtrip_with_h5py(spark, tmp_path):
     assert {(r["cell_id"], r["value_kg_y"]) for r in out} == {
         (0, 1.0), (2, 2.0), (3, 5.0), (5, 6.0)
     }
+
+
+def test_grid_table_netcdf4_gives_equal_rows(rows_per_writer):
+    rows = rows_per_writer(test_grid_table, ["netcdf_regular_grid"])
+    assert rows["write_netcdf4"] == rows["write_netcdf"]
+    assert rows["write_netcdf"]
+
+
+def test_userblocked_netcdf4_ingests_like_plain(spark, tmp_path):
+    """A NetCDF-4 file behind a 512-byte HDF5 userblock is recognized as
+    HDF5 and ingests with the same rows as the plain file."""
+    from emiproc_spark.functions.hdf5_write import write_netcdf4
+    from emiproc_spark.functions.netcdf3 import read_netcdf
+
+    arr = np.array([[1.0, 2.0, 0.0], [4.0, 5.0, 6.0]])
+    blob = write_netcdf4(None, read_netcdf(_raster_nc(tmp_path / "a.nc", {"v": arr})))
+    (tmp_path / "plain.nc").write_bytes(blob)
+    (tmp_path / "userblock.nc").write_bytes(b"\0" * 512 + blob)
+
+    def rows(name):
+        out = from_netcdf_rasters(spark, str(tmp_path / name), {"v": ("c", "s")})
+        return sorted(map(tuple, out.collect()))
+
+    assert rows("userblock.nc") == rows("plain.nc") == rows("a.nc")
+    assert len(rows("plain.nc")) == 5
+
+
+def test_descending_longitudes_give_positive_totals(spark, tmp_path):
+    """A per-area raster whose longitudes run east to west ingests the
+    same positive total as its ascending mirror."""
+    from emiproc_spark.functions.netcdf3 import read_netcdf
+
+    arr = np.array([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]]) * 1e-9
+    asc = _raster_nc(tmp_path / "asc.nc", {"v": arr}, units="kg/m2/s")
+    ds = read_netcdf(asc)
+    ds.variables["lon"].data = LON[::-1].copy()
+    ds.variables["v"].data = arr[:, ::-1].copy()
+    desc = str(tmp_path / "desc.nc")
+    write_netcdf(desc, ds)
+
+    def total(p):
+        out = from_netcdf_rasters(spark, p, {"v": ("c", "s")}).toPandas()
+        return out["value_kg_y"].sum()
+
+    assert total(asc) > 0
+    assert total(desc) == pytest.approx(total(asc), rel=1e-12)

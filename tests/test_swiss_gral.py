@@ -233,6 +233,104 @@ def test_swiss_scan_names_corrupt_file(spark, tmp_path):
         scan_swiss_rasters(spark, str(tmp_path)).collect()
 
 
+def _raster_file(path):
+    """One small lat/lon NetCDF that the generic, EDGAR v8 and GFED5
+    readers all accept."""
+    from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
+
+    ones = np.ones((2, 2))
+    ds = NCDataset()
+    ds.dims = {"lat": 2, "lon": 2}
+    ds.variables["lon"] = NCVariable("lon", ("lon",), np.array([0.5, 1.5]))
+    ds.variables["lat"] = NCVariable("lat", ("lat",), np.array([45.5, 46.5]))
+    ds.variables["v"] = NCVariable("v", ("lat", "lon"), ones, {"units": "kg/year/cell"})
+    ds.variables["emissions"] = NCVariable(
+        "emissions", ("lat", "lon"), ones,
+        {"units": "Tonnes", "substance": "CO2", "long_name": "Energy"},
+    )
+    ds.variables["CH4"] = NCVariable("CH4", ("lat", "lon"), ones)
+    write_netcdf(str(path), ds)
+
+
+def _tno_file(path):
+    import pandas as pd
+
+    from emiproc_spark.sources.tno import write_tno_netcdf
+
+    sources = pd.DataFrame(
+        {"source_type": ["a", "p"], "lon_index": [1, 2], "lat_index": [1, 2],
+         "lon": [0.0, 8.5], "lat": [0.0, 47.3], "category": ["c1", "c2"],
+         "co2": [1.0, 2.0]}
+    )
+    write_tno_netcdf(str(path), sources, 2, 2, ["co2"])
+
+
+def _read_netcdf(spark, d):
+    from emiproc_spark.sources.netcdf import from_netcdf_rasters
+
+    return from_netcdf_rasters(spark, d, {"v": ("c", "s")})
+
+
+def _read_tno(spark, d):
+    from emiproc_spark.sources.tno import scan_tno
+
+    return scan_tno(spark, d)
+
+
+def _read_edgar_v8(spark, d):
+    from emiproc_spark.sources.formats import edgar_v8
+
+    return edgar_v8(spark, d)
+
+
+def _read_gfed5(spark, d):
+    from emiproc_spark.sources.gfed import gfed5_emissions
+
+    return gfed5_emissions(spark, d, substances=["CH4"])
+
+
+def _read_swiss(spark, d):
+    from emiproc_spark.sources.swiss import scan_swiss_rasters
+
+    return scan_swiss_rasters(spark, d)
+
+
+# source → (writer of one good file, file suffix, reader of a directory)
+_SCANNED_SOURCES = {
+    "netcdf": (_raster_file, "nc", _read_netcdf),
+    "tno": (_tno_file, "nc", _read_tno),
+    "formats": (_raster_file, "nc", _read_edgar_v8),
+    "gfed5": (_raster_file, "nc", _read_gfed5),
+    "swiss": (lambda p: p.write_text(ASC), "asc", _read_swiss),
+}
+
+
+@pytest.mark.parametrize("source", [*_SCANNED_SOURCES, "gral"])
+def test_scan_names_truncated_file(spark, tmp_path, source):
+    """Every file-format source reads through one scan, which names the
+    file whose decode failed: a truncated file among good ones."""
+    if source == "gral":
+        point = geom.wkb_point(2683000.0, 1250000.0)
+        shaped = spark.createDataFrame(
+            [("traffic", point, "NOx", 100.0 * (i + 1)) for i in range(4)]
+            + [("traffic", geom.wkb_linestring([(0.0, 0.0), (30.0, 40.0)]), "NOx", 6.0)],
+            "category string, geometry binary, substance string, value_kg_y double",
+        )
+        write_gral_emissions(str(tmp_path), shaped)
+        bad = tmp_path / "point.dat"
+        read = lambda spark, d: gral_inventory(spark, d)  # noqa: E731
+    else:
+        write, suffix, read = _SCANNED_SOURCES[source]
+        for name in ("good1", "bad", "good2"):
+            write(tmp_path / f"{name}.{suffix}")
+        bad = tmp_path / f"bad.{suffix}"
+        assert read(spark, str(tmp_path / f"good1.{suffix}")).count() > 0
+    data = bad.read_bytes()
+    bad.write_bytes(data[: len(data) * 3 // 4])
+    with pytest.raises(Exception, match=bad.name):
+        read(spark, str(tmp_path)).collect()
+
+
 def test_gral_scan_names_corrupt_dat(spark, tmp_path):
     import json
 
