@@ -11,26 +11,33 @@ substance, the layout the fluxie plotting tool reads:
 - ``country_flux_total_prior (time, country)`` = Σ_cells flux·fraction.
 
 Spark shape: the category sum, flux conversion, and the country rollup
-(flux ⋈ country_fractions → groupBy) are all distributed; every dense
-raster — one (lat, lon) slab per (substance, time) and per country — is
-scattered and written EXECUTOR-side by an ``applyInPandas`` group task
-as a ``.npy`` slab, and the driver streams the slabs chunk-by-chunk
-into each NetCDF variable via ``LazySlab.chunk_loaders``.  Driver peak
-memory is ONE raster; a monthly (365-step) export never materializes
-the (time, lat, lon) cube.  ``output_dir`` must be a shared filesystem
-on a real cluster.  Only the yearly + daily("monthly") frequencies are
-implemented, matching the reference.
+(flux ⋈ country_fractions → groupBy) are all distributed; the dense
+rasters — one (lat, lon) slab per (substance, time) and per country —
+go through ``exports.netcdf.write_slabs``, and the driver streams them
+chunk-by-chunk into each NetCDF variable via
+``LazySlab.chunk_loaders``.  Driver peak memory is ONE raster; a
+monthly (365-step) export never materializes the (time, lat, lon)
+cube.  Only the yearly + daily("monthly") frequencies are implemented,
+matching the reference.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from emiproc_spark.exports.netcdf import (
+    raster_axes,
+    scratch_dir,
+    validate_lonmajor_grid,
+    write_slabs,
+)
+from emiproc_spark.exports.writers import dim_codes
+from emiproc_spark.functions.netcdf3 import LazySlab, NCDataset, NCVariable, write_netcdf
+from emiproc_spark.sources.netcdf import lonmajor_raster
 
 
 def export_fluxie(
@@ -53,15 +60,6 @@ def export_fluxie(
     scaled by the composite profile factor, units still kg m⁻² yr⁻¹.
     Requires ``tprofile_index`` + ``tprofiles``.
     """
-    import pandas as pd
-
-    from emiproc_spark.functions.netcdf3 import (
-        LazySlab,
-        NCDataset,
-        NCVariable,
-        write_netcdf,
-    )
-
     if frequency not in ("yearly", "monthly"):
         raise ValueError(f"frequency must be yearly or monthly, got {frequency!r}")
     if frequency == "monthly" and (tprofile_index is None or tprofiles is None):
@@ -74,58 +72,23 @@ def export_fluxie(
     if len(set(years)) != len(years) or not years:
         raise ValueError(f"need distinct inventory years, got {years}")
 
-    # coordinate arrays + density check in ONE aggregate job
-    row = grid.agg(
-        F.count("*").alias("n"),
-        F.collect_set("lon").alias("lons"),
-        F.collect_set("lat").alias("lats"),
-    ).collect()[0]
-    lons = np.sort(np.array(row["lons"], dtype=float))
-    lats = np.sort(np.array(row["lats"], dtype=float))
+    lons, lats = raster_axes(grid)
     nlon, nlat = lons.size, lats.size
-    if nlon * nlat != row["n"]:
-        raise ValueError("grid is not a dense regular raster")
-    # the scatter below assumes cell_id = lon_i*nlat + lat_i, axes
+    # the slab scatter assumes cell_id = lon_i*nlat + lat_i, axes
     # ascending — verify instead of silently mirroring other layouts
-    from emiproc_spark.exports.netcdf import validate_lonmajor_grid
-
     validate_lonmajor_grid(grid, lats, lons)
 
-    import tempfile
-
     base = os.path.join(output_dir, transport_model)
-    os.makedirs(output_dir, exist_ok=True)
-    # per-call scratch dir: concurrent exports into the same output_dir
-    # must not share (or delete) each other's slabs
-    slab_dir = tempfile.mkdtemp(prefix=".fluxie_slabs_", dir=output_dir)
-    try:
 
-        def _scatter(cell: np.ndarray, values: np.ndarray) -> np.ndarray:
-            if ((cell < 0) | (cell >= nlat * nlon)).any():
-                raise ValueError(
-                    f"rows reference cell_ids outside the raster [0, {nlat * nlon})"
-                )
-            arr = np.zeros((nlat, nlon))
-            # cell_id is lon-major: lat_i = cell % nlat, lon_i = cell // nlat
-            arr[cell % nlat, cell // nlat] = values
-            return arr
+    def scatter(values: str):
+        return lambda pdf: lonmajor_raster(pdf["cell_id"], pdf[values], nlat, nlon)
 
+    with scratch_dir(output_dir) as slab_dir:
         # country-fraction slabs: one executor task per country
-        def write_cf_slab(pdf: pd.DataFrame) -> pd.DataFrame:
-            c = str(pdf["country"].iloc[0])
-            arr = _scatter(pdf["cell_id"].to_numpy(), pdf["fraction"].to_numpy())
-            p = os.path.join(
-                slab_dir, "cf_" + hashlib.md5(c.encode()).hexdigest()[:16] + ".npy"
-            )
-            np.save(p, arr)
-            return pd.DataFrame({"country": [c], "path": [p]})
-
-        cf_meta = (
-            country_fractions.groupBy("country")
-            .applyInPandas(write_cf_slab, "country string, path string")
-            .collect()
+        cf_slabs = write_slabs(
+            country_fractions, ["country"], scatter("fraction"), slab_dir
         )
-        cf_path = {r["country"]: r["path"] for r in cf_meta}
+        cf_path = {c: p for (c,), (p, _) in cf_slabs.items()}
         countries = sorted(cf_path)
         c_i = {c: i for i, c in enumerate(countries)}
 
@@ -250,33 +213,18 @@ def export_fluxie(
             # substance string is dictionary-encoded before the slab
             # shuffle (per-cell repeated strings roughly double the
             # exchange bytes — see export_hourly_netcdf) and decoded
-            # from the closure table
-            from emiproc_spark.exports.writers import dim_codes
-
+            # on the driver from the returned slab keys
             sub_codes, decode = dim_codes(flux_all, ["substance"])
-            sub_codes = sub_codes.withColumnRenamed("cs_code", "s_code")
-
-            def write_flux_slab(pdf: pd.DataFrame) -> pd.DataFrame:
-                (sub,) = decode[int(pdf["s_code"].iloc[0])]
-                t_key = int(pdf["t_key"].iloc[0])
-                arr = _scatter(pdf["cell_id"].to_numpy(), pdf["flux"].to_numpy())
-                tag = hashlib.md5(sub.encode()).hexdigest()[:12]
-                p = os.path.join(slab_dir, f"fx_{tag}_{t_key}.npy")
-                np.save(p, arr)
-                return pd.DataFrame(
-                    {"substance": [sub], "t_key": [t_key], "path": [p]}
-                )
-
-            slab_meta = (
+            flux_slabs = write_slabs(
                 flux_all.join(F.broadcast(sub_codes), "substance")
-                .select("s_code", "t_key", "cell_id", "flux")
-                .groupBy("s_code", "t_key")
-                .applyInPandas(
-                    write_flux_slab, "substance string, t_key int, path string"
-                )
-                .collect()
+                .select("cs_code", "t_key", "cell_id", "flux"),
+                ["cs_code", "t_key"],
+                scatter("flux"),
+                slab_dir,
             )
-            flux_path = {(r["substance"], r["t_key"]): r["path"] for r in slab_meta}
+            flux_path = {
+                (decode[code][0], t): p for (code, t), (p, _) in flux_slabs.items()
+            }
             substances = sorted({s for s, _ in flux_path})
 
             # country rollup: distributed join + agg, tiny collect
@@ -362,6 +310,4 @@ def export_fluxie(
             write_netcdf(
                 os.path.join(sub_dir, f"{transport_model}_{sub}_{frequency}.nc"), ds
             )
-    finally:
-        shutil.rmtree(slab_dir, ignore_errors=True)
     return base

@@ -25,7 +25,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from emiproc_spark.exports.netcdf import raster_axes, scratch_dir, write_slabs
+from emiproc_spark.exports.writers import dim_codes
+from emiproc_spark.functions.netcdf3 import LazySlab, NCDataset, NCVariable, write_netcdf
 from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.sources.netcdf import SEC_PER_YR, lonmajor_raster
 
 # driver-collect guard: the ICON exports collect REGION-sized matrices
 # (regions × catsubs × cycles).  A mis-regionized input (e.g. cell-level
@@ -116,8 +120,6 @@ def make_icon_time_profiles(
     ``(<cycle>, country)``; region metadata lands in the coord
     variables exactly like the reference (icon.py:527-545).
     """
-    from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
-
     os.makedirs(out_dir, exist_ok=True)
     sf = region_scaling_factors(index, tprofiles, regions, correct_tz_shift)
     # dimension-sized: regions × catsubs × cycles; sorted so that the
@@ -207,8 +209,6 @@ def make_icon_vertical_profiles(
     share one level set (use operators.vertical.vertical_rebin to
     resample first, mirroring the reference's
     resample_vertical_profiles)."""
-    from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
-
     os.makedirs(out_dir, exist_ok=True)
     rows = _bounded_collect(vprofiles, "make_icon_vertical_profiles")
     heights = sorted({float(r["height_top"]) for r in rows})
@@ -264,8 +264,6 @@ def export_inventory_profiles(
     (the reference derives these from the tz database at a given year;
     inject them here).  Returns {file stem: path} incl. ``tz_mask``.
     """
-    from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
-
     os.makedirs(out_dir, exist_ok=True)
     shifts = tz_shifts or {}
     spark = tprofile_index.sparkSession
@@ -319,51 +317,23 @@ def export_inventory_profiles(
             vprofiles, out_dir, nc_attrs=nc_attrs
         )
 
-    # tz_mask.nc: dense (lat, lon) int raster of region indexes.  Axes
-    # come from ONE aggregate and the raster is scattered and written
-    # executor-side as a .npy slab (same pattern as export_raster) — no
-    # grid.toPandas on the driver.
-    import shutil
-    import tempfile
-
-    import pandas as pd
-
+    # tz_mask.nc: dense (lat, lon) int raster of region indexes,
+    # written executor-side as one slab — no grid.toPandas on the driver
     tzm = {t: i for i, t in enumerate(tz_rows)}
-    arow = grid.agg(
-        F.collect_set("lon").alias("lons"), F.collect_set("lat").alias("lats")
-    ).collect()[0]
-    lons = np.sort(np.array(arow["lons"], dtype=float))
-    lats = np.sort(np.array(arow["lats"], dtype=float))
-    slab_dir = tempfile.mkdtemp(prefix=".tzmask_slab_", dir=out_dir)
-    mask_path = os.path.join(slab_dir, "tz_mask.npy")
-    try:
+    lons, lats = raster_axes(grid)
 
-        def write_mask(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = np.full((lats.size, lons.size), -1, dtype=np.int32)
-            la = np.searchsorted(lats, pdf["lat"].to_numpy())
-            lo = np.searchsorted(lons, pdf["lon"].to_numpy())
-            vals = pdf["tzid"].map(lambda t: tzm.get(t, -1)).to_numpy(dtype=np.int32)
-            m[la, lo] = vals
-            np.save(mask_path, m)
-            return pd.DataFrame({"path": [mask_path]})
+    def fill_mask(pdf):
+        m = np.full((lats.size, lons.size), -1, dtype=np.int32)
+        la = np.searchsorted(lats, pdf["lat"].to_numpy())
+        lo = np.searchsorted(lons, pdf["lon"].to_numpy())
+        m[la, lo] = pdf["tzid"].map(lambda t: tzm.get(t, -1)).to_numpy(dtype=np.int32)
+        return m
 
-        (
-            grid.select("cell_id", "lon", "lat")
-            .join(cell_tz, "cell_id", "left")
-            .withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInPandas(write_mask, "path string")
-            .collect()
-        )
-        if os.path.exists(mask_path):
-            # driver peak: the one raster the file holds
-            mask = np.load(mask_path)
-        else:
-            # empty grid → zero groups, no slab written: emit the empty
-            # mask like the old driver-side path did
-            mask = np.full((lats.size, lons.size), -1, dtype=np.int32)
-    finally:
-        shutil.rmtree(slab_dir, ignore_errors=True)
+    with scratch_dir(out_dir) as slab_dir:
+        cells = grid.select("cell_id", "lon", "lat").join(cell_tz, "cell_id", "left")
+        slab = write_slabs(cells, [], fill_mask, slab_dir).get(())
+        # an empty grid has no group, hence no slab: emit the empty mask
+        mask = np.load(slab[0]) if slab else np.full((0, 0), -1, dtype=np.int32)
     ds = NCDataset()
     ds.dims = {"lat": lats.size, "lon": lons.size,
                "country_id": len(tz_rows)}
@@ -414,28 +384,14 @@ def export_oem_gridded_emissions(
     that range raise — the "remap onto the ICON grid first" check,
     reference icon.py:176-181).
 
-    Scale posture (same as ``export_raster_netcdf``): the Spark side
-    reduces to one value per (cell, category, substance), then each
-    (category, substance) raster — and the coordinate triple — is
-    scattered and written as an executor-side ``.npy`` slab; the driver
-    streams them into the file one variable at a time via ``LazySlab``,
-    so driver memory stays ONE mesh-length array even for multi-million
-    -cell meshes with dozens of variables.
+    Scale posture: the Spark side reduces to one value per (cell,
+    category, substance); ``exports.netcdf.write_slabs`` writes each
+    (category, substance) mesh vector, and the coordinate triple, as
+    an executor-side slab; the driver streams them into the file one
+    variable at a time via ``LazySlab``, so driver memory stays ONE
+    mesh-length array even for multi-million-cell meshes with dozens
+    of variables.
     """
-    import hashlib
-    import shutil
-    import tempfile
-
-    import pandas as pd
-
-    from emiproc_spark.functions.netcdf3 import (
-        LazySlab,
-        NCDataset,
-        NCVariable,
-        write_netcdf,
-    )
-    from emiproc_spark.sources.netcdf import SEC_PER_YR
-
     row = mesh.agg(
         F.countDistinct("cell_id").alias("n"),
         F.min("cell_id").alias("lo"),
@@ -450,79 +406,57 @@ def export_oem_gridded_emissions(
             f"(got [{row['lo']}, {row['hi']}] over {n_cells} distinct ids)"
         )
 
-    out_parent = os.path.dirname(os.path.abspath(path)) or "."
-    os.makedirs(out_parent, exist_ok=True)
-    slab_dir = tempfile.mkdtemp(prefix=".oem_slabs_", dir=out_parent)
-    try:
+    with scratch_dir(os.path.dirname(os.path.abspath(path))) as slab_dir:
         # coordinate slab: one executor task scatters (lon, lat, area)
-        # by cell_id.  antimeridian-split cells appear as several parts
-        # carrying the FULL cell area (sources/icon_grid.py decode), so
-        # first() per cell — summing would double-count wrap cells.
-        coords_path = os.path.join(slab_dir, "coords.npy")
+        # by cell_id — the mesh is a one-column raster.  antimeridian
+        # -split cells appear as several parts carrying the FULL cell
+        # area (sources/icon_grid.py decode), so first() per cell —
+        # summing would double-count wrap cells.
+        def fill_coords(pdf):
+            return np.stack(
+                [lonmajor_raster(pdf["cell_id"], pdf[c], n_cells, 1)[:, 0]
+                 for c in ("lon", "lat", "area_m2")]
+            )
 
-        def write_coords(pdf: pd.DataFrame) -> pd.DataFrame:
-            arr = np.zeros((3, n_cells))
-            idx = pdf["cell_id"].to_numpy()
-            arr[0, idx] = pdf["lon"].to_numpy()
-            arr[1, idx] = pdf["lat"].to_numpy()
-            arr[2, idx] = pdf["area_m2"].to_numpy()
-            np.save(coords_path, arr)
-            return pd.DataFrame({"path": [coords_path]})
-
-        (
-            mesh.groupBy("cell_id")
-            .agg(
+        coord_slabs = write_slabs(
+            mesh.groupBy("cell_id").agg(
                 F.first("lon").alias("lon"),
                 F.first("lat").alias("lat"),
                 F.first("area_m2").alias("area_m2"),
-            )
-            .withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInPandas(write_coords, "path string")
-            .collect()
+            ),
+            [],
+            fill_coords,
+            slab_dir,
         )
 
-        # per-(category, substance) raster slabs, one executor task
-        # each; the strings are dictionary-encoded before the
-        # shuffle (per-cell repeated strings roughly double the
-        # exchange bytes — see export_hourly_netcdf) and decoded from
-        # the closure table
-        from emiproc_spark.exports.writers import dim_codes
-
+        # per-(category, substance) mesh slabs, one executor task each;
+        # the strings are dictionary-encoded before the shuffle
+        # (per-cell repeated strings roughly double the exchange bytes
+        # — see export_hourly_netcdf) and decoded on the driver
         codes, decode = dim_codes(emissions, ["category", "substance"])
 
-        def write_slab(pdf: pd.DataFrame) -> pd.DataFrame:
-            cat, sub = decode[int(pdf["cs_code"].iloc[0])]
-            cell = pdf["cell_id"].to_numpy()
-            bad = (cell < 0) | (cell >= n_cells)
-            if bad.any():
+        def fill_slab(pdf):
+            try:
+                return lonmajor_raster(pdf["cell_id"], pdf["value_kg_y"], n_cells, 1)[:, 0]
+            except ValueError as e:
+                cat, sub = decode[int(pdf["cs_code"].iloc[0])]
                 raise ValueError(
-                    f"emissions for ({cat}, {sub}) reference cell ids "
-                    f"outside the mesh range [0, {n_cells}) "
-                    f"({np.unique(cell[bad])[:5].tolist()}…); remap onto "
-                    "the ICON grid first"
-                )
-            raster = np.zeros(n_cells)
-            raster[cell] = pdf["value_kg_y"].to_numpy()
-            tag = hashlib.md5(f"{cat}\x00{sub}".encode()).hexdigest()[:16]
-            p = os.path.join(slab_dir, f"oem_{tag}.npy")
-            np.save(p, raster)
-            return pd.DataFrame(
-                {"category": [cat], "substance": [sub], "path": [p]}
-            )
+                    f"emissions for ({cat}, {sub}) reference cell ids outside "
+                    f"the mesh range [0, {n_cells}); remap onto the ICON grid "
+                    "first"
+                ) from e
 
-        slab_meta = (
+        slabs = write_slabs(
             emissions.join(F.broadcast(codes), ["category", "substance"])
             .groupBy("cell_id", "cs_code")
-            .agg(F.sum("value_kg_y").alias("value_kg_y"))
-            .groupBy("cs_code")
-            .applyInPandas(
-                write_slab, "category string, substance string, path string"
-            )
-            .collect()
+            .agg(F.sum("value_kg_y").alias("value_kg_y")),
+            ["cs_code"],
+            fill_slab,
+            slab_dir,
         )
-        slab_of = {(r["category"], r["substance"]): r["path"] for r in slab_meta}
+        slab_of = {decode[code]: p for (code,), (p, _) in slabs.items()}
 
+        ((coords_path, _),) = coord_slabs.values()
         coords = np.load(coords_path)  # driver peak: one (3, n) array
         area = coords[2]
 
@@ -563,6 +497,4 @@ def export_oem_gridded_emissions(
                 attrs,
             )
         write_netcdf(path, ds)
-    finally:
-        shutil.rmtree(slab_dir, ignore_errors=True)
     return path

@@ -18,29 +18,36 @@ Semantics mirrored from the reference:
 
 Scale posture: the heavy work — reducing fact-scale emissions to one
 value per (cell, category, substance) — happens in Spark with map-side
-partial aggregation, and each dense (lat, lon) slab is assembled
-EXECUTOR-side by an ``applyInPandas`` group task that writes a ``.npy``
-slab file (same pattern as the hourly writer below).  The driver
-collects only per-slab metadata (one row per (category, substance)) and
-streams the slabs one at a time into the final NetCDF through
-``LazySlab`` — peak driver memory is one raster (``group_categories``
-stacks ncat rasters for its one variable), never the full
-cell × (category, substance) matrix.  ``path``'s directory must be a
-shared filesystem on a real cluster, the same contract the hourly
-writer states.
+partial aggregation.  This module also holds the slab lifecycle every
+raster exporter (raster, hourly, fluxie, ICON) shares:
+:func:`raster_axes` (one aggregate for the axes), the lon-major layout
+check, :func:`scratch_dir` and :func:`write_slabs`, which writes each
+dense slab EXECUTOR-side as a ``.npy`` file (cells scattered by
+``sources.netcdf.lonmajor_raster``) and returns only per-slab metadata.
+The driver streams the slabs one at a time into the final NetCDF
+through ``LazySlab`` — peak driver memory is one raster
+(``group_categories`` stacks ncat rasters for its one variable), never
+the full cell × (category, substance) matrix.  The output's directory
+must be a shared filesystem on a real cluster.
 """
 
 from __future__ import annotations
 
 import datetime
+import hashlib
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
-from emiproc_spark.sources.netcdf import SEC_PER_YR
+from emiproc_spark.exports.writers import dim_codes, encode_dims
+from emiproc_spark.functions.netcdf3 import LazySlab, NCDataset, NCVariable, write_netcdf
+from emiproc_spark.sources.netcdf import SEC_PER_YR, lonmajor_raster
 
 KG_PER_YEAR = "kg/year/cell"
 KG_PER_M2_PER_S = "kg/m2/s"
@@ -122,88 +129,125 @@ def _coord_vars(lon_c: np.ndarray, lat_c: np.ndarray, lon_name: str, lat_name: s
     ]
 
 
-def validate_lonmajor_grid(grid: DataFrame, lats, lons) -> None:
-    """Distributed check that ``cell_id == lon_i * nlat + lat_i`` with
-    ascending sorted axes — the layout the executor-side slab scatter
-    assumes.  A grid whose ids follow another convention (e.g. built
-    north-to-south) would otherwise silently mirror every raster
-    against its coordinate variables.  One map-only scan of the
-    dimension-sized grid (searchsorted against the broadcast axes, no
-    join, no shuffle); raises with an actionable message on the first
-    mismatch."""
-    import pandas as pd
+def raster_axes(grid: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted ``(lons, lats)`` axes of a dense regular raster grid from
+    ONE aggregate job (the axes are dimension-sized; the grid never
+    reaches the driver).  Raises when ``nlon·nlat`` is not the row
+    count."""
+    row = grid.agg(
+        F.count("*").alias("n"),
+        F.collect_set("lon").alias("lons"),
+        F.collect_set("lat").alias("lats"),
+    ).collect()[0]
+    lons = np.sort(np.array(row["lons"], dtype=float))
+    lats = np.sort(np.array(row["lats"], dtype=float))
+    if lons.size * lats.size != row["n"]:
+        raise ValueError("grid is not a dense regular raster")
+    return lons, lats
 
+
+def _lonmajor_error(pdf, lat_c: np.ndarray, lon_c: np.ndarray) -> str | None:
+    """The error for the first grid row whose ``cell_id`` is not
+    ``lon_i * nlat + lat_i`` on the sorted axes, or None.  A grid with
+    another numbering (e.g. north-to-south) would otherwise silently
+    mirror every raster against its coordinate variables."""
+    lat_i = np.searchsorted(lat_c, pdf["lat"].to_numpy())
+    lon_i = np.searchsorted(lon_c, pdf["lon"].to_numpy())
+    cell = pdf["cell_id"].to_numpy()
+    expect = lon_i.astype(np.int64) * lat_c.size + lat_i
+    bad = np.flatnonzero(cell != expect)
+    if not bad.size:
+        return None
+    k = bad[0]
+    return (
+        f"grid is not lon-major ascending: cell_id {cell[k]} sits at "
+        f"(lat {pdf['lat'].iloc[k]}, lon {pdf['lon'].iloc[k]}) = index "
+        f"{expect[k]} — renumber the grid (cell_id = lon_i*nlat + lat_i, "
+        "axes ascending) before exporting"
+    )
+
+
+def validate_lonmajor_grid(grid: DataFrame, lats, lons) -> None:
+    """Distributed lon-major layout check for exporters that write no
+    area slab: one map-only scan of the dimension-sized grid
+    (searchsorted against the closure-carried axes, no join, no
+    shuffle); raises on the first mismatch."""
     lat_c = np.sort(np.asarray(lats, dtype=float))
     lon_c = np.sort(np.asarray(lons, dtype=float))
-    nlat = lat_c.size
 
     def check(batches):
         for pdf in batches:
-            lat_i = np.searchsorted(lat_c, pdf["lat"].to_numpy())
-            lon_i = np.searchsorted(lon_c, pdf["lon"].to_numpy())
-            expect = lon_i.astype(np.int64) * nlat + lat_i
-            bad = pdf["cell_id"].to_numpy() != expect
-            if bad.any():
-                out = pdf.loc[bad, ["cell_id", "lat", "lon"]].head(1).copy()
-                out["expect"] = expect[bad][:1]
-                yield out
+            msg = _lonmajor_error(pdf, lat_c, lon_c)
+            if msg is not None:
+                yield pd.DataFrame({"msg": [msg]})
 
     hit = (
         grid.select("cell_id", "lat", "lon")
-        .mapInPandas(check, "cell_id long, lat double, lon double, expect long")
+        .mapInPandas(check, "msg string")
         .limit(1)
         .collect()
     )
     if hit:
-        r = hit[0]
-        raise ValueError(
-            f"grid is not lon-major ascending: cell_id {r['cell_id']} sits at "
-            f"(lat {r['lat']}, lon {r['lon']}) = index {r['expect']}"
-            " — renumber the grid (cell_id = lon_i*nlat + lat_i, axes ascending)"
-            " before exporting"
-        )
+        raise ValueError(hit[0]["msg"])
 
 
-def write_area_slab(grid: DataFrame, lats, lons, dest_path: str) -> None:
-    """Scatter the grid's ``area_m2`` into a dense (nlat, nlon) ``.npy``
-    slab in ONE executor task (bounded by one raster, so the driver
-    never collects the cell table).  The same pass VALIDATES the
-    lon-major ascending layout the slab scatter assumes — it sees every
-    grid row, so a grid numbered differently (e.g. north-to-south)
-    fails loudly instead of silently mirroring every raster.  Shared by
-    the raster and hourly exporters."""
-    import pandas as pd
+@contextmanager
+def scratch_dir(parent: str):
+    """A fresh slab directory inside ``parent`` (the output's directory,
+    which must be a shared filesystem on a real cluster), removed when
+    the export ends, also on error.  Concurrent exports into the same
+    directory never share or delete each other's slabs."""
+    os.makedirs(parent, exist_ok=True)
+    path = tempfile.mkdtemp(prefix=".slabs_", dir=parent)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
-    lat_c = np.sort(np.asarray(lats, dtype=float))
-    lon_c = np.sort(np.asarray(lons, dtype=float))
-    nlat, nlon = lat_c.size, lon_c.size
 
-    def write_area(pdf: pd.DataFrame) -> pd.DataFrame:
-        lat_i = np.searchsorted(lat_c, pdf["lat"].to_numpy())
-        lon_i = np.searchsorted(lon_c, pdf["lon"].to_numpy())
-        cell = pdf["cell_id"].to_numpy()
-        expect = lon_i.astype(np.int64) * nlat + lat_i
-        bad = cell != expect
-        if bad.any():
-            k = int(np.argmax(bad))
-            raise ValueError(
-                f"grid is not lon-major ascending: cell_id {cell[k]} sits at "
-                f"(lat {pdf['lat'].iloc[k]}, lon {pdf['lon'].iloc[k]}) = index "
-                f"{expect[k]} — renumber the grid (cell_id = lon_i*nlat + "
-                "lat_i, axes ascending) before exporting"
-            )
-        arr = np.zeros((nlat, nlon))
-        arr[lat_i, lon_i] = pdf["area_m2"].to_numpy()
-        np.save(dest_path, arr)
-        return pd.DataFrame({"path": [dest_path]})
+def write_slabs(
+    df: DataFrame, keys: list[str], fill, slab_dir: str
+) -> dict[tuple, tuple[str, float]]:
+    """Write one ``.npy`` slab per ``keys`` group EXECUTOR-side: a single
+    ``groupBy(keys).applyInPandas`` job saves ``fill(group pdf)`` under
+    ``slab_dir`` (no keys: one group over all rows; an empty ``df``
+    writes nothing).  Only ``{key values: (path, slab sum)}`` reaches
+    the driver, so driver memory is bounded by the group count, never
+    by the cells; the driver streams slabs back through ``LazySlab``."""
 
-    (
-        grid.select("cell_id", "lon", "lat", "area_m2")
-        .withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(write_area, "path string")
-        .collect()
+    def write(pdf: pd.DataFrame) -> pd.DataFrame:
+        key = [pdf[k].iloc[0] for k in keys]
+        tag = "\x00".join(map(str, keys + key)).encode()
+        path = os.path.join(slab_dir, hashlib.md5(tag).hexdigest()[:16] + ".npy")
+        arr = fill(pdf)
+        np.save(path, arr)
+        cols = {k: [v] for k, v in zip(keys, key)}
+        return pd.DataFrame({**cols, "path": [path], "total": [float(arr.sum())]})
+
+    schema = ", ".join(
+        [f"{k} {df.schema[k].dataType.simpleString()}" for k in keys]
+        + ["path string", "total double"]
     )
+    rows = df.groupBy(*keys).applyInPandas(write, schema).collect()
+    return {tuple(r[k] for k in keys): (r["path"], r["total"]) for r in rows}
+
+
+def write_area_slab(grid: DataFrame, lats, lons, slab_dir: str) -> str:
+    """Write the grid's ``area_m2`` as one (nlat, nlon) slab under
+    ``slab_dir`` and return its path; the same pass checks the
+    lon-major layout, since it sees every grid row.  ``lats``/``lons``
+    are the sorted :func:`raster_axes`.  Shared by the raster and
+    hourly exporters."""
+
+    def fill(pdf):
+        msg = _lonmajor_error(pdf, lats, lons)
+        if msg is not None:
+            raise ValueError(msg)
+        return lonmajor_raster(pdf["cell_id"], pdf["area_m2"], lats.size, lons.size)
+
+    cols = grid.select("cell_id", "lon", "lat", "area_m2")
+    ((path, _),) = write_slabs(cols, [], fill, slab_dir).values()
+    return path
 
 
 _SLAB_CACHE: dict = {}
@@ -246,80 +290,31 @@ def export_raster_netcdf(
     area_m2) lon-major regular raster (netcdf_regular_grid layout).
     Returns the written path.
     """
-    import hashlib
-    import shutil
-
-    import pandas as pd
-
-    from emiproc_spark.functions.netcdf3 import LazySlab
-
     if var_name_format is None:
         var_name_format = "{substance}" if group_categories else "{substance}_{category}"
 
-    # coordinate arrays + density check in ONE aggregate job (axes are
-    # nlon/nlat values — dimension-sized)
-    row = grid.agg(
-        F.count("*").alias("n"),
-        F.collect_set("lon").alias("lons"),
-        F.collect_set("lat").alias("lats"),
-    ).collect()[0]
-    lon_c = np.sort(np.array(row["lons"], dtype=float))
-    lat_c = np.sort(np.array(row["lats"], dtype=float))
+    lon_c, lat_c = raster_axes(grid)
     nlon, nlat = lon_c.size, lat_c.size
-    if nlon * nlat != row["n"]:
-        raise ValueError("grid is not a dense regular raster")
-    # the lon-major layout check rides the area-slab task below (it sees
-    # every grid row), so no separate validation scan is needed
 
     out = path if path.endswith(".nc") else path + ".nc"
-    slab_dir = out + ".slabs"
-    os.makedirs(slab_dir, exist_ok=True)
-    try:
-
-        def slab_path(cat: str, sub: str) -> str:
-            tag = hashlib.md5(f"{cat}\x00{sub}".encode()).hexdigest()[:16]
-            return os.path.join(slab_dir, f"{tag}.npy")
-
+    with scratch_dir(os.path.dirname(os.path.abspath(out))) as slab_dir:
         # Spark side: reduce to one value per (cell, cat, sub) with map-side
-        # partial agg, then ONE executor task per (category, substance) group
-        # scatters its rows into a dense (nlat, nlon) slab and writes it as
-        # .npy; only (cat, sub, path, total_kg) metadata reaches the driver.
-        def write_slab(pdf: pd.DataFrame) -> pd.DataFrame:
-            cat = str(pdf["category"].iloc[0])
-            sub = str(pdf["substance"].iloc[0])
-            cell = pdf["cell_id"].to_numpy()
-            if ((cell < 0) | (cell >= nlat * nlon)).any():
-                raise ValueError(
-                    f"emission rows reference cell_ids outside the raster "
-                    f"[0, {nlat * nlon}): {cell[(cell < 0) | (cell >= nlat * nlon)][:5]}"
-                )
-            arr = np.zeros((nlat, nlon))
-            # cell_id is lon-major: lat_i = cell % nlat, lon_i = cell // nlat
-            arr[cell % nlat, cell // nlat] = pdf["value_kg_y"].to_numpy()
-            p = slab_path(cat, sub)
-            np.save(p, arr)
-            return pd.DataFrame(
-                {"category": [cat], "substance": [sub], "path": [p],
-                 "total_kg": [float(arr.sum())]}
-            )
-
-        meta = (
+        # partial agg, then ONE executor task per (category, substance)
+        # group writes its dense (nlat, nlon) slab
+        slabs = write_slabs(
             emissions.groupBy("cell_id", "category", "substance")
-            .agg(F.sum("value_kg_y").alias("value_kg_y"))
-            .groupBy("category", "substance")
-            .applyInPandas(
-                write_slab,
-                "category string, substance string, path string, total_kg double",
-            )
-            .collect()
+            .agg(F.sum("value_kg_y").alias("value_kg_y")),
+            ["category", "substance"],
+            lambda pdf: lonmajor_raster(
+                pdf["cell_id"], pdf["value_kg_y"], nlat, nlon
+            ),
+            slab_dir,
         )
-        slab_of = {(r["category"], r["substance"]): r["path"] for r in meta}
-        total_of = {(r["category"], r["substance"]): r["total_kg"] for r in meta}
+        slab_of = {k: p for k, (p, _) in slabs.items()}
+        total_of = {k: total for k, (_, total) in slabs.items()}
 
         # area slab + lon-major validation in one executor pass
-        area_path = os.path.join(slab_dir, "cell_area.npy")
-        write_area_slab(grid, lat_c, lon_c, area_path)
-        area_grid = np.load(area_path)
+        area_grid = np.load(write_area_slab(grid, lat_c, lon_c, slab_dir))
 
         categories = sorted({c for c, _ in slab_of})
         substances = sorted({s for _, s in slab_of})
@@ -527,8 +522,6 @@ def export_raster_netcdf(
             write_netcdf4(out, ds)
         else:
             write_netcdf(out, ds)
-    finally:
-        shutil.rmtree(slab_dir, ignore_errors=True)
     return out
 
 
@@ -552,14 +545,13 @@ def export_hourly_netcdf(
     ``hourly``: (cell_id, category, substance, hour_index, value_kg_h)
     from ``operators.temporal.temporally_scaled``.
 
-    Scale posture: the hourly expansion is NEVER materialized on the
-    driver (and neither is the grid — same pattern as
-    ``export_raster_netcdf``): the axes come from ONE aggregate, the
-    ``cell_area`` raster is scattered and written executor-side as a
-    ``.npy`` slab (the same pass validates the lon-major ascending
-    ``cell_id = lon_i·nlat + lat_i`` layout), and each hour's dense
-    raster is assembled and written executor-side
-    (``groupBy(hour_index).applyInPandas``).  The only driver-side data
+    Scale posture: neither the hourly expansion nor the grid reaches
+    the driver.  The axes come from :func:`raster_axes`, ``cell_area``
+    from :func:`write_area_slab` (which also checks the lon-major
+    layout), and each hour's file is assembled and written
+    executor-side (``groupBy(hour_index).applyInPandas``) from
+    ``lonmajor_raster`` scatters, so rows sharing a cell sum, as in
+    every other exporter.  The only driver-side data
     are the two axis arrays, the dimension-sized (category, substance)
     code table, and the returned path list (one row per hour).
     Per-hour groups are already TASK-AMORTIZED: ``applyInPandas``
@@ -582,43 +574,22 @@ def export_hourly_netcdf(
     ~11% on the cold year × 100k-cell smoke, whose remaining wall is
     the ~14 GB of NetCDF writeback itself.
     """
-    import datetime
-    import shutil
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
     t0 = datetime.datetime.strptime(start, "%Y-%m-%d %H:%M:%S")
-    # axes + density check in ONE aggregate job — no grid.toPandas
-    row = grid.agg(
-        F.count("*").alias("n"),
-        F.collect_set("lon").alias("lons"),
-        F.collect_set("lat").alias("lats"),
-    ).collect()[0]
-    lons = np.sort(np.array(row["lons"], dtype=float))
-    lats = np.sort(np.array(row["lats"], dtype=float))
+    lons, lats = raster_axes(grid)
     nlon, nlat = lons.size, lats.size
-    if nlon * nlat != row["n"]:
-        raise ValueError("grid is not a dense regular raster")
     if (nx, ny) != (nlon, nlat):
         raise ValueError(
             f"grid axes are {nlon}×{nlat} (lon×lat) but nx={nx}, ny={ny}"
         )
 
-    slab_dir = tempfile.mkdtemp(prefix=".hourly_slabs_", dir=out_dir)
-    area_path = os.path.join(slab_dir, "cell_area.npy")
-    try:
+    with scratch_dir(out_dir) as slab_dir:
         # area slab + lon-major validation in one executor pass
-        write_area_slab(grid, lats, lons, area_path)
+        area_path = write_area_slab(grid, lats, lons, slab_dir)
 
         # dictionary-encode (category, substance) before the hour
         # shuffle (writers.dim_codes carries the sorted-order contract);
         # cs_pairs lets pipelines pass the pre-fan-out dimension pairs
         # so the code table costs no pass over the expansion lineage
-        from emiproc_spark.exports.writers import dim_codes, encode_dims
-
         codes, decode = dim_codes(
             hourly, ["category", "substance"], pairs=cs_pairs
         )
@@ -630,12 +601,6 @@ def export_hourly_netcdf(
         ).select("cell_id", "cs_code", "hour_index", "value_kg_h")
 
         def write_hour(pdf: pd.DataFrame) -> pd.DataFrame:
-            from emiproc_spark.functions.netcdf3 import (
-                NCDataset,
-                NCVariable,
-                write_netcdf,
-            )
-
             hour = int(pdf["hour_index"].iloc[0])
             dt = t0 + datetime.timedelta(hours=hour)
             ds = NCDataset()
@@ -657,18 +622,10 @@ def export_hourly_netcdf(
             )
             for code, g in pdf.groupby("cs_code"):
                 cat, sub = decode[int(code)]
-                arr = np.zeros((nlat, nlon, 1))
-                cells = g["cell_id"].to_numpy()
-                if ((cells < 0) | (cells >= nlat * nlon)).any():
-                    raise ValueError(
-                        "hourly rows reference cell_ids outside the raster "
-                        f"[0, {nlat * nlon})"
-                    )
-                # lon-major ids: lat_i = cell % nlat, lon_i = cell // nlat
-                arr[cells % nlat, cells // nlat, 0] = g["value_kg_h"].to_numpy()
+                arr = lonmajor_raster(g["cell_id"], g["value_kg_h"], nlat, nlon)
                 name = var_name_format.format(substance=sub, category=cat)
                 ds.variables[name] = NCVariable(
-                    name, ("lat", "lon", "time"), arr,
+                    name, ("lat", "lon", "time"), arr[:, :, np.newaxis],
                     {"standard_name": f"{sub}_{cat}", "long_name": f"{sub}_{cat}",
                      "units": unit, "comment": f"emissions of {sub} from {cat}"},
                 )
@@ -682,6 +639,4 @@ def export_hourly_netcdf(
             .orderBy("hour_index")
             .collect()
         )
-    finally:
-        shutil.rmtree(slab_dir, ignore_errors=True)
     return [r["path"] for r in written]

@@ -8,7 +8,9 @@ Layout pinned to the reference:
 - units mole/km²/h: kg/h ÷ (molar_mass·1e-3) ÷ (cell_area·1e-6)
   (wrf.py:170-180);
 - cell unstacking ``cell = x·ny + y`` → west_east = x, south_north = y
-  (wrf.py:183-196);
+  (wrf.py:183-196): the lon-major layout of
+  ``sources.netcdf.lonmajor_raster``, which sums rows sharing a cell and
+  rejects a cell outside the ``nx·ny`` raster;
 - a char ``Times`` variable holding ``%Y-%m-%d_%H:%M:%S``
   (wrf.py:230-233); file names ``wrfchemi_d01_<stamp>``.
 
@@ -27,7 +29,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from emiproc_spark.exports.writers import dim_codes, encode_dims
+from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
 from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.sources.netcdf import lonmajor_raster
 
 # reference emiproc/utils/constants.py MOLAR_MASSES_
 MOLAR_MASSES = {
@@ -117,15 +122,11 @@ def export_wrf_hourly_emissions(
     # dictionary-encoded before the hour shuffle — repeated per-row
     # strings roughly double the exchange bytes (network shuffle on a
     # real cluster; see export_hourly_netcdf).
-    from emiproc_spark.exports.writers import dim_codes, encode_dims
-
     codes, decode = dim_codes(
         hourly_flux, ["category", "substance"], pairs=cs_pairs
     )
 
     def write_hour(pdf: pd.DataFrame) -> pd.DataFrame:
-        from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
-
         hour = int(pdf["hour_index"].iloc[0])
         stamp = (t0 + datetime.timedelta(hours=hour)).strftime("%Y-%m-%d_%H:%M:%S")
         ds = NCDataset()
@@ -139,9 +140,7 @@ def export_wrf_hourly_emissions(
         ds.variables["Times"] = NCVariable("Times", ("Time", "DateStrLen"), times)
         for code, g in pdf.groupby("cs_code"):
             cat, sub = decode[int(code)]
-            arr = np.zeros((ny, nx))
-            cell = g["cell_id"].to_numpy()
-            arr[cell % ny, cell // ny] = g["value_mole_km2_h"].to_numpy()
+            arr = lonmajor_raster(g["cell_id"], g["value_mole_km2_h"], ny, nx)
             name = variable_name.format(substance=sub, category=cat)
             ds.variables[name] = NCVariable(
                 name,

@@ -4,9 +4,9 @@ Reference exports (SURVEY.md §2.2) write NetCDF/GRAL/GPKG files.  The
 engine's native sink is partitioned Parquet — distributed, atomic,
 column-pruned — with the reference's *semantic* steps (unit conversion,
 (cat,sub) pivot, totals rollup, timezone regionization) as explicit
-transformations.  NetCDF containers are written via the pure-numpy
-NetCDF-3 codec (exports/netcdf.py) — the dense-raster assembly is the
-single-node final step, exactly like the reference's writers.
+transformations.  NetCDF rasters are assembled executor-side by the
+shared slab writer in exports/netcdf.py and written with the pure-numpy
+NetCDF codecs.
 """
 
 from __future__ import annotations
@@ -209,11 +209,3 @@ def export_text_formatted(
         "overwrite"
     ).text(path)
 
-
-def export_netcdf(emissions: DataFrame, grid: DataFrame, path: str, **kwargs) -> str:
-    """NetCDF raster export — real implementation in
-    :mod:`emiproc_spark.exports.netcdf` on the pure-numpy NetCDF-3
-    codec (no xarray needed)."""
-    from emiproc_spark.exports.netcdf import export_raster_netcdf
-
-    return export_raster_netcdf(emissions, grid, path, **kwargs)

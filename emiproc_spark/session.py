@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "emiproc_spark",
@@ -25,6 +27,11 @@ def get_spark(
 
     On a real cluster, ``master``/executor sizing come from spark-submit;
     everything set here is orthogonal to deployment mode.
+
+    The Python workers get the directory holding ``emiproc_spark`` on
+    their ``PYTHONPATH`` (PySpark merges it with the worker's own), so a
+    script that puts the package on ``sys.path`` at run time can use
+    Python UDFs from any working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -51,6 +58,7 @@ def get_spark(
         # Costs only the file:line origin decoration on error messages.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

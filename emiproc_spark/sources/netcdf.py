@@ -271,6 +271,26 @@ def _lonmajor_frame(
     )
 
 
+def lonmajor_raster(cell, values, nlat: int, nlon: int) -> np.ndarray:
+    """Long rows → dense (nlat, nlon) raster: the inverse of
+    :func:`_lonmajor_frame` for one time step, and the one place the
+    exporters scatter lon-major cell ids.  Rows sharing a cell SUM, so
+    the result does not depend on row order.  A cell id outside
+    ``[0, nlat·nlon)`` raises instead of wrapping into another column.
+    An unstructured mesh is a one-column raster (``nlon=1``)."""
+    cell = np.asarray(cell, dtype=np.int64)
+    n = nlat * nlon
+    bad = (cell < 0) | (cell >= n)
+    if bad.any():
+        raise ValueError(
+            f"cell_ids {np.unique(cell[bad])[:5].tolist()} lie outside the "
+            f"raster [0, {n})"
+        )
+    sums = np.bincount(cell, np.asarray(values, dtype=np.float64), minlength=n)
+    # C order, so slab sums reduce in the same order as a lat-major array
+    return np.ascontiguousarray(sums.reshape(nlon, nlat).T)
+
+
 def scan_rasters(
     spark: SparkSession,
     path: str,

@@ -79,18 +79,15 @@ def parse_ascii_grid(text: str) -> tuple[dict, np.ndarray]:
     return header, arr
 
 
-def scan_swiss_rasters(
-    spark: SparkSession,
-    path: str,
-    normalize_keys: bool = False,
-) -> DataFrame:
-    """Distributed ``.asc`` scan → (raster_key, cell_id, value[, total]).
+def scan_swiss_rasters(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed ``.asc`` scan → (raster_key, cell_id, value,
+    file_total).
 
     ``raster_key`` is the file stem (the category, or
     ``category_substance`` for the per-substance family).  cell ids are
     x-major south-up (reference ``.T[:, ::-1].reshape(-1)``,
-    swiss.py:285).  With ``normalize_keys`` the per-file sum is attached
-    for later normalization without a second shuffle.
+    swiss.py:285).  ``file_total``, the file's sum, is attached to every
+    row, so normalization needs no second shuffle.
     """
 
     def decode(fpath: str, content: bytes) -> Iterator[pd.DataFrame]:

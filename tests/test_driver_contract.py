@@ -201,3 +201,46 @@ def test_sources_share_one_file_scan_and_one_container_decision():
         ("netcdf.py", "read_netcdf4_bytes"),
         ("gfed.py", "default_h5_decoder"),
     }, decodes
+
+
+def test_exports_share_one_slab_writer():
+    """The raster exporters share one slab lifecycle in
+    ``exports/netcdf.py``: one ``np.save`` (``write_slabs``), one
+    ``mkdtemp`` (``scratch_dir``) and one axis aggregate
+    (``raster_axes``).  No exporter does lon-major cell arithmetic:
+    ``sources.netcdf.lonmajor_raster`` is the one cell-id scatter."""
+    import ast
+    import glob
+    import os
+
+    import emiproc_spark.exports
+
+    pkg = os.path.dirname(emiproc_spark.exports.__file__)
+    saves, mkdtemps, axes, layout = [], [], [], []
+    for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
+        module = os.path.basename(path)
+        for node in ast.walk(ast.parse(open(path).read())):
+            where = f"{module}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                owner = getattr(getattr(f, "value", None), "id", None)
+                if name == "save" and owner == "np":
+                    saves.append(where)
+                if name == "mkdtemp":
+                    mkdtemps.append(where)
+                if name == "collect_set" and any(
+                    isinstance(a, ast.Constant) and a.value == "lon" for a in node.args
+                ):
+                    axes.append(where)
+            if (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, (ast.Mod, ast.FloorDiv))
+                and isinstance(node.right, ast.Name)
+                and node.right.id in ("nlat", "ny")
+            ):
+                layout.append(where)
+    assert len(saves) == 1 and saves[0].startswith("netcdf.py:"), saves
+    assert len(mkdtemps) == 1 and mkdtemps[0].startswith("netcdf.py:"), mkdtemps
+    assert len(axes) == 1 and axes[0].startswith("netcdf.py:"), axes
+    assert not layout, f"lon-major cell arithmetic outside sources/netcdf.py: {layout}"

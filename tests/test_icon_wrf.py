@@ -258,3 +258,33 @@ def test_to_mole_flux_null_substance_named_in_error(spark):
     )
     with pytest.raises(Exception, match="unknown molar mass.*NULL"):
         to_mole_flux(hourly, grid).collect()
+
+
+@pytest.mark.parametrize("cell", [-1, 6])
+def test_wrf_rejects_cells_outside_the_raster(spark, tmp_path, cell):
+    """A cell outside the nx·ny raster raises the named error: −1 must
+    not wrap into the last west_east column, nor nx·ny fail as a bare
+    IndexError."""
+    flux = spark.createDataFrame(
+        [(cell, "traffic", "CO", 0, 1.0)],
+        "cell_id long, category string, substance string, hour_index int, "
+        "value_mole_km2_h double",
+    )
+    with pytest.raises(Exception, match=r"outside the raster \[0, 6\)"):
+        export_wrf_hourly_emissions(flux, 3, 2, "2024-01-01 00:00:00", str(tmp_path))
+
+
+def test_wrf_sums_rows_sharing_a_cell(spark, tmp_path):
+    """Two rows for one (cell, category, substance, hour) sum, as in the
+    raster export, whatever their order."""
+    flux = spark.createDataFrame(
+        [(0, "traffic", "CO", 0, 5.0), (0, "traffic", "CO", 0, 7.0)],
+        "cell_id long, category string, substance string, hour_index int, "
+        "value_mole_km2_h double",
+    )
+    (path,) = export_wrf_hourly_emissions(
+        flux, 3, 2, "2024-01-01 00:00:00", str(tmp_path)
+    )
+    arr = read_netcdf(path).variables["E_CO_traffic"].data[0, 0]
+    assert arr[0, 0] == 12.0
+    assert arr.sum() == 12.0

@@ -172,6 +172,34 @@ def test_export_hourly_netcdf(spark, tmp_path):
     assert ds1.variables["CO_traffic"].data[0, 0, 0] == 2.0
 
 
+def test_hourly_and_raster_sum_rows_sharing_a_cell(spark, tmp_path):
+    """Two rows for one (cell, category, substance, hour): the hourly
+    file holds their sum, like the raster export of the same rows,
+    instead of whichever row was scattered last."""
+    from emiproc_spark.exports.netcdf import export_hourly_netcdf
+
+    hourly = spark.createDataFrame(
+        [(0, "traffic", "CO", 0, 5.0), (0, "traffic", "CO", 0, 7.0)],
+        "cell_id long, category string, substance string, hour_index int, value_kg_h double",
+    )
+    grid = spark.createDataFrame(
+        [(x * 2 + y, float(x), float(y), 100.0) for x in range(3) for y in range(2)],
+        "cell_id long, lon double, lat double, area_m2 double",
+    )
+    (path,) = export_hourly_netcdf(
+        hourly, grid, nx=3, ny=2, start="2024-01-01 00:00:00",
+        out_dir=str(tmp_path / "hourly"),
+    )
+    hourly_co = read_netcdf(path).variables["CO_traffic"].data[:, :, 0]
+    raster = export_raster_netcdf(
+        hourly.withColumnRenamed("value_kg_h", "value_kg_y").drop("hour_index"),
+        grid, str(tmp_path / "raster.nc"),
+    )
+    raster_co = read_netcdf(raster).variables["CO_traffic"].data
+    assert hourly_co[0, 0] == raster_co[0, 0] == 12.0
+    assert np.array_equal(hourly_co, raster_co)
+
+
 def test_export_hourly_rejects_stale_cs_pairs(spark, tmp_path):
     """Caller-supplied cs_pairs missing a (category, substance) present
     in the hourly rows must fail LOUDLY — the old inner join against
