@@ -18,6 +18,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 
+from emiproc_spark.localdf import distinct_rows
+
 
 @dataclass(frozen=True)
 class Inventory:
@@ -49,18 +51,17 @@ class Inventory:
     # -- derived metadata (computed, not declared — reference
     #    emiproc/inventories/__init__.py:214-242) ------------------------
     def categories(self) -> list[str]:
-        rows = self.emissions.select("category").distinct().collect()
-        cats = {r[0] for r in rows}
-        if self.shaped is not None:
-            cats |= {r[0] for r in self.shaped.select("category").distinct().collect()}
-        return sorted(cats)
+        return self._key_set("category")
 
     def substances(self) -> list[str]:
-        rows = self.emissions.select("substance").distinct().collect()
-        subs = {r[0] for r in rows}
+        return self._key_set("substance")
+
+    def _key_set(self, col: str) -> list[str]:
+        """Sorted distinct ``col`` over emissions ∪ shaped: one distinct."""
+        keys = self.emissions.select(col)
         if self.shaped is not None:
-            subs |= {r[0] for r in self.shaped.select("substance").distinct().collect()}
-        return sorted(subs)
+            keys = keys.unionByName(self.shaped.select(col))
+        return sorted(r[0] for r in distinct_rows(keys, [col], f"Inventory {col} set"))
 
     # -- fluent operator API: each method mirrors a reference operator
     #    and returns a new lazy Inventory (history appended) -------------

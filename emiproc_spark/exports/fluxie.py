@@ -37,6 +37,7 @@ from emiproc_spark.exports.netcdf import (
 )
 from emiproc_spark.exports.writers import dim_codes
 from emiproc_spark.functions.netcdf3 import LazySlab, NCDataset, NCVariable, write_netcdf
+from emiproc_spark.localdf import collect_bounded
 from emiproc_spark.sources.netcdf import lonmajor_raster
 
 
@@ -228,13 +229,14 @@ def export_fluxie(
             substances = sorted({s for s, _ in flux_path})
 
             # country rollup: distributed join + agg, tiny collect
-            # (nsub × ntime × ncountry rows)
-            cflux_rows = (
+            # (at most nsub × ntime × ncountry rows)
+            cflux = (
                 flux_all.join(country_fractions, "cell_id")
                 .groupBy("substance", "t_key", "country")
                 .agg(F.sum(F.col("flux") * F.col("fraction")).alias("v"))
-                .collect()
             )
+            n_max = len(substances) * len(time_vals) * len(countries)
+            cflux_rows = collect_bounded(cflux, "export_fluxie rollup", limit=n_max)
         finally:
             flux_all.unpersist()
 

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import distinct_rows, local_rows_df
 
 from emiproc_spark.functions import geometry as geom
 
@@ -209,10 +209,9 @@ def write_gral_emissions(
     inventories/__init__.py:43-72)."""
     os.makedirs(path, exist_ok=True)
     if source_groups is None:
-        pairs = [
-            (r["substance"], r["category"])
-            for r in shaped.select("substance", "category").distinct().collect()
-        ]
+        pairs = distinct_rows(
+            shaped, ["substance", "category"], "write_gral_emissions source groups"
+        )
         cats = sorted({c for _, c in pairs})
         subs = sorted({s for s, _ in pairs})
         sg = make_source_groups(cats, subs)

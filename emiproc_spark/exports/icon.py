@@ -28,24 +28,14 @@ from pyspark.sql import functions as F
 from emiproc_spark.exports.netcdf import raster_axes, scratch_dir, write_slabs
 from emiproc_spark.exports.writers import dim_codes
 from emiproc_spark.functions.netcdf3 import LazySlab, NCDataset, NCVariable, write_netcdf
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, local_rows_df
 from emiproc_spark.sources.netcdf import SEC_PER_YR, lonmajor_raster
 
-# driver-collect guard: the ICON exports collect REGION-sized matrices
-# (regions × catsubs × cycles).  A mis-regionized input (e.g. cell-level
-# ids passed as region_ids) would OOM the driver — fail loudly instead.
-MAX_COLLECT_ROWS = 2_000_000
-
-
-def _bounded_collect(df: DataFrame, what: str, limit: int = MAX_COLLECT_ROWS):
-    rows = df.limit(limit + 1).collect()
-    if len(rows) > limit:
-        raise ValueError(
-            f"{what}: more than {limit} rows would be collected to the "
-            "driver — this input does not look region-sized (did you "
-            "pass cell-level ids as regions? regionize first)"
-        )
-    return rows
+# the ICON exports collect REGION-sized matrices (regions × catsubs ×
+# cycles); a pull over collect_bounded's limit names the likely cause
+NOT_REGION_SIZED = (
+    " (input not region-sized: cell-level ids passed as regions? regionize first)"
+)
 
 
 CYCLE_FILES = {
@@ -126,13 +116,15 @@ def make_icon_time_profiles(
     # temporal_profile_id coordinate (last write per region below) is
     # deterministic — collect() order after a shuffle is not
     rows = sorted(
-        _bounded_collect(sf, "make_icon_time_profiles scaling factors"),
+        collect_bounded(
+            sf, "make_icon_time_profiles scaling factors" + NOT_REGION_SIZED
+        ),
         key=lambda r: (r["ptype"], r["category"], r["substance"], r["region_id"]),
     )
     reg_rows = sorted(
-        _bounded_collect(
+        collect_bounded(
             regions.select("region_id", "region_key", "tz_shift"),
-            "make_icon_time_profiles regions",
+            "make_icon_time_profiles regions" + NOT_REGION_SIZED,
         ),
         key=lambda r: r["region_id"],
     )
@@ -210,7 +202,9 @@ def make_icon_vertical_profiles(
     resample first, mirroring the reference's
     resample_vertical_profiles)."""
     os.makedirs(out_dir, exist_ok=True)
-    rows = _bounded_collect(vprofiles, "make_icon_vertical_profiles")
+    rows = collect_bounded(
+        vprofiles, "make_icon_vertical_profiles" + NOT_REGION_SIZED
+    )
     heights = sorted({float(r["height_top"]) for r in rows})
     hpos = {h: i for i, h in enumerate(heights)}
     cats = sorted({r["category"] for r in rows})
@@ -296,9 +290,9 @@ def export_inventory_profiles(
     # the (tz, profile) pair degenerates to tz — reference's unique_tz)
     tz_rows = sorted(
         r["tzid"]
-        for r in _bounded_collect(
+        for r in collect_bounded(
             cell_tz.select("tzid").distinct(),
-            "export_inventory_profiles distinct timezones",
+            "export_inventory_profiles distinct timezones" + NOT_REGION_SIZED,
         )
     )
     regions = local_rows_df(
@@ -392,11 +386,12 @@ def export_oem_gridded_emissions(
     mesh-length array even for multi-million-cell meshes with dozens
     of variables.
     """
-    row = mesh.agg(
+    extent = mesh.agg(
         F.countDistinct("cell_id").alias("n"),
         F.min("cell_id").alias("lo"),
         F.max("cell_id").alias("hi"),
-    ).collect()[0]
+    )
+    row = collect_bounded(extent, "export_oem_gridded_emissions mesh extent")[0]
     n_cells = int(row["n"])
     if n_cells == 0:
         raise ValueError("mesh is empty")

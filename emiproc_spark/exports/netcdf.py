@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from emiproc_spark.exports.writers import dim_codes, encode_dims
 from emiproc_spark.functions.netcdf3 import LazySlab, NCDataset, NCVariable, write_netcdf
+from emiproc_spark.localdf import collect_bounded
 from emiproc_spark.sources.netcdf import SEC_PER_YR, lonmajor_raster
 
 KG_PER_YEAR = "kg/year/cell"
@@ -134,11 +135,12 @@ def raster_axes(grid: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     ONE aggregate job (the axes are dimension-sized; the grid never
     reaches the driver).  Raises when ``nlon·nlat`` is not the row
     count."""
-    row = grid.agg(
+    axes = grid.agg(
         F.count("*").alias("n"),
         F.collect_set("lon").alias("lons"),
         F.collect_set("lat").alias("lats"),
-    ).collect()[0]
+    )
+    row = collect_bounded(axes, "raster_axes")[0]
     lons = np.sort(np.array(row["lons"], dtype=float))
     lats = np.sort(np.array(row["lats"], dtype=float))
     if lons.size * lats.size != row["n"]:
@@ -181,12 +183,8 @@ def validate_lonmajor_grid(grid: DataFrame, lats, lons) -> None:
             if msg is not None:
                 yield pd.DataFrame({"msg": [msg]})
 
-    hit = (
-        grid.select("cell_id", "lat", "lon")
-        .mapInPandas(check, "msg string")
-        .limit(1)
-        .collect()
-    )
+    hits = grid.select("cell_id", "lat", "lon").mapInPandas(check, "msg string")
+    hit = collect_bounded(hits.limit(1), "validate_lonmajor_grid")
     if hit:
         raise ValueError(hit[0]["msg"])
 
@@ -228,7 +226,8 @@ def write_slabs(
         [f"{k} {df.schema[k].dataType.simpleString()}" for k in keys]
         + ["path string", "total double"]
     )
-    rows = df.groupBy(*keys).applyInPandas(write, schema).collect()
+    slabs = df.groupBy(*keys).applyInPandas(write, schema)
+    rows = collect_bounded(slabs, "write_slabs")
     return {tuple(r[k] for k in keys): (r["path"], r["total"]) for r in rows}
 
 
@@ -633,10 +632,10 @@ def export_hourly_netcdf(
             write_netcdf(path, ds)
             return pd.DataFrame({"hour_index": [hour], "path": [path]})
 
-        written = (
+        files = (
             coded.groupBy("hour_index")
             .applyInPandas(write_hour, "hour_index long, path string")
             .orderBy("hour_index")
-            .collect()
         )
+        written = collect_bounded(files, "export_hourly_netcdf")
     return [r["path"] for r in written]

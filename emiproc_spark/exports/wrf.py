@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from emiproc_spark.exports.writers import dim_codes, encode_dims
 from emiproc_spark.functions.netcdf3 import NCDataset, NCVariable, write_netcdf
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, local_rows_df
 from emiproc_spark.sources.netcdf import lonmajor_raster
 
 # reference emiproc/utils/constants.py MOLAR_MASSES_
@@ -160,6 +160,5 @@ def export_wrf_hourly_emissions(
         .groupBy("hour_index")
         .applyInPandas(write_hour, "hour_index long, path string")
         .orderBy("hour_index")
-        .collect()
     )
-    return [r["path"] for r in written]
+    return [r["path"] for r in collect_bounded(written, "export_wrf_hourly_emissions")]

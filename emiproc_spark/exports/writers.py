@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import distinct_rows, local_rows_df
 
 from emiproc_spark.sources.readers import SECONDS_PER_YEAR, to_wide
 
@@ -44,10 +44,7 @@ def dim_codes(
     but on a heavy lineage passing ``pairs`` avoids re-executing it.
     """
     if pairs is None:
-        pairs = [
-            tuple(r[c] for c in cols)
-            for r in df.select(*cols).distinct().collect()
-        ]
+        pairs = distinct_rows(df, cols, f"dim_codes {cols}")
     ordered = sorted(set(tuple(p) for p in pairs))
     decode = dict(enumerate(ordered))
     schema = ", ".join(f"{c} string" for c in cols) + ", cs_code int"

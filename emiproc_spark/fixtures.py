@@ -89,13 +89,13 @@ def store(name: str, sf_dir: str, build: Callable[[str], None]) -> str:
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ``ts`` normalized to epoch-nanoseconds BIGINT.
 
-    The testdata has shipped ``ts`` both as TIMESTAMP(NANOS) (readable
-    only as long via nanosAsLong) and as timestamp[us]; downstream
-    queries do integer nanos arithmetic, so normalize here.  Session
-    timezone is UTC (session.py), so the NTZ→instant cast matches
-    DuckDB's ``epoch_ns`` on naive timestamps.
+    The testdata has shipped ``ts`` both as TIMESTAMP(NANOS) (read as
+    epoch-ns long under the ``nanosAsLong`` conf that ``get_spark``
+    declares) and as timestamp[us]; downstream queries do integer
+    nanos arithmetic, so normalize here.  Session timezone is UTC
+    (session.py), so the NTZ→instant cast matches DuckDB's
+    ``epoch_ns`` on naive timestamps.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     from pyspark.sql.types import LongType
 

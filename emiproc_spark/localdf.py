@@ -1,20 +1,27 @@
-"""Arrow-backed local DataFrames for driver-side literal rows.
+"""The driver/JVM boundary, both directions: driver rows into small
+local DataFrames, and bounded pulls of DataFrame rows to the driver.
 
-``SparkSession.createDataFrame(list_of_tuples)`` parallelizes the rows
-into ``defaultParallelism`` pickled-RDD slices, so *every* scan or
-broadcast of the (usually tiny) relation schedules a full-width stage
-whose every task spins a Python worker to deserialize its slice — on
-``local[32]`` that is 32 Python round-trips per broadcast, and on a
-large cluster the task count grows with the cluster.  Routing the same
-rows through one pandas/Arrow batch instead keeps the relation a single
-JVM-readable partition: scans become one trivial task and broadcasts
-build without any Python worker.
+**Into Spark.** ``SparkSession.createDataFrame(list_of_tuples)``
+parallelizes the rows into ``defaultParallelism`` pickled-RDD slices,
+so *every* scan or broadcast of the (usually tiny) relation schedules a
+full-width stage whose every task spins a Python worker to deserialize
+its slice — on ``local[32]`` that is 32 Python round-trips per
+broadcast, and on a large cluster the task count grows with the
+cluster.  Routing the same rows through one pandas/Arrow batch instead
+keeps the relation a single JVM-readable partition: scans become one
+trivial task and broadcasts build without any Python worker.
 
 ``local_rows_df`` is a drop-in for the list-of-tuples call shape.  It
 only takes the Arrow path when it can prove the conversion is
 value-identical (flat tuples, atomic or array-of-atomic columns, no
 NaN/datetime/Decimal payloads, Arrow enabled on the session); anything
 else falls back to the classic ``createDataFrame`` untouched.
+
+**Out of Spark.** ``collect_bounded`` is the library's one driver pull
+(the query modules excepted): no input brings more than ``limit`` rows
+to the driver; past the limit it raises a ``ValueError`` naming the
+pull instead of exhausting driver memory.  ``distinct_rows`` is the one
+key-set pull, e.g. an inventory's (category, substance) pairs.
 """
 
 from __future__ import annotations
@@ -22,7 +29,7 @@ from __future__ import annotations
 import math
 from typing import Any, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -37,6 +44,16 @@ from pyspark.sql.types import (
     StringType,
     StructType,
 )
+
+from emiproc_spark.session import scoped_conf
+
+# default bound of a driver pull: dimension-sized results (key sets,
+# per-group slab paths, region × cycle matrices) stay far below it; a
+# cell- or row-level frame passed by mistake hits it
+MAX_COLLECT_ROWS = 2_000_000
+# partitions the first job of a root-limit take scans: above any count
+_TAKE_WIDTH = "spark.sql.limit.initialNumPartitions"
+_ALL_PARTITIONS = str(1 << 30)
 
 # types whose Arrow round-trip is value-identical to the pickle path;
 # Timestamp/Date (timezone localization) and Decimal (scale coercion)
@@ -148,3 +165,25 @@ def local_rows_df(
         columns=st.names,
     )
     return spark.createDataFrame(pdf, schema=st)
+
+
+def collect_bounded(df: DataFrame, what: str, limit: int = MAX_COLLECT_ROWS) -> list[Row]:
+    """``df.collect()`` that brings at most ``limit`` rows to the driver
+    and raises a ``ValueError`` naming ``what`` when ``df`` has more.
+
+    Runs ``df.limit(limit + 1).collect()``.  A root limit is taken
+    partition by partition in jobs of growing width (1, 4, 20, ...
+    partitions); ``spark.sql.limit.initialNumPartitions`` is raised for
+    the call so the first job scans every partition, which keeps the
+    job count and the parallelism of a plain ``collect()``."""
+    with scoped_conf(df.sparkSession, _TAKE_WIDTH, _ALL_PARTITIONS):
+        rows = df.limit(limit + 1).collect()
+    if len(rows) > limit:
+        raise ValueError(f"{what}: more than {limit} rows would be collected to the driver")
+    return rows
+
+
+def distinct_rows(df: DataFrame, cols: Sequence[str], what: str) -> list[Row]:
+    """The distinct ``cols`` rows of ``df`` (nulls kept, unordered),
+    pulled through :func:`collect_bounded`."""
+    return collect_bounded(df.select(*cols).distinct(), what)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, local_rows_df
 
 from emiproc_spark.operators.temporal import scaling_factor_at
 
@@ -59,7 +59,8 @@ def concatenate_profiles(a: DataFrame, b: DataFrame) -> tuple[DataFrame, Column]
     """Union two profile stores with id offset (reference
     concatenate_profiles, profiles/operators.py:35-55).  Returns the
     union and the offset applied to ``b`` ids (for re-keying indexes)."""
-    offset = a.agg(F.coalesce(F.max("profile_id") + 1, F.lit(0))).collect()[0][0]
+    next_id = a.agg(F.coalesce(F.max("profile_id") + 1, F.lit(0)))
+    offset = collect_bounded(next_id, "concatenate_profiles offset")[0][0]
     shifted = b.withColumn("profile_id", (F.col("profile_id") + F.lit(offset)).cast("int"))
     return a.unionByName(shifted), F.lit(offset)
 

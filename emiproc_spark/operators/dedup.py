@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from emiproc_spark.localdf import collect_bounded
 from emiproc_spark.operators.text import shingles, tokens
 from emiproc_spark.qhelpers import widen_for_fanout
 
@@ -411,13 +412,13 @@ def lsh_candidate_pairs_incremental(
         # pushed below the anti join and fires on VALID ids).  The
         # anti-join is the documented extra pass; limit(1) keeps the
         # driver transfer to one row.
-        missing = (
+        orphans = (
             new_docs.select("doc_id")
             .distinct()
             .join(signatures.select("doc_id").distinct(), "doc_id", "left_anti")
             .limit(1)
-            .collect()
         )
+        missing = collect_bounded(orphans, "lsh_candidate_pairs_incremental")
         if missing:
             raise ValueError(
                 f"lsh_candidate_pairs_incremental: new_docs id "

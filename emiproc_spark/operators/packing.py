@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from emiproc_spark.localdf import collect_bounded
 from emiproc_spark.operators.sampling import hash_fraction
 from emiproc_spark.operators.text import shingles, tokens
 
@@ -175,10 +176,9 @@ def decontaminate_bloom(
         # shiftleft() the builtin wants a literal shift count; the SQL
         # form takes a column
         .agg(F.expr("bit_or(shiftleft(1L, CAST(pmod(p, 64) AS INT)))").alias("bits"))
-        .collect()
     )
     bitset = np.zeros(m // 64, dtype=np.int64)
-    for r in words:
+    for r in collect_bounded(words, "decontaminate_bloom bitset", limit=bitset.size):
         bitset[r["w"]] = r["bits"]
     bc = spark.sparkContext.broadcast(bitset)
 

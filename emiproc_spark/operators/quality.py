@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from emiproc_spark.localdf import collect_bounded
+
 _KINDS = ("not_null", "unique", "range", "regex", "in_set")
 
 
@@ -198,6 +200,6 @@ def enforce_gates(gates: DataFrame, context: str = "pipeline") -> None:
     construction) and raise loudly when any rule fails.  The gate
     frames above and ``validate_expectations``' output all carry a
     boolean ``pass`` column; anything with one can be enforced."""
-    bad = [r.asDict() for r in gates.collect() if not r["pass"]]
+    bad = [r.asDict() for r in collect_bounded(gates, f"{context} gates") if not r["pass"]]
     if bad:
         raise ValueError(f"{context}: data-quality gates failed: {bad}")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from emiproc_spark.localdf import collect_bounded
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -340,13 +342,26 @@ def ivf_seed_centroids(
     smallest ids.  k×dim floats — driver-side by design (the centroid
     table is broadcast state, like a dimension table).  Refine with
     :func:`ivf_refine` (Lloyd steps) when cluster quality matters."""
-    rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
+    first_k = embeddings.select(id_col, vec_col).orderBy(id_col).limit(k)
+    rows = collect_bounded(first_k, "ivf_seed_centroids", limit=k)
     return [(i, [float(v) for v in r[1]]) for i, r in enumerate(rows)]
+
+
+def _moved_centroids(
+    means: DataFrame, key: str, centroids: list[tuple[int, list[float]]], what: str
+) -> list[tuple[int, list[float]]]:
+    """One Lloyd update: fold the per-(``key``, dim ``i``) means ``m``
+    into one vector per centroid and pull the k×dim matrix to the
+    driver.  A centroid that lost all members keeps its vector."""
+    vecs = means.groupBy(key).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "m"))),
+            lambda s: s["m"],
+        ).alias("cvec")
+    )
+    rows = collect_bounded(vecs, what, limit=len(centroids))
+    new = {int(r[key]): [float(v) for v in r["cvec"]] for r in rows}
+    return [(cid, new.get(cid, cvec)) for cid, cvec in centroids]
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -429,17 +444,8 @@ def ivf_refine(
             assigned.select("cell", F.posexplode(vec_col).alias("i", "v"))
             .groupBy("cell", "i")
             .agg(F.avg(F.col("v").cast("double")).alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "m"))),
-                    lambda s: s["m"],
-                ).alias("cvec")
-            )
-            .collect()
         )
-        new = {int(r["cell"]): [float(v) for v in r["cvec"]] for r in means}
-        centroids = [(cid, new.get(cid, cvec)) for cid, cvec in centroids]
+        centroids = _moved_centroids(means, "cell", centroids, "ivf_refine")
     return centroids
 
 
@@ -780,14 +786,9 @@ def kmeans_iterations(
     """
     if k < 1 or n_iter < 1:
         raise ValueError(f"k and n_iter must be >= 1, got {k}, {n_iter}")
-    seeds = (
-        embeddings.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    )
-    if len(seeds) < k:
-        raise ValueError(f"need at least k={k} vectors, got {len(seeds)}")
-    centroids = [
-        (i, [float(v) for v in r[1]]) for i, r in enumerate(seeds)
-    ]
+    centroids = ivf_seed_centroids(embeddings, k, id_col, vec_col)
+    if len(centroids) < k:
+        raise ValueError(f"need at least k={k} vectors, got {len(centroids)}")
     for _ in range(n_iter - 1):
         assigned = kmeans_assign_q(embeddings, centroids, vec_col)
         means = (
@@ -808,15 +809,6 @@ def kmeans_iterations(
                     (F.col("sq").cast("double") / F.lit(1e6)) / F.col("n")
                 ).alias("m"),
             )
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "m"))),
-                    lambda s: s["m"],
-                ).alias("cvec")
-            )
-            .collect()
         )
-        new = {int(r["cluster"]): [float(v) for v in r["cvec"]] for r in means}
-        centroids = [(cid, new.get(cid, cvec)) for cid, cvec in centroids]
+        centroids = _moved_centroids(means, "cluster", centroids, "kmeans_iterations")
     return kmeans_assign_q(embeddings, centroids, vec_col)

@@ -160,10 +160,6 @@ def days_in_year(year: Column) -> Column:
     return F.when(leap, F.lit(366)).otherwise(F.lit(365))
 
 
-def hours_in_year(year: Column) -> Column:
-    return days_in_year(year) * 24
-
-
 def hdd_factors(
     daily_temp: DataFrame,
     t_inside: float = 20.0,

@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import distinct_rows, local_rows_df
 from emiproc_spark.operators.basic import add_inventories, group_categories
 from emiproc_spark.operators.regrid import (
     remap_inventory,
@@ -361,10 +361,7 @@ def tno_to_hourly(
     # the hour explode cannot create new (category, substance) pairs —
     # hand the writer the pre-fan-out dimension pairs so its code table
     # costs one pass over the ANNUAL inventory, not the expansion
-    cs_pairs = [
-        (r["category"], r["substance"])
-        for r in e.select("category", "substance").distinct().collect()
-    ]
+    cs_pairs = distinct_rows(e, ["category", "substance"], "tno_to_hourly pairs")
     return export_hourly_netcdf(
         hourly, grid, nx, ny, start, out_dir, cs_pairs=cs_pairs
     )
@@ -484,10 +481,7 @@ def edgar_to_hourly(
         e, cell_profiles, start, hours, year_hours=year_hours
     )
     # pre-fan-out pairs: the hour explode adds none (see tno_to_hourly)
-    cs_pairs = [
-        (r["category"], r["substance"])
-        for r in e.select("category", "substance").distinct().collect()
-    ]
+    cs_pairs = distinct_rows(e, ["category", "substance"], "edgar_to_hourly pairs")
     return export_hourly_netcdf(
         hourly, grid, nx, ny, start, out_dir, cs_pairs=cs_pairs
     )

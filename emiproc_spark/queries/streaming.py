@@ -24,6 +24,7 @@ from emiproc_spark.qhelpers import QSCALE
 from emiproc_spark.queries.profiles import FUNNEL_STEPS
 from emiproc_spark.queries.similarity import SHINGLES_SQL, SQL_HASHED_CTE
 from emiproc_spark.registry import query
+from emiproc_spark.session import scoped_conf
 # called through the module, so a test can patch streams.run_available_now
 from emiproc_spark.streaming import streams
 from emiproc_spark.streaming.bootstrap import (
@@ -375,12 +376,8 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 partitions cut the wall time ~2.5× at identical results (the
     # conf binds at stream START, so restoring it after .start() is
     # safe; state-partition count is per-query, not per-session)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         pairs = streams.run_available_now(out, "r5b_stream_asof", "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         pairs.where(F.col("user_id") >= 0)
         .groupBy("event_id", "user_id")
@@ -457,12 +454,8 @@ def q_stream_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches = streams.heavy_hitters_stream(stream, "user_id", capacity=1024, n_buckets=8)
     # stateful shards are per-shuffle-partition state stores; 8 match
     # n_buckets and cut the fixture-scale setup cost (binds at START)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         res = streams.run_available_now(sketches, "r5c_stream_hh", "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     w = Window.partitionBy("bucket")
     final = res.withColumn("mx", F.max("ver").over(w)).where(
@@ -627,12 +620,8 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
     n_buckets = max(4 * spark.sparkContext.defaultParallelism, n_ev // 1000)
     out = streams.changelog_state_stream(stream, n_buckets=n_buckets)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):
         res = streams.run_available_now(out, "r6_stream_cdc", "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     w = Window.partitionBy("k")
     final = res.withColumn("mx", F.max("ver").over(w)).where(
         F.col("ver") == F.col("mx")

@@ -11,6 +11,7 @@ geometry kernel.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -59,7 +60,37 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # events.parquet has shipped ``ts`` as TIMESTAMP(NANOS), which
+        # Spark reads only as epoch-ns BIGINT; declared once for the
+        # session so no read flips it and later reads depend on order
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set one SQL conf for the ``with`` body and restore the caller's
+    value on exit, also on error; a key that was unset before is unset
+    again.  Confs the engine reads at query start (shuffle partitions
+    of a stream, ``noDataMicroBatches``) may be restored right after
+    ``start()``.
+
+    The conf is session-global: a concurrent query on another thread
+    can observe the temporary value.  A scope that finds ``value``
+    already in force sets and restores nothing, so overlapping scopes
+    of one value on several threads never leave it behind."""
+    prev = spark.conf.get(key, None)
+    if prev == value:
+        yield
+        return
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

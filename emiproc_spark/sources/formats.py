@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from emiproc_spark.localdf import distinct_rows
 from emiproc_spark.sources.netcdf import (
     DAY_PER_YR,
     SEC_PER_YR,
@@ -99,7 +100,7 @@ def edgar_v8_categories(
             yield pd.DataFrame({"category": [cat]})
 
     probe = scan_files(spark, path, "category string", decode)
-    return sorted(r["category"] for r in probe.distinct().collect())
+    return sorted(r[0] for r in distinct_rows(probe, ["category"], "edgar_v8_categories"))
 
 
 def edgar_v8(

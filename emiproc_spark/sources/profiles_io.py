@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, local_rows_df
 
 from emiproc_spark.operators.profiles import dedup_profiles, normalize_ratios
 
@@ -183,7 +183,7 @@ def profiles_to_yaml(profiles: DataFrame, path: str) -> str:
 
     key_of = {"daily": "daily", "weekly": "weekly", "monthly": "monthly"}
     data: dict[str, list[float]] = {}
-    for r in profiles.select("ptype", "ratios").collect():
+    for r in collect_bounded(profiles.select("ptype", "ratios"), "profiles_to_yaml"):
         ptype = r["ptype"]
         if ptype in key_of:
             key = key_of[ptype]

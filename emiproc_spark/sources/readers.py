@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from emiproc_spark.localdf import distinct_rows
+
 SECONDS_PER_YEAR = 365.25 * 24 * 3600
 
 
@@ -103,10 +105,8 @@ def to_wide(emissions: DataFrame, sep: str = "__") -> DataFrame:
     """Long → wide pivot for export paths (reference inv_to_xarray /
     raster export, utils/translators.py:11-49).  Pivot values are
     enumerated first so the plan stays deterministic."""
-    keys = [
-        f"{r['category']}{sep}{r['substance']}"
-        for r in emissions.select("category", "substance").distinct().collect()
-    ]
+    pairs = distinct_rows(emissions, ["category", "substance"], "to_wide columns")
+    keys = [f"{cat}{sep}{sub}" for cat, sub in pairs]
     return (
         emissions.withColumn(
             "cs", F.concat(F.col("category"), F.lit(sep), F.col("substance"))

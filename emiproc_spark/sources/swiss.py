@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, local_rows_df
 from emiproc_spark.sources.readers import scan_files
 
 # reference default_point_source_correction modes (swiss.py:14-31)
@@ -214,18 +214,17 @@ def point_source_corrections(
         F.coalesce("p_total", F.lit(0.0)).alias("p_total"),
         "corr",
     )
-    bad = j.where(
-        (F.col("corr") == IS_ONLY_POINT_SOURCE) & (F.col("total") != 0.0)
-    ).limit(1).collect()
+    only_points = (F.col("corr") == IS_ONLY_POINT_SOURCE) & (F.col("total") != 0.0)
+    bad = collect_bounded(j.where(only_points).limit(1), "point_source_corrections")
     if bad:
         r = bad[0]
         raise ValueError(
             f"Raster {r['category']}_{r['substance']} is not empty for "
             f"{IS_ONLY_POINT_SOURCE}."
         )
-    missing = point_totals.join(F.broadcast(corr), "category", "left").where(
-        F.col("corr").isNull()
-    ).limit(1).collect()
+    unmapped = point_totals.join(F.broadcast(corr), "category", "left")
+    unmapped = unmapped.where(F.col("corr").isNull()).limit(1)
+    missing = collect_bounded(unmapped, "point_source_corrections")
     if missing:
         raise ValueError(
             f"Category {missing[0]['category']} with point source emissions "

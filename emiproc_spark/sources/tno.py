@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, distinct_rows, local_rows_df
 from emiproc_spark.sources.netcdf import _char_labels, default_container_decoder
 from emiproc_spark.sources.readers import scan_files
 
@@ -135,7 +135,7 @@ def _apply_substance_mapping(
         return scan.withColumnRenamed("file_substance", "substance")
     if strict:
         present = {
-            r[0] for r in scan.select("file_substance").distinct().collect()
+            r[0] for r in distinct_rows(scan, ["file_substance"], "TNO file substances")
         }
         missing = set(substances_mapping) - present
         if missing:
@@ -302,7 +302,8 @@ def tno_gridded_profiles(
         F.sum(
             (F.col("longitude").isNull() | F.col("latitude").isNull()).cast("long")
         ).alias("n_null"),
-    ).collect()[0]
+    )
+    axes = collect_bounded(axes, "tno_gridded_profiles axes")[0]
     if axes["n_null"]:
         raise ValueError(
             f"{path}: {axes['n_null']} rows have null longitude/latitude "

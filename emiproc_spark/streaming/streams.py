@@ -49,6 +49,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from emiproc_spark.session import scoped_conf
+
 logger = logging.getLogger("emiproc_spark.streaming")
 
 #: Serializes :func:`run_available_now`'s save/set/start/restore of the
@@ -285,25 +287,18 @@ def run_available_now(
     spark = out.sparkSession
     query_name = f"{query_name}_{uuid.uuid4().hex[:8]}"
     conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    with _AVAILABLE_NOW_LOCK:
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true" if no_data_batches else "false")
-        try:
-            q = (
-                out.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            # the engine captured the conf at start(); restore
-            # immediately so later queries in this session see the
-            # caller's original setting
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+    # the engine captures the conf at start(), so the scope restores
+    # the caller's setting right after it
+    with _AVAILABLE_NOW_LOCK, scoped_conf(
+        spark, conf_key, "true" if no_data_batches else "false"
+    ):
+        q = (
+            out.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
     if timeout is None:
         q.awaitTermination()
     elif not q.awaitTermination(timeout):

@@ -244,3 +244,45 @@ def test_exports_share_one_slab_writer():
     assert len(mkdtemps) == 1 and mkdtemps[0].startswith("netcdf.py:"), mkdtemps
     assert len(axes) == 1 and axes[0].startswith("netcdf.py:"), axes
     assert not layout, f"lon-major cell arithmetic outside sources/netcdf.py: {layout}"
+
+
+def test_driver_pulls_go_through_collect_bounded():
+    """Every library pull of rows to the driver goes through
+    ``localdf.collect_bounded``, which raises past its bound instead of
+    exhausting driver memory; key sets go through ``distinct_rows``.
+    ``cluster.py``'s ``limit(bound + 1).toArrow()`` (it picks a path
+    rather than raising) and the streaming ``toLocalIterator`` writers
+    are not row pulls of this kind."""
+    import ast
+    import glob
+    import os
+
+    import emiproc_spark
+
+    pkg = os.path.dirname(emiproc_spark.__file__)
+    paths = [
+        p
+        for d in ("core", "operators", "sources", "exports", "streaming")
+        for p in glob.glob(os.path.join(pkg, d, "**", "*.py"), recursive=True)
+    ] + [os.path.join(pkg, f) for f in ("pipelines.py", "grids.py", "localdf.py")]
+    pulls = []
+
+    class Pulls(ast.NodeVisitor):
+        scope = ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr in (
+                "collect",
+                "toPandas",
+            ):
+                pulls.append((os.path.relpath(path, pkg), self.scope[-1], node.lineno))
+            self.generic_visit(node)
+
+    for path in sorted(paths):
+        Pulls().visit(ast.parse(open(path).read()))
+    assert [p[:2] for p in pulls] == [("localdf.py", "collect_bounded")], pulls

@@ -177,13 +177,14 @@ def test_export_inventory_profiles_rejects_bad_index(spark, tmp_path):
 
 
 def test_icon_export_collect_guard(spark, tmp_path):
-    """_bounded_collect fails loudly (no driver OOM) when an ICON
+    """collect_bounded fails loudly (no driver OOM) when an ICON
     export input is not region-sized — e.g. cell-level ids passed as
     regions."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from emiproc_spark.exports import icon as icon_mod
+    from emiproc_spark.exports.icon import NOT_REGION_SIZED
+    from emiproc_spark.localdf import collect_bounded
 
     big = spark.range(50).select(
         F.col("id").cast("int").alias("region_id"),
@@ -191,9 +192,9 @@ def test_icon_export_collect_guard(spark, tmp_path):
         F.lit(0).alias("tz_shift"),
     )
     with _pytest.raises(ValueError, match="region-sized"):
-        icon_mod._bounded_collect(big, "test input", limit=10)
-    # under the limit: passes through all rows
-    assert len(icon_mod._bounded_collect(big, "test input", limit=50)) == 50
+        collect_bounded(big, "test input" + NOT_REGION_SIZED, limit=10)
+    # at the limit: passes through all rows
+    assert len(collect_bounded(big, "test input" + NOT_REGION_SIZED, limit=50)) == 50
 
 
 def test_wrf_hourly_rejects_stale_cs_pairs(spark, tmp_path):

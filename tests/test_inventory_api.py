@@ -68,3 +68,39 @@ def test_weights_cache_roundtrip(spark, tmp_path):
     w2 = cached_weights(spark, str(tmp_path), spec_a, spec_b, build)
     assert w2.count() == n1 == 16
     assert len(calls) == 1  # second call served from parquet
+
+
+def _jobs(spark, tag, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_categories_and_substances_cover_gridded_and_shaped(spark, inv):
+    """Derived metadata (reference inventories/__init__.py:214-242): the
+    union of the gridded and the shaped part, sorted, read in the jobs
+    of one distinct, as many as the gridded part alone costs."""
+    from emiproc_spark.core.schemas import SHAPED
+    from emiproc_spark.functions.geometry import wkb_point
+
+    shaped = spark.createDataFrame(
+        [
+            ("stack", 1, wkb_point(0.5, 0.5), "CO2", 7.0, 50.0, None, None, None),
+            ("a", 2, wkb_point(1.5, 0.5), "SO2", 3.0, 20.0, None, None, None),
+        ],
+        schema=SHAPED,
+    )
+    both = Inventory(emissions=inv.emissions, grid=inv.grid, shaped=shaped)
+
+    cats, n_cats = _jobs(spark, "inv_categories", both.categories)
+    subs, n_subs = _jobs(spark, "inv_substances", both.substances)
+    assert cats == ["a", "b", "stack"]
+    assert subs == ["CH4", "CO2", "SO2"]
+
+    alone, n_alone = _jobs(spark, "inv_categories_gridded", inv.categories)
+    assert alone == ["a", "b"]
+    assert n_cats == n_subs == n_alone

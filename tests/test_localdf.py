@@ -1,5 +1,6 @@
 """local_rows_df must be value- and schema-identical to createDataFrame
-and only take the Arrow path when that is provable."""
+and only take the Arrow path when that is provable; collect_bounded and
+distinct_rows bring rows to the driver up to a bound and no further."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import math
 
 import pytest
 
-from emiproc_spark.localdf import local_rows_df
+from emiproc_spark.localdf import collect_bounded, distinct_rows, local_rows_df
 
 
 def _canon(df):
@@ -88,3 +89,55 @@ def test_struct_type_schema_object(spark):
 def test_bad_width_raises_like_original(spark):
     with pytest.raises(Exception):
         local_rows_df(spark, [(1,)], "a int, b int").collect()
+
+
+def test_collect_bounded_empty_frame(spark):
+    assert collect_bounded(spark.range(0), "empty input", limit=3) == []
+
+
+def test_collect_bounded_passes_exactly_limit_rows(spark):
+    rows = collect_bounded(spark.range(0, 7, 1, 3), "seven rows", limit=7)
+    assert sorted(r["id"] for r in rows) == list(range(7))
+
+
+def test_collect_bounded_raises_over_the_limit(spark):
+    with pytest.raises(ValueError, match="seven rows: more than 6 rows"):
+        collect_bounded(spark.range(0, 7, 1, 3), "seven rows", limit=6)
+
+
+def test_collect_bounded_keeps_plain_collect_job_count(spark):
+    """A root limit over a multi-partition, shuffle-free frame would be
+    taken in jobs of growing width; the bounded pull stays one job, like
+    ``collect()``, and leaves the session conf as it found it."""
+
+    def same(batches):
+        yield from batches
+
+    df = spark.range(0, 40, 1, 8).mapInPandas(same, "id long")
+    sc = spark.sparkContext
+    conf = dict(spark.conf.getAll)
+    counts = []
+    for tag, pull in (
+        ("plain", lambda: df.collect()),
+        ("bounded", lambda: collect_bounded(df, "forty rows", limit=40)),
+    ):
+        sc.setJobGroup(f"collect_bounded_{tag}", tag)
+        try:
+            assert len(pull()) == 40
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"collect_bounded_{tag}")
+        counts.append(len(jobs))
+    assert counts == [1, 1]
+    assert dict(spark.conf.getAll) == conf
+
+
+def test_distinct_rows_deduplicates(spark):
+    df = spark.createDataFrame(
+        [("a", "CO2", 1.0), ("a", "CO2", 2.0), ("b", "CO2", 3.0), (None, "NOx", 4.0)],
+        "category string, substance string, v double",
+    )
+    got = distinct_rows(df, ["category", "substance"], "pairs")
+    assert sorted(map(tuple, got), key=repr) == sorted(
+        [("a", "CO2"), ("b", "CO2"), (None, "NOx")], key=repr
+    )

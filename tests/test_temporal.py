@@ -324,3 +324,33 @@ def test_sf_dim_budget_guard(spark, tprofiles):
         many, index, tprofiles, "2024-01-01 00:00:00", 2, 8784
     )
     assert out.count() == 500 * 2
+
+
+def test_hdd_factors_hand_computed(spark):
+    """HDD_d = (T_in - T_d)·[T_d < T_min], divided by the period mean
+    (reference create_HDD_scaling_factor, profiles/hdd.py:9-90)."""
+    from emiproc_spark.operators.temporal import hdd_factors
+
+    temps = spark.createDataFrame(
+        [(0, 10.0), (1, 20.0), (2, 5.0), (3, 12.0)], "day int, temp_c double"
+    )
+    got = {r["day"]: (r["hdd"], r["factor"]) for r in hdd_factors(temps).collect()}
+    # hdd 10, 0, 15, 0 (12 °C is not below the 12 °C threshold); mean 6.25
+    assert got == {
+        0: pytest.approx((10.0, 1.6)),
+        1: pytest.approx((0.0, 0.0)),
+        2: pytest.approx((15.0, 2.4)),
+        3: pytest.approx((0.0, 0.0)),
+    }
+    assert sum(f for _, f in got.values()) / len(got) == pytest.approx(1.0)
+
+
+def test_hdd_factors_all_warm_series_is_flat(spark):
+    from emiproc_spark.operators.temporal import hdd_factors
+
+    temps = spark.createDataFrame(
+        [(d, 15.0 + d) for d in range(4)], "day int, temp_c double"
+    )
+    rows = hdd_factors(temps).collect()
+    assert len(rows) == 4
+    assert all(r["hdd"] == 0.0 and r["factor"] == 1.0 for r in rows)
