@@ -14,11 +14,27 @@ import os
 import sys
 from collections.abc import Callable
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
+from pyspark import SparkContext  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 from emiproc_spark.driver_queries import ORACLES, QUERIES  # noqa: E402
+
+
+def _with_root(pythonpath: str | None) -> str:
+    parts = pythonpath.split(os.pathsep) if pythonpath else []
+    return os.pathsep.join(parts if _ROOT in parts else [_ROOT] + parts)
+
+
+# Python workers import the package too.  A session created later
+# launches its JVM, and so the workers, with this process's PYTHONPATH;
+# a running one takes the workers' environment from its context.
+os.environ["PYTHONPATH"] = _with_root(os.environ.get("PYTHONPATH"))
+if SparkContext._active_spark_context is not None:
+    _env = SparkContext._active_spark_context.environment
+    _env["PYTHONPATH"] = _with_root(_env.get("PYTHONPATH"))
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -13,6 +13,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from emiproc_spark.driver_queries import QUERIES  # noqa: E402
+from emiproc_spark.obs import run, warm_up  # noqa: E402
 from emiproc_spark.session import get_spark  # noqa: E402
 
 
@@ -25,48 +26,12 @@ def main() -> None:
         sf_val = sf
 
     spark = get_spark(app_name="emiproc_spark_bench")
-    # Warm fixed costs that would otherwise land on whichever query runs
-    # first: JVM/codegen, parquet footer cache, and the Python UDF
-    # worker pool (first pandas UDF pays ~2-3 s of worker spin-up).
-    spark.range(1).collect()
-
-    def _warm_batches(it):
-        yield from it
-
-    spark.range(32).repartition(32).mapInPandas(
-        _warm_batches, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # Warm the OS page cache for every input table (untimed): otherwise
-    # whichever query first touches a table pays its disk-cold read and
-    # per-round timings depend on what the driver ran beforehand.  The
-    # bench measures engine work, not page-cache luck.
-    from emiproc_spark.parity import TABLES
-
-    # events.parquet is TIMESTAMP(NANOS) — readable only with this conf
-    # (the queries that use it set it themselves)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        # noop sink materializes every column (count() would let
-        # Catalyst prune the value computations away)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # operators may cache intermediates; drop them so later queries
-        # aren't taxed by accumulated executor memory / GC pressure
-        spark.catalog.clearCache()
-        return dt
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     t_all = time.perf_counter()
     for name in QUERIES:
-        timings[name] = round(run_once(name), 4)
+        timings[name] = round(run(spark, name, sf_dir), 4)
 
     # host-noise guard: a shared host occasionally lands a multi-second
     # stall on one query (observed: the same 0.6 s query at 2 s / 8 s /
@@ -75,7 +40,7 @@ def main() -> None:
     med = sorted(timings.values())[len(timings) // 2]
     for name, t in list(timings.items()):
         if t > max(3 * med, 2.0):
-            timings[name] = round(min(t, run_once(name)), 4)
+            timings[name] = round(min(t, run(spark, name, sf_dir)), 4)
 
     # geometry-kernel microbench (not a driver-contract query): 50k
     # polygon sources refined onto a 100×100 grid through the batched

@@ -92,7 +92,7 @@ query(q_totals_equal, SQL_TOTALS_EQUAL)
 # histogram reduction (validated against DuckDB's quantile_cont)
 # ======================================================================
 def q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fx.load(spark, sf_dir, "documents")
     return length_percentiles(docs).withColumn("value", qd("value"))
 
 

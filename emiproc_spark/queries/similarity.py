@@ -10,8 +10,6 @@ engines rank identically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -772,7 +770,7 @@ query(q_dedup_representative, _sql_dedup_representative())
 # winnow_fp — MOSS winnowing fingerprints (k=3-gram, w=4 windows)
 # ======================================================================
 def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fx.load(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, k=3, w=4)
 
 
@@ -899,9 +897,7 @@ query(q_lsh_capped, SQL_LSH_CAPPED)
 # the normalization code), so every rule must fire exactly.
 # ======================================================================
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
-    )
+    docs = fx.load(spark, sf_dir, "documents").select("doc_id")
     g = (F.col("doc_id") / 4).cast("long")  # page id: 4 doc variants each
     h = (g % 7).cast("string")
     page = F.concat(F.lit("/page/"), g.cast("string"))

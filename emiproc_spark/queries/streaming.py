@@ -260,7 +260,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch costs a Python/Arrow/state round-trip.  The checkpoint is
     # per-invocation, so no pin is affected; pair results are
     # shard-layout independent (the resume oracle proves it).
-    n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count() * 2
+    n_docs = fx.load(spark, sf_dir, "documents").count() * 2
     n_shards = max(
         4 * spark.sparkContext.defaultParallelism, (4 * n_docs) // 1000
     )
@@ -617,7 +617,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python/Arrow/state round-trip per bucket per micro-batch, and
     # this query runs FOUR batches (maxFilesPerTrigger=1 over 4 files);
     # checkpoints are per-invocation, so no pin is affected.
-    n_ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
+    n_ev = fx.load(spark, sf_dir, "events").count()
     n_buckets = max(4 * spark.sparkContext.defaultParallelism, n_ev // 1000)
     out = streams.changelog_state_stream(stream, n_buckets=n_buckets)
     with scoped_conf(spark, "spark.sql.shuffle.partitions", "8"):

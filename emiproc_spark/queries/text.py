@@ -431,7 +431,7 @@ query(q_shard_plan, SQL_SHARD_PLAN)
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-only overlapping chunking of the documents corpus."""
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fx.load(spark, sf_dir, "documents")
     return chunk_documents(docs, size=32, stride=24)
 
 
@@ -456,7 +456,7 @@ query(q_doc_chunks, SQL_DOC_CHUNKS)
 # unigram_logprob — corpus-self-scored fluency/quality signal
 # ======================================================================
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fx.load(spark, sf_dir, "documents")
     return unigram_logprob(docs).withColumn("mean_logprob", qd("mean_logprob"))
 
 
@@ -490,7 +490,7 @@ query(q_unigram_logprob, SQL_UNIGRAM_LOGPROB)
 # quality_filter — composed C4/Gopher-style quality gate with audit
 # ======================================================================
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fx.load(spark, sf_dir, "documents")
     return quality_filter(
         docs,
         min_tokens=30,

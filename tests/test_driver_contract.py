@@ -286,3 +286,71 @@ def test_driver_pulls_go_through_collect_bounded():
     for path in sorted(paths):
         Pulls().visit(ast.parse(open(path).read()))
     assert [p[:2] for p in pulls] == [("localdf.py", "collect_bounded")], pulls
+
+
+def test_measurement_goes_through_obs():
+    """Job groups, the status tracker, the listener bus, stream listeners
+    and the UI's address are used only in ``emiproc_spark/obs.py``, the
+    one measurement module (its own test aside)."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = {"setJobGroup", "statusTracker", "StreamingQueryListener", "listenerBus", "uiWebUrl"}
+    paths = [os.path.join(root, "bench.py")] + [
+        p
+        for d in ("emiproc_spark", "plans", "tests")
+        for p in glob.glob(os.path.join(root, d, "**", "*.py"), recursive=True)
+    ]
+    found, in_obs = [], set()
+    for path in sorted(paths):
+        rel = os.path.relpath(path, root)
+        if rel == os.path.join("tests", "test_obs.py"):
+            continue
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            else:
+                name = getattr(node, "id", None) or getattr(node, "name", None)
+            if name not in names:
+                continue
+            if rel == os.path.join("emiproc_spark", "obs.py"):
+                in_obs.add(name)
+            else:
+                found.append(f"{rel}:{node.lineno} {name}")
+    assert not found, found
+    assert in_obs == names - {"uiWebUrl"}
+
+
+@pytest.mark.parametrize("session_first", [True, False])
+def test_entry_workers_import_the_package_from_any_directory(tmp_path, sf_dir, session_first):
+    """The driver loads this file by path, from its own working directory,
+    without ``PYTHONPATH`` and under a vanilla session (no ``get_spark``
+    executor environment), created before or after the load; Python
+    workers must still import ``emiproc_spark``."""
+    import os
+    import subprocess
+    import sys
+
+    code = """
+import importlib.util, sys
+from pyspark.sql import SparkSession
+
+def load():
+    spec = importlib.util.spec_from_file_location("__spark_entry__", sys.argv[1])
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+session_first = sys.argv[3] == "True"
+entry = None if session_first else load()
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+entry = entry or load()
+print(entry.queries()["tno_ingest"](spark, sys.argv[2]).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    args = [sys.executable, "-c", code, entrymod.__file__, sf_dir, str(session_first)]
+    r = subprocess.run(args, cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert int(r.stdout.split()[-1]) > 0

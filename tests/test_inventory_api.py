@@ -5,6 +5,7 @@ checked with the mass-conservation oracle."""
 import pytest
 from pyspark.sql import functions as F
 
+from emiproc_spark import obs
 from emiproc_spark.core.inventory import Inventory
 from emiproc_spark.core.schemas import EMISSIONS
 from emiproc_spark.grids import regular_grid
@@ -71,13 +72,9 @@ def test_weights_cache_roundtrip(spark, tmp_path):
 
 
 def _jobs(spark, tag, action):
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
+    with obs.jobs(spark, tag) as js:
         out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+    return out, len(js)
 
 
 def test_categories_and_substances_cover_gridded_and_shaped(spark, inv):

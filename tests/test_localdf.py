@@ -9,6 +9,7 @@ import math
 
 import pytest
 
+from emiproc_spark import obs
 from emiproc_spark.localdf import collect_bounded, distinct_rows, local_rows_df
 
 
@@ -114,19 +115,14 @@ def test_collect_bounded_keeps_plain_collect_job_count(spark):
         yield from batches
 
     df = spark.range(0, 40, 1, 8).mapInPandas(same, "id long")
-    sc = spark.sparkContext
     conf = dict(spark.conf.getAll)
     counts = []
     for tag, pull in (
         ("plain", lambda: df.collect()),
         ("bounded", lambda: collect_bounded(df, "forty rows", limit=40)),
     ):
-        sc.setJobGroup(f"collect_bounded_{tag}", tag)
-        try:
+        with obs.jobs(spark, f"collect_bounded_{tag}") as jobs:
             assert len(pull()) == 40
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(f"collect_bounded_{tag}")
         counts.append(len(jobs))
     assert counts == [1, 1]
     assert dict(spark.conf.getAll) == conf

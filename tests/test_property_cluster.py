@@ -12,7 +12,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from emiproc_spark import obs
 from emiproc_spark.operators.cluster import _label_on_driver, connected_components
+from emiproc_spark.session import scoped_conf
 
 _THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -46,33 +48,22 @@ def test_small_and_distributed_paths_agree(spark, edges, rnd, offset):
     edges = [(rename[a], rename[b]) for a, b in edges]
     edges += [(b, a) for a, b in edges[:3]]  # reversed duplicates
 
-    conf = spark.conf
-    prev = conf.get(_THRESHOLD)
     for max_iter in range(1, 9):
         small = _components(spark, edges, max_iter)
-        conf.set(_THRESHOLD, "-1")
-        try:
+        with scoped_conf(spark, _THRESHOLD, "-1"):
             distributed = _components(spark, edges, max_iter)
-        finally:
-            conf.set(_THRESHOLD, prev)
         assert small == distributed, f"max_iter={max_iter}"
 
 
 def test_small_graph_is_one_job(spark):
     """The small path is one bounded collect: the guarded edge fetch.
     The distributed loop spends several jobs per round."""
-    sc = spark.sparkContext
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)] + [(100, 101)], "doc_a long, doc_b long"
     )
-    group = "test-cc-small-graph-jobs"
-    sc.setJobGroup(group, "connected_components small path")
-    try:
+    with obs.jobs(spark, "test-cc-small-graph-jobs") as jobs:
         comp = connected_components(pairs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(jobs) == 1
     assert {r["component"] for r in comp.collect()} == {0, 100}
 
 
@@ -81,20 +72,12 @@ def test_threshold_without_room_forces_distributed_loop(spark, threshold):
     """A broadcast threshold that leaves room for no edge (bound <= 0)
     keeps every edge off the driver: the rounds run distributed and
     still label correctly."""
-    sc = spark.sparkContext
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
-    prev = spark.conf.get(_THRESHOLD)
     group = f"test-cc-forced-distributed-{threshold}"
-    spark.conf.set(_THRESHOLD, threshold)
-    sc.setJobGroup(group, "connected_components distributed path")
-    try:
+    with scoped_conf(spark, _THRESHOLD, threshold), obs.jobs(spark, group) as jobs:
         comp = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set(_THRESHOLD, prev)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) > 2
+    assert len(jobs) > 2
 
 
 def _rounds_reference(edges, max_iter):
